@@ -52,7 +52,7 @@ import graft.pipeline.{GraftConfig, Pipeline}
   *                                   strategy (default 0.97)
   *
   * Defaults are the shipped constants, so a flagless invocation is
-  * byte-identical to the unparameterized library call.
+  * byte-identical to `Pipeline.run(pages)`.
   */
 object Run {
 
@@ -100,7 +100,7 @@ object Run {
           .select("url", "warc_ts", "html", "text", "lang")
     val t0 = System.nanoTime()
     val (out, stageResults) =
-      Pipeline.runCheckpointedStaged(spark, outRoot, pages, buckets, cfg)
+      Pipeline.runCheckpointed(spark, outRoot, pages, buckets, cfg)
     val nPages = out.count()
     // snap the wall BEFORE the lineage rollup: dedup_kept is reporting,
     // not pipeline work — counting it inside the timed region would make

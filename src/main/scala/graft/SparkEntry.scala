@@ -1,7 +1,9 @@
 package graft
 
 import graft.core._
+import graft.operators.Dedup
 import graft.pipeline.Pipeline
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -17,27 +19,55 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Table bytes on disk, memoized per (dir, table) — metadata only, no
-    * job (same lifecycle note as [[cachedCount]]; sizes are stable within
-    * a session and a failure degrades to "no repartition", never to a
-    * wrong result).
+  /** Memoized stats of one table as of its directory's modification
+    * time: bytes on disk (metadata only, no job) and row count (a
+    * parquet-metadata-only job, but q40 sizes its IVF quantizer from it
+    * on every invocation — VERDICT r4). Either field is filled on first
+    * use.
     */
-  private val tableSizes = new scala.collection.concurrent.TrieMap[String, Long]
-  private def tableBytes(s: SparkSession, dir: String, name: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    // key carries the mtime like cachedCount's, so a table rewritten
-    // mid-session re-measures instead of serving a stale size (and a
-    // stale plan decision)
-    val mtime =
-      try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getFileStatus(p).getModificationTime
-      catch { case _: java.io.IOException => -1L }
-    tableSizes.getOrElseUpdate(s"$dir/$name@$mtime", {
-      try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getContentSummary(p).getLength
-      catch { case _: java.io.IOException => Long.MaxValue }
-    })
-  }
+  private[graft] final case class TableStats(mtime: Long,
+      bytes: Option[Long] = None, rows: Option[Long] = None)
+
+  /** ONE entry per (dir, table), overwritten in place when the table's
+    * mtime changes — a table rewritten mid-session (a long-lived session
+    * regenerating test data) re-measures instead of serving a stale size
+    * or a stale plan decision, and rewrites never grow the memo. A failed
+    * measurement is never cached.
+    */
+  private[graft] val tableStats =
+    new scala.collection.concurrent.TrieMap[(String, String), TableStats]
+
+  /** The stat `field` of a table, measured by `measure` on a miss and
+    * recorded into the table's entry; None (and nothing cached) when the
+    * table's status or the measurement fails with an IOException.
+    */
+  private def tableStat(s: SparkSession, dir: String, name: String,
+      field: TableStats => Option[Long], record: (TableStats, Long) => TableStats)(
+      measure: (FileSystem, Path) => Long): Option[Long] =
+    try {
+      val p = new Path(s"$dir/$name.parquet")
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val mtime = fs.getFileStatus(p).getModificationTime
+      tableStats.get((dir, name)).filter(_.mtime == mtime).flatMap(field).orElse {
+        val v = measure(fs, p)
+        tableStats.updateWith((dir, name)) {
+          case Some(cur) if cur.mtime == mtime => Some(record(cur, v))
+          case _ => Some(record(TableStats(mtime), v))
+        }
+        Some(v)
+      }
+    } catch { case _: java.io.IOException => None }
+
+  /** Table bytes on disk; None when the size cannot be read. */
+  private def tableBytes(s: SparkSession, dir: String, name: String): Option[Long] =
+    tableStat(s, dir, name, _.bytes, (st, v) => st.copy(bytes = Some(v)))(
+      (fs, p) => fs.getContentSummary(p).getLength)
+
+  /** Table row count; an unreadable status counts without memoizing. */
+  private[graft] def cachedCount(s: SparkSession, dir: String, name: String): Long =
+    tableStat(s, dir, name, _.rows, (st, v) => st.copy(rows = Some(v)))(
+      (_, _) => t(s, dir, name).count())
+      .getOrElse(t(s, dir, name).count())
 
   /** Scale-ADAPTIVE parallel scan for compute-heavy derivations (guide
     * §2.5 "input skew — one huge unsplittable file", §6 input split
@@ -59,68 +89,30 @@ object SparkEntry {
     * right when the first downstream op is already a shuffle or the
     * per-row work is trivial (the exchange would buy nothing).
     */
-  private def tp(s: SparkSession, dir: String, name: String): DataFrame = {
+  private[graft] def tp(s: SparkSession, dir: String, name: String): DataFrame = {
     val df = t(s, dir, name)
+    scanRepartition(s, dir, name).fold(df)(df.repartition)
+  }
+
+  /** The partition count [[tp]] spreads a table's scan over, or None for
+    * the plain scan — including when the table's size is unknown, so an
+    * unreadable size never guesses a repartition.
+    */
+  private[graft] def scanRepartition(s: SparkSession, dir: String,
+      name: String): Option[Int] = {
     val n = s.sparkContext.defaultParallelism
     val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
-    val bytes = tableBytes(s, dir, name)
     // two clauses: (a) the scan is parallelism-starved (fewer natural
     // splits than cores), AND (b) the exchange is cheap in absolute
     // terms (<= 8 splits ~ 1 GB at defaults). Without (b) a mid-scale
     // table — say 20 GB on a 200-core cluster, already scanning as ~160
     // splits — would pay a full-table shuffle to gain a handful of
     // tasks; with it the shuffled bytes are bounded at any scale.
-    val naturalSplits = (bytes + maxSplit - 1) / maxSplit
-    if (naturalSplits < n.toLong && bytes <= 8L * maxSplit)
-      df.repartition(n)
-    else df
+    tableBytes(s, dir, name).collect {
+      case bytes if (bytes + maxSplit - 1) / maxSplit < n && bytes <= 8L * maxSplit => n
+    }
   }
 
-  /** Table row count memoized per (dir, table, mtime): the count job is
-    * parquet-metadata-only, but repeated invocations (q40 sizes its IVF
-    * quantizer from it) shouldn't re-run even a metadata job per call
-    * (VERDICT r4). The key carries the table directory's modification
-    * time so a rewritten table (long-lived session regenerating test
-    * data) re-counts instead of serving a stale size.
-    */
-  private val tableCounts = new scala.collection.concurrent.TrieMap[String, Long]
-  private def cachedCount(s: SparkSession, dir: String, name: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val mtime =
-      try p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        .getFileStatus(p).getModificationTime
-      catch { case _: java.io.IOException => 0L }
-    tableCounts.getOrElseUpdate(s"$dir/$name@$mtime", t(s, dir, name).count())
-  }
-
-  /** MinHash + LSH candidate pairs (shingle -> minhash -> band ->
-    * bucket-join), shared by q18 (pair listing), q50 (cluster
-    * formation) and q51 (corpus prep). H=8 md5 min-hashes computed
-    * row-locally ([[withMinhashSig]] — a pure projection, no signature
-    * shuffle); B=4 bands of R=2 rows; candidate pairs = docs sharing
-    * any band key. The band join is the linear-scale path: at 10^12
-    * rows it replaces the O(n^2) shingle self-join of q16.
-    *
-    * Hot-band df guard (mirrored in the oracle), same skew guard as q44:
-    * a band key shared by a large fraction of a boilerplate-heavy corpus
-    * would emit O(df^2) join rows — quadratic at web scale. The windowed
-    * count shares the (band, key) shuffle the self-join needs anyway, so
-    * signatures are computed exactly once (ReusedExchange asserted in
-    * PlanAuditSpec). Pairs dropped in a hot band can still collide in one
-    * of the other 3 bands.
-    */
-  /** Two-lane exact-dedup fingerprint (q15/q51) — ONE definition shared
-    * with the production Run dedup stage: [[graft.operators.Dedup.fingerprintLanes]].
-    */
-  private def withFingerprintLanes(docs: DataFrame): DataFrame =
-    graft.operators.Dedup.fingerprintLanes(docs)
-
-  /** q16's exact shingle-Jaccard near-dup pairs (τ=0.5), shared with
-    * q78's recall gate so the truth derivation can never desync from the
-    * standalone query. df≤64 hot-shingle guard; the windowed df over sh
-    * shares the join's shuffle — the shingle set is computed once, not
-    * once per guard branch.
-    */
   /** Stride-7 char-12-gram shingle array over `text`, deduped
     * ROW-LOCALLY (array_distinct) — ONE definition for q16/q78's
     * near-dup shingles and q08's set-difference shingles, so the two
@@ -129,6 +121,12 @@ object SparkEntry {
   private def shingle12Stride7: Column = array_distinct(expr(
     "transform(sequence(1, greatest(length(text) - 11, 1), 7), i -> substring(text, i, 12))"))
 
+  /** q16's exact shingle-Jaccard near-dup pairs (τ=0.5), shared with
+    * q78's recall gate so the truth derivation can never desync from the
+    * standalone query. df≤64 hot-shingle guard; the windowed df over sh
+    * shares the join's shuffle — the shingle set is computed once, not
+    * once per guard branch.
+    */
   private def exactJaccardPairs(docs: DataFrame): DataFrame = {
     // per-(doc, shingle) dedup is ROW-LOCAL (array_distinct before the
     // explode): with doc_id in every row, distinct-per-doc == global
@@ -365,42 +363,31 @@ object SparkEntry {
     chunked.withColumn("keep", row_number().over(w) === 1)
   }
 
-  /** Row-local MinHash signature columns h0..h7 over `text`: stride-7
-    * char-12-gram shingles, H=8 salted-md5 min-hashes, all computed by
-    * the codegen kernel [[graft.functions.MinhashSig]] in ONE pass — a
-    * pure projection, so the signature stage needs NO shuffle at all
-    * (the explode+groupBy spelling paid a map-side-combined exchange of
-    * every shingle hash; the array_min-over-transform spelling was
-    * shuffle-free but CodegenFallback and slower than the exchange it
-    * removed). The 8-element signature array is materialized once
-    * (CollapseProject keeps the non-cheap producer in its own project)
-    * and the h-columns are O(1) array extracts.
+  /** MinHash + LSH candidate pairs (shingle -> minhash -> band ->
+    * bucket-join), shared by q18 (pair listing), q50 (cluster
+    * formation) and q51 (corpus prep). H=8 md5 min-hashes computed
+    * row-locally ([[graft.operators.Dedup.minhashSig]] — a pure
+    * projection, no signature shuffle); B=4 bands of R=2 rows; candidate
+    * pairs = docs sharing any band key. The band join is the
+    * linear-scale path: at 10^12 rows it replaces the O(n^2) shingle
+    * self-join of q16.
+    *
+    * Hot-band df guard (mirrored in the oracle), same skew guard as q44:
+    * a band key shared by a large fraction of a boilerplate-heavy corpus
+    * would emit O(df^2) join rows — quadratic at web scale. The windowed
+    * count shares the (band, key) shuffle the self-join needs anyway, so
+    * signatures are computed exactly once (ReusedExchange asserted in
+    * PlanAuditSpec). Pairs dropped in a hot band can still collide in one
+    * of the other 3 bands.
     */
-  private def withMinhashSig(docs: DataFrame): DataFrame =
-    graft.operators.Dedup.minhashSig(docs)
-
   private def minhashBandPairs(docs: DataFrame): DataFrame =
-    minhashBandPairsFromSig(withMinhashSig(docs.select(col("doc_id"), col("text"))))
-
-  /** Band + bucket-join stage over a frame already carrying h0..h7 —
-    * lets q51 band the PERSISTED slim survivor set (signatures cached,
-    * text long gone) instead of re-deriving signatures from text.
-    * ONE definition shared with the production Run near-dup stage:
-    * [[graft.operators.Dedup.minhashBandPairs]].
-    */
-  private def minhashBandPairsFromSig(sig: DataFrame): DataFrame =
-    graft.operators.Dedup.minhashBandPairs(sig, "doc_id")
-
-  /** Edge derivation over a slim signature frame, exposed for the
-    * stage-level profiler ([[graft.tools.Q51Prof]]) only.
-    */
-  private[graft] def minhashEdgesForProf(sig: DataFrame): DataFrame =
-    minhashBandPairsFromSig(sig)
-      .select(col("id1").as("src"), col("id2").as("dst"))
+    Dedup.minhashBandPairs(
+      Dedup.minhashSig(docs.select(col("doc_id"), col("text"))),
+      "doc_id")
 
   /** q14's quality-surrogate columns — ONE definition for the space
     * count and the avg-word-length score shared by q14, the q51 quality
-    * gate ([[survivorsForProf]]) and the q84 decile calibration, so the
+    * gate ([[corpusPrepPipeline]]) and the q84 decile calibration, so the
     * calibration thresholds always describe the score the gate actually
     * applies. The oracles mirror this exact expression text.
     */
@@ -408,26 +395,6 @@ object SparkEntry {
     length(col("text")) - length(regexp_replace(col("text"), " ", ""))
   private def avgWordLenCol: Column =
     (length(col("text")) - nSpacesCol).cast("double") / (nSpacesCol + 1)
-
-  /** The q51 survivor-set frame alone (gate + fp dedup, no persist) —
-    * the first half of [[corpusPrepPipeline]], which calls this so the
-    * stage-level profiler ([[graft.tools.Q51Prof]]) can never drift from
-    * the production chain.
-    */
-  private[graft] def survivorsForProf(s: SparkSession, dir: String): DataFrame = {
-    val awl = avgWordLenCol
-    val surv0 = tp(s, dir, "documents")
-      .filter(col("n_chars") >= 100 && awl.between(4.0, 8.0))
-      .select(col("doc_id"), col("source"), col("text"))
-    val slim = withMinhashSig(withFingerprintLanes(surv0))
-      .withColumn("n_tokens", size(split(col("text"), " ")))
-      .drop("text")
-    val wFp = Window.partitionBy(col("fp1"), col("fp2"))
-    slim
-      .withColumn("keeper", min(col("doc_id")).over(wFp))
-      .filter(col("doc_id") === col("keeper"))
-      .drop("fp1", "fp2", "keeper")
-  }
 
   /** The lazy corpus-prep pipeline (q51): quality gate → exact-dedup
     * survivor set → MinHash edges → CC representatives → per-source
@@ -440,9 +407,9 @@ object SparkEntry {
     *
     * Scale shape: `text` is consumed ENTIRELY inside the initial
     * projection — fingerprint lanes, MinHash signature (row-local, see
-    * [[withMinhashSig]]) and token count are all computed in the scan
-    * stage, and only the slim columns (doc_id, source, n_tokens,
-    * h0..h7) ever shuffle, persist, or join. At 100 TB that means the
+    * [[graft.operators.Dedup.minhashSig]]) and token count are all
+    * computed in the scan stage, and only the slim columns (doc_id,
+    * source, n_tokens, h0..h7) ever shuffle, persist, or join. At 100 TB that means the
     * exact-dedup exchange moves ~300 bytes/doc instead of the document
     * body, the survivor cache is sketch-sized, and the corpus body is
     * read exactly once. Deliberate trade: signatures are computed for
@@ -452,11 +419,11 @@ object SparkEntry {
     */
   private[graft] def corpusPrepPipeline(s: SparkSession, dir: String,
       persistEx: Boolean): (DataFrame, DataFrame) = {
-    val ex0 = survivorsForProf(s, dir)
+    val ex0 = q51Survivors(s, dir)
     val ex = if (persistEx) ex0.persist() else ex0
-    val edges = minhashBandPairsFromSig(ex)
+    val edges = Dedup.minhashBandPairs(ex, "doc_id")
       .select(col("id1").as("src"), col("id2").as("dst"))
-    val comp = graft.operators.Dedup.connectedComponents(
+    val comp = Dedup.connectedComponents(
       ex.select(col("doc_id").as("id")), edges, edgesDistinct = true)
     val result = ex.join(comp, ex("doc_id") === comp("id"))
       .filter(col("comp") === col("id"))
@@ -465,6 +432,24 @@ object SparkEntry {
         sum(col("n_tokens")).as("sum_tokens"))
       .orderBy(col("source"))
     (ex, result)
+  }
+
+  /** The q51 survivor set (quality gate + fp dedup, no persist): the
+    * first half of [[corpusPrepPipeline]].
+    */
+  private def q51Survivors(s: SparkSession, dir: String): DataFrame = {
+    val awl = avgWordLenCol
+    val surv0 = tp(s, dir, "documents")
+      .filter(col("n_chars") >= 100 && awl.between(4.0, 8.0))
+      .select(col("doc_id"), col("source"), col("text"))
+    val slim = Dedup.minhashSig(Dedup.fingerprintLanes(surv0))
+      .withColumn("n_tokens", size(split(col("text"), " ")))
+      .drop("text")
+    val wFp = Window.partitionBy(col("fp1"), col("fp2"))
+    slim
+      .withColumn("keeper", min(col("doc_id")).over(wFp))
+      .filter(col("doc_id") === col("keeper"))
+      .drop("fp1", "fp2", "keeper")
   }
 
   /** Flagship: the full extract+correct pipeline over the synthetic corpus
@@ -1000,11 +985,11 @@ object SparkEntry {
     // ---- training-data ops: deduplication ----
 
     // exact dedup on the word MULTISET (hash-groupBy) via the shared
-    // two-lane commutative fingerprint (see withFingerprintLanes — the
+    // two-lane commutative fingerprint (see Dedup.fingerprintLanes — the
     // round-2 guard was a single ~2^30 lane, which the pigeonhole breaks
     // at 10^12 docs)
     "q15_dedup_exact" -> ((s, dir) => {
-      withFingerprintLanes(tp(s, dir, "documents"))
+      Dedup.fingerprintLanes(tp(s, dir, "documents"))
         .groupBy(col("fp1"), col("fp2"))
         .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("n_dups"))
         .filter(col("n_dups") >= 1)
@@ -1064,7 +1049,7 @@ object SparkEntry {
       val verts = t(s, dir, "documents").select(col("doc_id").as("id"))
       val edges = minhashBandPairs(tp(s, dir, "documents"))
         .select(col("id1").as("src"), col("id2").as("dst"))
-      graft.operators.Dedup.connectedComponents(verts, edges,
+      Dedup.connectedComponents(verts, edges,
           edgesDistinct = true)
         .groupBy(col("comp")).agg(count(lit(1)).as("cluster_size"))
         .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
@@ -1344,7 +1329,7 @@ object SparkEntry {
     "q85_fuzzy_decontam" -> ((s, dir) => {
       def md5s(c: Column): Column = md5(to_binary(c, lit("utf-8")))
       def bandedSide(lo: Int, hi: Int, idName: String): DataFrame =
-        withMinhashSig(tp(s, dir, "documents")
+        Dedup.minhashSig(tp(s, dir, "documents")
           .withColumn("b", splitBucket).filter(col("b") >= lo && col("b") <= hi)
           .select(col("doc_id"), col("text")))
           .select(col("doc_id").as(idName), posexplode(array(
@@ -1919,7 +1904,7 @@ object SparkEntry {
     // the index side would be a bucketed standing table in production.
     "q67_incremental_neardup" -> ((s, dir) => {
       def md5s(c: Column): Column = md5(to_binary(c, lit("utf-8")))
-      val sig = withMinhashSig(
+      val sig = Dedup.minhashSig(
         tp(s, dir, "documents").select(col("doc_id"), col("text"))).drop("text")
       val banded0 = sig.select(col("doc_id"), posexplode(array(
         md5s(concat(col("h0"), col("h1"))), md5s(concat(col("h2"), col("h3"))),

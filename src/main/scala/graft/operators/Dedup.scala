@@ -53,8 +53,15 @@ object Dedup {
   /** 8-hash MinHash signature columns h0..h7 appended to `docs` (which
     * must carry `text`) — ONE definition shared by the query board
     * (q18/q51 via SparkEntry) and the production Run near-dup stage.
-    * Row-local projection (the graft_minhash8 codegen kernel): no
-    * shuffle, no explode.
+    * Stride-7 char-12-gram shingles, H=8 salted-md5 min-hashes, all
+    * computed by the codegen kernel [[graft.functions.MinhashSig]] in ONE
+    * pass — a pure projection, so the signature stage needs NO shuffle
+    * at all (the explode+groupBy spelling paid a map-side-combined
+    * exchange of every shingle hash; the array_min-over-transform
+    * spelling was shuffle-free but CodegenFallback and slower than the
+    * exchange it removed). The 8-element signature array is materialized
+    * once (CollapseProject keeps the non-cheap producer in its own
+    * project) and the h-columns are O(1) array extracts.
     */
   def minhashSig(docs: DataFrame): DataFrame = {
     graft.functions.MinhashSig.register(docs.sparkSession)
@@ -212,13 +219,6 @@ object Dedup {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   @volatile private var warnedLocalFallback = false
 
-  /** Rounds the last [[connectedComponents]] call on this JVM took —
-    * diagnostic convenience ONLY, racy under concurrent calls. Tests and
-    * callers that need the round count use
-    * [[connectedComponentsWithRounds]], which returns it per-call.
-    */
-  @volatile var lastRounds: Int = 0
-
   /** Reliable-checkpoint file of a checkpointed DataFrame round, for
     * stale-round cleanup (Spark never deletes reliable checkpoint data
     * unless spark.cleaner.referenceTracking.cleanCheckpoints is on, so a
@@ -259,9 +259,8 @@ object Dedup {
     connectedComponentsWithRounds(vertices, edges, maxRounds, edgesDistinct)._1
 
   /** [[connectedComponents]] plus the number of propagation rounds the
-    * fixpoint took — returned per-call (the `lastRounds` var is a shared
-    * diagnostic that races under concurrent calls; the convergence-shape
-    * assertions in DedupSpec read this instead).
+    * fixpoint took, returned per call (the convergence-shape assertions
+    * in DedupSpec read it).
     *
     * @param edgesDistinct caller guarantees `edges` holds DISTINCT
     *                       directed pairs with `src < dst` (the band-join
@@ -362,7 +361,6 @@ object Dedup {
       prevSum = s
       round += 1
     }
-    lastRounds = round
     require(converged,
       s"connectedComponents did not converge within $maxRounds rounds — " +
         "graph diameter exceeds the bound; raise maxRounds")

@@ -6,10 +6,10 @@ import graft.core.{HtmlBlocks, Profiler}
   * reference's ocrd-tool.json processor parameters (`nOCR`,
   * `maxCandidates`, `runLE`, model paths — ocrd-tool.json postcorrect
   * params; `align/cli.py:35-38`'s k input file groups). Every knob
-  * defaults to the constant the engine shipped with, so
-  * `GraftConfig.default` is behavior-identical to the unparameterized
-  * entry points — the oracle board pins that — and a user retargets the
-  * engine by passing a config, not by editing source.
+  * defaults to the constant the engine shipped with — every
+  * [[Pipeline]] stage takes `GraftConfig.default` when given none, and
+  * the oracle board pins its output — and a user retargets the engine by
+  * passing a config, not by editing source.
   */
 final case class GraftConfig(
     /** Candidate extractor list — the reference's nOCR/k input file

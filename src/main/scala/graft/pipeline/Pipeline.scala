@@ -2,7 +2,9 @@ package graft.pipeline
 
 import graft.core._
 import graft.fixtures.PagesGen
-import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.plans.Checkpoint
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** The end-to-end extraction + post-correction pipeline — the Spark
   * restatement of the reference's processor chain (SURVEY.md §3):
@@ -20,6 +22,11 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * where k OCR engines are separate processes), so no union+groupBy(url) is
   * needed and the whole pipeline is one whole-stage pass over the scan.
   * The only shuffles in the engine are the final metric rollups.
+  *
+  * Each stage has ONE entry, taking a [[GraftConfig]] that defaults to
+  * the shipped constants. The fused [[run]], the checkpointed
+  * [[runCheckpointed]] and the streaming front-end all chain these same
+  * stages, so they cannot disagree on a knob.
   */
 object Pipeline {
 
@@ -39,19 +46,15 @@ object Pipeline {
 
   // ---- Stage A: segmentation ----
 
-  def segmentPage(p: PageRow): SegmentedPage = segmentPage(p, GraftConfig.default)
-
-  def segmentPage(p: PageRow, cfg: GraftConfig): SegmentedPage =
+  def segmentPage(p: PageRow, cfg: GraftConfig = GraftConfig.default): SegmentedPage =
     // geometric reading order (psegutils.py:114-170 port) — the identity
     // permutation for the single-column DOM layout, the real ordering
     // path for 2-D layouts
     SegmentedPage(p.url, p.lang, ReadingOrder.sort(
       HtmlBlocks.segment(p.html, cfg.minBlockChars, cfg.maxLinkDensity)))
 
-  def segment(pages: Dataset[PageRow]): Dataset[SegmentedPage] =
-    segment(pages, GraftConfig.default)
-
-  def segment(pages: Dataset[PageRow], cfg: GraftConfig): Dataset[SegmentedPage] = {
+  def segment(pages: Dataset[PageRow],
+      cfg: GraftConfig = GraftConfig.default): Dataset[SegmentedPage] = {
     import pages.sparkSession.implicits._
     pages.map(p => segmentPage(p, cfg))
   }
@@ -74,30 +77,31 @@ object Pipeline {
 
   // ---- Stage B+C: variants + alignment (row-local) ----
 
-  def alignPage(sp: SegmentedPage): AlignedPage = alignPage(sp, extractors)
-
-  /** k-ary variant: the aligner itself is k-extractor-generic
-    * (align/cli.py:35-38 accepts k input file groups); production wires
-    * [[extractors]] (k=2), tests exercise k=3 to pin the index/provenance
-    * rules at arity > 2.
+  /** One extractor's reading of one text block — the per-line version
+    * both alignment paths ([[alignPage]], [[alignShuffled]]) feed the
+    * aligner.
     */
-  def alignPage(sp: SegmentedPage, exs: Seq[Extractor]): AlignedPage = {
+  private def lineVersion(ex: Extractor, url: String, b: Block): MultiAlign.LineVersion = {
+    val txt = TextNorm.normalize(ex.transform(b.text))
+    val wcc = ConfSurrogate.wordCharConfs(ex.name, url, b.id, txt, ex.base)
+    val wc = wcc.map(MultiAlign.confFold)
+    // line conf = (min+max)/2 over word confs (recognize.py:262-265)
+    MultiAlign.LineVersion(ex.name, b.id, txt, MultiAlign.confFold(wc), wc, wcc)
+  }
+
+  /** The aligner is k-extractor-generic (align/cli.py:35-38 accepts k
+    * input file groups); production wires [[extractors]] (k=2), tests
+    * exercise k=3 to pin the index/provenance rules at arity > 2.
+    */
+  def alignPage(sp: SegmentedPage, exs: Seq[Extractor] = extractors): AlignedPage = {
     val lines = sp.blocks.filter(_.kind == "text").map { b =>
-      val versions = exs.map { ex =>
-        val txt = TextNorm.normalize(ex.transform(b.text))
-        val wcc = ConfSurrogate.wordCharConfs(ex.name, sp.url, b.id, txt, ex.base)
-        val wc = wcc.map(MultiAlign.confFold)
-        // line conf = (min+max)/2 over word confs (recognize.py:262-265)
-        MultiAlign.LineVersion(ex.name, b.id, txt, MultiAlign.confFold(wc), wc, wcc)
-      }
-      MultiAlign.alignLine(versions, b.span)
+      MultiAlign.alignLine(exs.map(lineVersion(_, sp.url, b)), b.span)
     }
     AlignedPage(sp.url, sp.lang, lines)
   }
 
-  def align(seg: Dataset[SegmentedPage]): Dataset[AlignedPage] = align(seg, extractors)
-
-  def align(seg: Dataset[SegmentedPage], exs: Seq[Extractor]): Dataset[AlignedPage] = {
+  def align(seg: Dataset[SegmentedPage],
+      exs: Seq[Extractor] = extractors): Dataset[AlignedPage] = {
     import seg.sparkSession.implicits._
     seg.map(sp => alignPage(sp, exs))
   }
@@ -120,20 +124,16 @@ object Pipeline {
     * when extractors really are separate jobs; the fused [[align]] is the
     * zero-shuffle path when all k variants derive from the same row.
     */
-  def alignShuffled(pages: Dataset[PageRow]): Dataset[AlignedPage] =
-    alignShuffled(pages, extractors)
-
-  def alignShuffled(pages: Dataset[PageRow], exs: Seq[Extractor]): Dataset[AlignedPage] = {
+  def alignShuffled(pages: Dataset[PageRow],
+      exs: Seq[Extractor] = extractors): Dataset[AlignedPage] = {
     val spark = pages.sparkSession
     import spark.implicits._
     val readings = exs.zipWithIndex.map { case (ex, i) =>
       segment(pages).flatMap { sp =>
         sp.blocks.filter(_.kind == "text").map { b =>
-          val txt = TextNorm.normalize(ex.transform(b.text))
-          val wcc = ConfSurrogate.wordCharConfs(ex.name, sp.url, b.id, txt, ex.base)
-          val wc = wcc.map(MultiAlign.confFold)
+          val v = lineVersion(ex, sp.url, b)
           LineReading(sp.url, sp.lang, b.id, b.span.start, b.span.stop, i,
-            txt, MultiAlign.confFold(wc), wc, wcc.map(_.toSeq))
+            v.text, v.conf, v.wordConfs, v.wordCharConfs)
         }
       }
     }.reduce(_ union _)
@@ -323,56 +323,102 @@ object Pipeline {
     CorrectedPage(ap.url, ap.lang, corrected.map(_.text).mkString("\n"), corrected, total)
   }
 
-  /** Correction with the LEARNED confusion profile (default) — the
-    * hard-coded PagesGen.ocrPatterns constants are no longer consumed by
-    * the run path, only by the corpus generator itself. `runLE` is the
-    * reference's config.json:2 gate: the trained LE model protects
-    * valid-but-out-of-lexicon tokens (proper nouns) from "correction" by
-    * extending the lexicon on the fly (aio/aio.py:503-537). LE here is
-    * applied per token occurrence (document-local dynamic lexicon), which
-    * keeps the chain shuffle-free, streaming-safe and resume-deterministic;
-    * [[dynamicLexicon]] is the corpus-global aggregation variant.
-    */
-  def correct(aligned: Dataset[AlignedPage]): Dataset[CorrectedPage] =
-    correct(aligned, defaultProfile(aligned.sparkSession))
-
   def lexiconWith(lang: String, profile: Profile): Lexicon =
     PagesGen.lexiconFor(lang).copy(
       ocrPatterns = profile.patterns, ocrPatternProb = profile.probs)
 
+  /** The de/en lexicons under a config's learned profile, broadcast once
+    * per job (the reference loads its model once per process,
+    * recognize.py:94-102).
+    */
+  private final case class Lexicons(de: Broadcast[Lexicon], en: Broadcast[Lexicon]) {
+    def of(lang: String): Lexicon = if (lang == "de") de.value else en.value
+  }
+
+  /** THE one resolve-profile-and-broadcast step: correction, the dynamic
+    * lexicon and the head/book evaluations all read their lexicons
+    * through it, so they cannot disagree on which profile they apply.
+    */
+  private def broadcastLexicons(spark: SparkSession, cfg: GraftConfig): Lexicons = {
+    val profile = profileFor(spark, cfg)
+    def bc(lang: String) = spark.sparkContext.broadcast(lexiconWith(lang, profile))
+    Lexicons(bc("de"), bc("en"))
+  }
+
+  /** Stage D over a Dataset, with the LEARNED confusion profile — the
+    * hard-coded PagesGen.ocrPatterns constants are not consumed by the
+    * run path, only by the corpus generator itself. `cfg.runLE` is the
+    * reference's config.json:2 gate: the trained LE model protects
+    * valid-but-out-of-lexicon tokens (proper nouns) from "correction" by
+    * extending the lexicon on the fly (aio/aio.py:503-537). LE here is
+    * applied per token occurrence (document-local dynamic lexicon), which
+    * keeps the chain shuffle-free, streaming-safe and resume-deterministic.
+    *
+    * With `cfg.dynamicLexicon` the stage also consumes the corpus-global
+    * [[dynamicLexicon]]: the bounded (lang, token) table collects into a
+    * broadcast set (≤ topN rows per language by construction — an
+    * artifact, not data) and every occurrence of an accepted token is
+    * protected, mirroring how the reference writes dynamiclex once and
+    * profiles against it (aio/aio.py:521-528). Per-occurrence LE stays on
+    * as usual for tokens below the floor/bound. That variant is
+    * batch-only (a streaming corpus has no global view).
+    *
+    * The fused [[run]], the checkpointed [[runCheckpointed]] and the
+    * streaming front-end all correct through this one stage.
+    */
   def correct(aligned: Dataset[AlignedPage],
-      profile: Profile,
-      runLE: Boolean = true): Dataset[CorrectedPage] = {
+      cfg: GraftConfig = GraftConfig.default): Dataset[CorrectedPage] = {
     val spark = aligned.sparkSession
     import spark.implicits._
-    // broadcast the lexicons once (the reference loads its model once per
-    // process, recognize.py:94-102)
-    val bde = spark.sparkContext.broadcast(lexiconWith("de", profile))
-    val ben = spark.sparkContext.broadcast(lexiconWith("en", profile))
-    aligned.map(ap => correctPage(ap, bde.value, ben.value, runLE))
+    val lx = broadcastLexicons(spark, cfg)
+    val (in, dynLex) =
+      if (!cfg.dynamicLexicon) (aligned, None)
+      else {
+        // two consumers of the aligned frame: the lexicon aggregation (an
+        // action, below) and the returned correction map. Without a
+        // persist the second pass would re-run the whole segment+align
+        // lineage from the source scan — the most expensive pass in the
+        // pipeline, doubled. The cache lives until the caller's terminal
+        // action; callers that hold the input reference can unpersist it
+        // afterwards.
+        val al = aligned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val dyn = boundedDynamicLexicon(al, lx, cfg)
+          .collect() // bounded by construction, see dynamicLexicon
+          .groupBy(_.getString(0))
+          .map { case (l, rows) => l -> rows.map(_.getString(1)).toSet }
+        (al, Some(spark.sparkContext.broadcast(dyn)))
+      }
+    in.map { ap =>
+      correctPage(ap, lx.de.value, lx.en.value, cfg.runLE,
+        dynLex.fold(Set.empty[String])(_.value.getOrElse(ap.lang, Set.empty)),
+        cfg.maxCandidates)
+    }
   }
 
   /** Corpus-global dynamic lexicon (the reference's dynamiclex artifact,
     * aio/aio.py:521-528): OOV tokens the LE model accepts anywhere in the
     * corpus, aggregated per language with occurrence counts, BOUNDED
-    * inside the aggregation — a frequency floor plus top-N per language
-    * (count desc, token asc tie-break) — and returned as a TABLE
-    * (lang, token, cnt). The accepted vocabulary of a web-scale crawl is
-    * unbounded (every proper noun on the web lands here), so the bound is
-    * what makes the artifact collectable/broadcastable at 100 TB: the
-    * output is at most `topN` rows per language BY CONSTRUCTION, not by
-    * corpus luck. Batch-only (a streaming corpus has no global view).
+    * inside the aggregation — a frequency floor (`cfg.dynLexMinCount`)
+    * plus top-N per language (`cfg.dynLexTopN`; count desc, token asc
+    * tie-break) — and returned as a TABLE (lang, token, cnt). The
+    * accepted vocabulary of a web-scale crawl is unbounded (every proper
+    * noun on the web lands here), so the bound is what makes the artifact
+    * collectable/broadcastable at 100 TB: the output is at most `topN`
+    * rows per language BY CONSTRUCTION, not by corpus luck. Batch-only (a
+    * streaming corpus has no global view).
     */
-  def dynamicLexicon(aligned: Dataset[AlignedPage], profile: Profile,
-      minCount: Long = 1, topN: Int = 10000): org.apache.spark.sql.DataFrame = {
+  def dynamicLexicon(aligned: Dataset[AlignedPage],
+      cfg: GraftConfig = GraftConfig.default): DataFrame =
+    boundedDynamicLexicon(aligned, broadcastLexicons(aligned.sparkSession, cfg), cfg)
+
+  private def boundedDynamicLexicon(aligned: Dataset[AlignedPage], lx: Lexicons,
+      cfg: GraftConfig): DataFrame = {
     val spark = aligned.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.expressions.Window
-    val bde = spark.sparkContext.broadcast(lexiconWith("de", profile))
-    val ben = spark.sparkContext.broadcast(lexiconWith("en", profile))
     val accepted = aligned.flatMap { ap =>
-      val lex = if (ap.lang == "de") bde.value else ben.value
+      val lex = lx.of(ap.lang)
       ap.lines.flatMap { line =>
         tokenInputs(line).flatMap { ti =>
           Corrector.contextOf(ti.tok, ti.ctx, ti.wordConf, ti.glyphConfs,
@@ -387,87 +433,22 @@ object Pipeline {
     // rides the same hash partitioning (lang ⊂ (lang, token))
     accepted.groupBy(col("lang"), col("token"))
       .agg(count(lit(1)).as("cnt"))
-      .filter(col("cnt") >= minCount)
+      .filter(col("cnt") >= cfg.dynLexMinCount)
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("lang")).orderBy(col("cnt").desc, col("token").asc)))
-      .filter(col("rn") <= topN)
+      .filter(col("rn") <= cfg.dynLexTopN)
       .select(col("lang"), col("token"), col("cnt"))
   }
 
-  /** Correction consuming the corpus-global dynamic lexicon: the bounded
-    * (lang, token) table collects into a broadcast set (≤ topN rows per
-    * language by construction — an artifact, not data) and every
-    * occurrence of an accepted token is protected, mirroring how the
-    * reference writes dynamiclex once and profiles against it
-    * (aio/aio.py:521-528). Per-occurrence LE stays on as usual for
-    * tokens below the floor/bound.
+  /** Full pipeline: one narrow map chain (zero shuffles unless
+    * `cfg.dynamicLexicon` adds its bounded aggregation). Every processor
+    * knob — extractor list, segmentation thresholds, profile learning
+    * floor/cap/noCache, maxCandidates, runLE, the dynamic lexicon — flows
+    * from the config.
     */
-  def correctWithDynamicLexicon(aligned: Dataset[AlignedPage],
-      profile: Profile, minCount: Long = 1, topN: Int = 10000,
-      runLE: Boolean = true,
-      maxCandidates: Int = Profiler.MaxCandidates): Dataset[CorrectedPage] = {
-    val spark = aligned.sparkSession
-    import spark.implicits._
-    // two consumers of the aligned frame: the lexicon aggregation (an
-    // action, below) and the returned correction map. Without a persist
-    // the second pass would re-run the whole segment+align lineage from
-    // the source scan — the most expensive pass in the pipeline, doubled.
-    // The cache lives until the caller's terminal action; callers that
-    // hold the input reference can unpersist it afterwards.
-    val al = aligned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dyn = dynamicLexicon(al, profile, minCount, topN)
-      .collect() // bounded by construction, see dynamicLexicon
-      .groupBy(_.getString(0))
-      .map { case (l, rows) => l -> rows.map(_.getString(1)).toSet }
-    val bde = spark.sparkContext.broadcast(lexiconWith("de", profile))
-    val ben = spark.sparkContext.broadcast(lexiconWith("en", profile))
-    val bdyn = spark.sparkContext.broadcast(dyn)
-    al.map { ap =>
-      correctPage(ap, bde.value, ben.value, runLE,
-        bdyn.value.getOrElse(ap.lang, Set.empty), maxCandidates)
-    }
-  }
-
-  /** Config-driven spellings of the dynamic-lexicon pair: profile
-    * resolution ([[profileFor]]) and the dynamiclex floor/bound flow
-    * from the [[GraftConfig]] instead of per-call arguments.
-    */
-  def dynamicLexicon(aligned: Dataset[AlignedPage],
-      cfg: GraftConfig): org.apache.spark.sql.DataFrame =
-    dynamicLexicon(aligned, profileFor(aligned.sparkSession, cfg),
-      cfg.dynLexMinCount, cfg.dynLexTopN)
-
-  def correctWithDynamicLexicon(aligned: Dataset[AlignedPage],
-      cfg: GraftConfig): Dataset[CorrectedPage] =
-    correctWithDynamicLexicon(aligned, profileFor(aligned.sparkSession, cfg),
-      cfg.dynLexMinCount, cfg.dynLexTopN, cfg.runLE, cfg.maxCandidates)
-
-  /** Full pipeline: one narrow map chain, zero shuffles. */
-  def run(pages: Dataset[PageRow]): Dataset[CorrectedPage] =
-    correct(align(segment(pages)))
-
-  /** Full pipeline with an explicit runLE gate (config.json:2). */
-  def run(pages: Dataset[PageRow], runLE: Boolean): Dataset[CorrectedPage] = {
-    val aligned = align(segment(pages))
-    correct(aligned, defaultProfile(pages.sparkSession), runLE)
-  }
-
-  /** Full pipeline under an explicit [[GraftConfig]] — every processor
-    * knob (extractor list, segmentation thresholds, profile learning
-    * floor/cap/noCache, maxCandidates, runLE) flows from the config;
-    * `run(pages, GraftConfig.default)` is byte-identical to `run(pages)`
-    * (ConfigSpec pins it).
-    */
-  def run(pages: Dataset[PageRow], cfg: GraftConfig): Dataset[CorrectedPage] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val profile = profileFor(spark, cfg)
-    val bde = spark.sparkContext.broadcast(lexiconWith("de", profile))
-    val ben = spark.sparkContext.broadcast(lexiconWith("en", profile))
-    align(segment(pages, cfg), cfg.extractors)
-      .map(ap => correctPage(ap, bde.value, ben.value, cfg.runLE,
-        Set.empty, cfg.maxCandidates))
-  }
+  def run(pages: Dataset[PageRow],
+      cfg: GraftConfig = GraftConfig.default): Dataset[CorrectedPage] =
+    correct(align(segment(pages, cfg), cfg.extractors), cfg)
 
   /** Generate the synthetic corpus as a distributed Dataset (each row is a
     * pure function of its index — no driver-side materialization).
@@ -505,16 +486,14 @@ object Pipeline {
     * data-sized.
     */
   def headEval(spark: SparkSession, pages: Dataset[PageRow],
-      golden: Dataset[GoldenPage]): org.apache.spark.sql.DataFrame = {
+      golden: Dataset[GoldenPage]): DataFrame = {
     import spark.implicits._
-    val profile = defaultProfile(spark)
-    val bde = spark.sparkContext.broadcast(lexiconWith("de", profile))
-    val ben = spark.sparkContext.broadcast(lexiconWith("en", profile))
+    val lx = broadcastLexicons(spark, GraftConfig.default)
     val aligned = align(segment(pages))
     val outcomes = aligned
       .joinWith(golden, aligned("url") === golden("url"), "inner")
       .flatMap { case (ap, g) =>
-      val lex = if (ap.lang == "de") bde.value else ben.value
+      val lex = lx.of(ap.lang)
       ap.lines.zip(g.golden.split("\n").toSeq).flatMap { case (line, gLine) =>
         val gTokens = gLine.split(" ", -1).toIndexedSeq
         tokenInputs(line).zipWithIndex.map { case (ti, k) =>
@@ -548,7 +527,7 @@ object Pipeline {
     * with generator-derived GT (kept as the q47 fixture contract; the
     * table-driven overload above is the production entry point).
     */
-  def headEval(spark: SparkSession, from: Long, n: Long): org.apache.spark.sql.DataFrame = {
+  def headEval(spark: SparkSession, from: Long, n: Long): DataFrame = {
     import spark.implicits._
     headEval(spark,
       spark.range(from, from + n).map(i => PagesGen.page(i).row),
@@ -572,17 +551,15 @@ object Pipeline {
     * table and the book-level rollup of an already-page-sized frame.
     */
   def bookEval(spark: SparkSession, pages: Dataset[PageRow],
-      golden: Dataset[GoldenPage]): org.apache.spark.sql.DataFrame = {
+      golden: Dataset[GoldenPage]): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val profile = defaultProfile(spark)
-    val bde = spark.sparkContext.broadcast(lexiconWith("de", profile))
-    val ben = spark.sparkContext.broadcast(lexiconWith("en", profile))
+    val lx = broadcastLexicons(spark, GraftConfig.default)
     val aligned = align(segment(pages))
     val perPage = aligned
       .joinWith(golden, aligned("url") === golden("url"), "inner")
       .map { case (ap, g) =>
-        val lex = if (ap.lang == "de") bde.value else ben.value
+        val lex = lx.of(ap.lang)
         var master = 0L; var corrected = 0L
         ap.lines.zip(g.golden.split("\n").toSeq).foreach { case (line, gLine) =>
           val gTokens = gLine.split(" ", -1).toIndexedSeq
@@ -613,7 +590,7 @@ object Pipeline {
   }
 
   /** Synthetic-corpus overload (the q54 fixture contract). */
-  def bookEval(spark: SparkSession, from: Long, n: Long): org.apache.spark.sql.DataFrame = {
+  def bookEval(spark: SparkSession, from: Long, n: Long): DataFrame = {
     import spark.implicits._
     bookEval(spark,
       spark.range(from, from + n).map(i => PagesGen.page(i).row),
@@ -630,64 +607,29 @@ object Pipeline {
     * write+read barrier per stage for stage-granular resume + lineage, the
     * same trade the reference makes with its METS file groups
     * (aio/aio.py:269-298 skip-if-output-exists).
+    *
+    * `pages` is any PageRow-schema table — the spark-submit surface
+    * ([[graft.Run]]) feeds any (url, warc_ts, html, text, lang) parquet
+    * through here. Every processor knob flows from `cfg` (Run parses its
+    * `--key=value` flags into one), and each stage calls the same
+    * Dataset stage the fused [[run]] chains, so the two paths produce
+    * the same pages. Returns the final table plus the per-stage
+    * [[graft.plans.Checkpoint.StageResult]]s in execution order, so
+    * callers can report processed-vs-skipped buckets per stage without
+    * re-reading ledgers or hardcoding the stage list. Stage closures
+    * resolve their resources lazily — a fully-resumed run (all ledgers
+    * complete) never pays the profile learn, because
+    * [[graft.plans.Checkpoint.runStage]] only invokes the transform when
+    * buckets are pending.
     */
   def runCheckpointed(
       spark: SparkSession,
       root: String,
-      n: Long,
-      buckets: Int
-  ): org.apache.spark.sql.DataFrame =
-    runCheckpointed(spark, root, generate(spark, n).toDF(), buckets)
-
-  def runCheckpointed(
-      spark: SparkSession,
-      root: String,
-      n: Long
-  ): org.apache.spark.sql.DataFrame =
-    runCheckpointed(spark, root, n, 32)
-
-  /** [[runCheckpointed]] over an arbitrary PageRow-schema table — the
-    * spark-submit surface ([[graft.Run]]) feeds any (url, warc_ts, html,
-    * text, lang) parquet through here.
-    */
-  def runCheckpointed(
-      spark: SparkSession,
-      root: String,
-      pages: org.apache.spark.sql.DataFrame,
-      buckets: Int
-  ): org.apache.spark.sql.DataFrame =
-    runCheckpointedStaged(spark, root, pages, buckets)._1
-
-  /** [[runCheckpointed]] plus the per-stage [[graft.plans.Checkpoint.StageResult]]s
-    * (in execution order), so callers like [[graft.Run]] can report
-    * processed-vs-skipped buckets per stage without re-reading ledgers
-    * or hardcoding the stage list.
-    */
-  def runCheckpointedStaged(
-      spark: SparkSession,
-      root: String,
-      pages: org.apache.spark.sql.DataFrame,
-      buckets: Int
-  ): (org.apache.spark.sql.DataFrame, Seq[(String, graft.plans.Checkpoint.StageResult)]) =
-    runCheckpointedStaged(spark, root, pages, buckets, GraftConfig.default)
-
-  /** Config-driven spelling: every processor knob flows from the
-    * [[GraftConfig]] (the spark-submit surface [[graft.Run]] parses its
-    * `--key=value` flags into one). The default config is byte-identical
-    * to the unparameterized overload. Stage closures resolve their
-    * resources lazily — a fully-resumed run (all ledgers complete) never
-    * pays the profile learn, because [[graft.plans.Checkpoint.runStage]]
-    * only invokes the transform when buckets are pending.
-    */
-  def runCheckpointedStaged(
-      spark: SparkSession,
-      root: String,
-      pages: org.apache.spark.sql.DataFrame,
+      pages: DataFrame,
       buckets: Int,
-      cfg: GraftConfig
-  ): (org.apache.spark.sql.DataFrame, Seq[(String, graft.plans.Checkpoint.StageResult)]) = {
+      cfg: GraftConfig = GraftConfig.default
+  ): (DataFrame, Seq[(String, Checkpoint.StageResult)]) = {
     import spark.implicits._
-    import graft.plans.Checkpoint
 
     require(!cfg.nearDup || cfg.dedup,
       "nearDup requires dedup: the near-dup stage pairs over the " +
@@ -700,28 +642,17 @@ object Pipeline {
     // failure class the nBuckets pin already guards one level down
     Checkpoint.pinRunConfig(spark, root, cfg.canonical)
     val seg = Checkpoint.runStage(spark, "segment", root, pages, "url", buckets) { df =>
-      df.as[PageRow].map(segmentPage(_, cfg)).toDF()
+      segment(df.as[PageRow], cfg).toDF()
     }
     val aligned = Checkpoint.runStage(spark, "align", root,
       seg.output.drop("p_bucket"), "url", buckets) { df =>
-      df.as[SegmentedPage].map(alignPage(_, cfg.extractors)).toDF()
+      align(df.as[SegmentedPage], cfg.extractors).toDF()
     }
     val corrected = Checkpoint.runStage(spark, "correct", root,
       aligned.output.drop("p_bucket"), "url", buckets) { df =>
-      if (cfg.dynamicLexicon)
-        // corpus-global OOV protection: the dynamiclex aggregation runs
-        // over the stage's pending pages (one extra bounded job inside
-        // the stage) and its bounded table broadcasts into correction
-        correctWithDynamicLexicon(df.as[AlignedPage], cfg).toDF()
-      else {
-        val profile = profileFor(spark, cfg)
-        val bde = spark.sparkContext.broadcast(lexiconWith("de", profile))
-        val ben = spark.sparkContext.broadcast(lexiconWith("en", profile))
-        df.as[AlignedPage]
-          .map(ap => correctPage(ap, bde.value, ben.value, cfg.runLE,
-            Set.empty, cfg.maxCandidates))
-          .toDF()
-      }
+      // under cfg.dynamicLexicon the dynamiclex aggregation runs over the
+      // stage's pending pages (one extra bounded job inside the stage)
+      correct(df.as[AlignedPage], cfg).toDF()
     }
     val base = Seq("segment" -> seg, "align" -> aligned, "correct" -> corrected)
     if (!cfg.dedup)

@@ -34,9 +34,9 @@ object StreamingPipeline {
       .map(i => PagesGen.page(i).row)
   }
 
-  /** The streaming pipeline: identical stage functions as batch. */
+  /** The streaming pipeline: the batch [[Pipeline.run]] itself. */
   def corrected(pages: Dataset[PageRow]): Dataset[CorrectedPage] =
-    Pipeline.correct(Pipeline.align(Pipeline.segment(pages)))
+    Pipeline.run(pages)
 
   /** Stateful cross-batch url dedup via mapGroupsWithState: a crawl feed
     * re-delivers urls (recrawls, retries); the first sighting wins and

@@ -33,9 +33,9 @@ object Microbench {
     time("generate")(i => PagesGen.page(i.toLong))
     val pages = (0 until n).map(i => PagesGen.page(i.toLong).row).toArray
     time("segment")(i => Pipeline.segmentPage(pages(i)))
-    val segs = pages.map(Pipeline.segmentPage)
+    val segs = pages.map(Pipeline.segmentPage(_))
     time("align")(i => Pipeline.alignPage(segs(i)))
-    val aligned = segs.map(Pipeline.alignPage)
+    val aligned = segs.map(Pipeline.alignPage(_))
     time("correct")(i => Pipeline.correctPage(aligned(i), lexDe, lexEn))
     time("full-chain2")(fullChain)
   }

@@ -1,5 +1,7 @@
 package graft.tools
 
+import org.apache.spark.sql.execution.SQLExecution
+
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
   * the plans/r06 before/after evidence trail. Not part of the bench
   * contract (Bench.scala is frozen); measurement stays in Bench/ReTime.
@@ -26,13 +28,16 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       // AQE finalizes exchange reuse / join rewrites only on execution —
       // append the executed plan so ReusedExchange and the final join
-      // strategies are visible in the evidence files
-      // collect(), not count(): count() plans a NEW QueryExecution, so
-      // the df's own adaptive plan would never finalize (outputs are all
-      // report-sized, so the collect is safe)
+      // strategies are visible in the evidence files. The action runs on
+      // the df's OWN QueryExecution (count() would plan a new one, so
+      // this adaptive plan would never finalize) and returns no rows
+      // (collect() would, unbounded for pair-level outputs).
+      val qe = df.queryExecution
       val executed =
-        try { df.collect(); df.queryExecution.executedPlan.toString }
-        catch { case scala.util.control.NonFatal(e) =>
+        try {
+          SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
+          qe.executedPlan.toString
+        } catch { case scala.util.control.NonFatal(e) =>
           s"<execution failed: ${e.getMessage}>" }
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),

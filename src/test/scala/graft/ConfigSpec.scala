@@ -4,8 +4,10 @@ import graft.pipeline.{GraftConfig, Pipeline}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Runtime parameter surface (GraftConfig — the ocrd-tool.json analog):
-  * defaults are behavior-identical to the unparameterized entry points,
-  * and each knob demonstrably reaches its operator.
+  * defaults are behavior-identical to the unparameterized entry point,
+  * and each knob demonstrably reaches its operator. (That the fused and
+  * checkpointed paths agree under a config is CheckpointedPipelineSpec's
+  * cross-path parity test.)
   */
 class ConfigSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
