@@ -138,20 +138,7 @@ object SparkEntry {
     val shingles = docs.select(col("doc_id"),
       explode(shingle12Stride7).as("sh"))
     val sizes = shingles.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    val rare = shingles
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("sh"))))
-      .filter(col("df") <= 64).drop("df")
-    val a = rare.select(col("doc_id").as("id1"), col("sh"))
-    // the self-join's sides are the SAME corpus-sized frame — broadcast
-    // can never fire at production scale, but left to the planner the
-    // tiny-sf build side DID broadcast, which re-evaluated the whole
-    // shingle+window subtree per side (4 scans in the plan). Pinning
-    // sort-merge makes both sides reuse ONE Exchange(sh) (ReusedExchange
-    // — the q18 pattern), and the df-guard Window's (sh) sort already
-    // satisfies SMJ's ordering, so the join adds no exchange and no sort
-    // at any scale.
-    val b = rare.select(col("doc_id").as("id2"), col("sh")).hint("merge")
-    val common = a.join(b, Seq("sh")).filter(col("id1") < col("id2"))
+    val common = Dedup.guardedSelfJoin(shingles, Seq("sh"), "doc_id", Nil, 64)
       .groupBy(col("id1"), col("id2")).agg(count(lit(1)).as("common"))
     // alias-style size joins (no rename Project above the aggregate):
     // the two sizes subtrees canonicalize identically, so the second
@@ -368,22 +355,21 @@ object SparkEntry {
     * formation) and q51 (corpus prep). H=8 md5 min-hashes computed
     * row-locally ([[graft.operators.Dedup.minhashSig]] — a pure
     * projection, no signature shuffle); B=4 bands of R=2 rows; candidate
-    * pairs = docs sharing any band key. The band join is the
-    * linear-scale path: at 10^12 rows it replaces the O(n^2) shingle
-    * self-join of q16.
-    *
-    * Hot-band df guard (mirrored in the oracle), same skew guard as q44:
-    * a band key shared by a large fraction of a boilerplate-heavy corpus
-    * would emit O(df^2) join rows — quadratic at web scale. The windowed
-    * count shares the (band, key) shuffle the self-join needs anyway, so
-    * signatures are computed exactly once (ReusedExchange asserted in
-    * PlanAuditSpec). Pairs dropped in a hot band can still collide in one
-    * of the other 3 bands.
+    * pairs = docs sharing any band key, under the df ≤ 128 hot-band
+    * guard (mirrored in the oracle). The band join is the linear-scale
+    * path: at 10^12 rows it replaces the O(n^2) shingle self-join of q16.
     */
   private def minhashBandPairs(docs: DataFrame): DataFrame =
     Dedup.minhashBandPairs(
       Dedup.minhashSig(docs.select(col("doc_id"), col("text"))),
       "doc_id")
+
+  /** q07/q17's occurrence count of `marker` in `text`, by
+    * replace-difference (deterministic integer math).
+    */
+  private def occ(marker: String): Column =
+    ((length(col("text")) - length(regexp_replace(col("text"), lit(marker), lit("")))) /
+      marker.length).cast("long")
 
   /** q14's quality-surrogate columns — ONE definition for the space
     * count and the avg-word-length score shared by q14, the q51 quality
@@ -757,14 +743,7 @@ object SparkEntry {
       val hits = cosineBandPairs(emb)
       val probes = cosineBandJoined(emb)
         .select(col("id1"), col("id2")).distinct()
-      val a = emb.select(col("doc_id").as("id1"), col("v").as("v1"))
-      val b = emb.select(col("doc_id").as("id2"), col("v").as("v2"))
-      val exact = a.join(broadcast(b), col("id1") < col("id2"))
-        .filter(expr("graft_cosine(v1, v2)") >= 0.97)
-        .select(col("id1"), col("id2"))
-      exact.join(hits.withColumn("hit", lit(true)), Seq("id1", "id2"), "left")
-        .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-        .crossJoin(probes.agg(count(lit(1)).as("n_cand")))
+      recallReport(exactCosinePairs(emb), hits, probes)
     }),
 
     // SemDedup-style cell-partitioned embedding dedup gate (Abbas et
@@ -785,31 +764,13 @@ object SparkEntry {
       val emb = tfEmbeddings(s, dir).drop("m")
       val k = math.max(8L, math.ceil(math.sqrt(
         cachedCount(s, dir, "documents").toDouble)).toLong)
-      val centArr = graft.operators.VectorOps.centroidArray(
+      val assigned = graft.operators.VectorOps.assignCells(emb, "doc_id",
         emb.filter(col("doc_id") < k)
           .select(col("doc_id").as("cid"), col("v").as("cv")))
-      val assigned = emb.crossJoin(broadcast(centArr))
-        .withColumn("ds", graft.operators.VectorOps.distRank)
-        .select(col("doc_id"), col("v"), expr("ds[0].cid").as("cid"))
-      val wc = Window.partitionBy(col("cid"))
-      val inCell = assigned.withColumn("csz", count(lit(1)).over(wc))
-        .filter(col("csz") <= 128).drop("csz")
-      val a2 = inCell.select(col("cid"), col("doc_id").as("id1"), col("v").as("v1"))
-      // merge-pinned cell self-join (same rationale as the band joins):
-      // both sides reuse the cell-cap window's Exchange(cid) + sort
-      val b2 = inCell.select(col("cid"), col("doc_id").as("id2"), col("v").as("v2"))
-        .hint("merge")
-      val cand = a2.join(b2, Seq("cid")).filter(col("id1") < col("id2"))
+      val cand = Dedup.guardedSelfJoin(assigned, Seq("cid"), "doc_id", Seq("v"), 128)
       val hits = cand.filter(expr("graft_cosine(v1, v2)") >= 0.97)
         .select(col("id1"), col("id2"))
-      val ea = emb.select(col("doc_id").as("id1"), col("v").as("v1"))
-      val eb = emb.select(col("doc_id").as("id2"), col("v").as("v2"))
-      val exact = ea.join(broadcast(eb), col("id1") < col("id2"))
-        .filter(expr("graft_cosine(v1, v2)") >= 0.97)
-        .select(col("id1"), col("id2"))
-      exact.join(hits.withColumn("hit", lit(true)), Seq("id1", "id2"), "left")
-        .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-        .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
+      recallReport(exactCosinePairs(emb), hits, cand)
         .crossJoin(assigned.agg(countDistinct(col("cid")).as("n_cells")))
     }),
 
@@ -955,9 +916,6 @@ object SparkEntry {
     // stopword-marker scoring (aio.py:462-477 role): occurrence counts by
     // replace-difference (deterministic integer math)
     "q07_stopword_score" -> ((s, dir) => {
-      def occ(marker: String): Column =
-        ((length(col("text")) - length(regexp_replace(col("text"), lit(marker), lit("")))) /
-          marker.length).cast("long")
       t(s, dir, "documents")
         .select(col("doc_id"), occ(" the ").as("cnt_the"), occ(" data ").as("cnt_data"))
         .orderBy(col("doc_id"))
@@ -965,9 +923,6 @@ object SparkEntry {
 
     // language-ID heuristic: argmax of marker scores
     "q17_langid" -> ((s, dir) => {
-      def occ(marker: String): Column =
-        ((length(col("text")) - length(regexp_replace(col("text"), lit(marker), lit("")))) /
-          marker.length).cast("long")
       t(s, dir, "documents")
         .select(col("doc_id"), occ(" the ").as("s_en"), occ(" query ").as("s_q"))
         .withColumn("pred", when(col("s_en") >= col("s_q"), "en").otherwise("ql"))
@@ -1030,10 +985,7 @@ object SparkEntry {
     "q78_lsh_dedup_recall" -> ((s, dir) => {
       val docs = tp(s, dir, "documents")
       val cand = minhashBandPairs(docs)
-      exactJaccardPairs(docs)
-        .join(cand.withColumn("hit", lit(true)), Seq("id1", "id2"), "left")
-        .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-        .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
+      recallReport(exactJaccardPairs(docs), cand, cand)
     }),
 
     // near-dup CLUSTER formation: MinHash candidate pairs -> connected
@@ -1112,9 +1064,7 @@ object SparkEntry {
       val exact = a.join(broadcast(b), col("id1") < col("id2"))
         .filter(bit_count(col("shl1").bitwiseXOR(col("shl2"))) <= 2)
         .select(col("id1"), col("id2"))
-      exact.join(hits.withColumn("hit", lit(true)), Seq("id1", "id2"), "left")
-        .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
-        .crossJoin(probes.agg(count(lit(1)).as("n_cand")))
+      recallReport(exact, hits, probes)
     }),
 
     // brute-force cosine top-k ANN over the embeddings table: the exact
@@ -1180,21 +1130,20 @@ object SparkEntry {
         expr("transform(embedding, x -> cast(x as double))").as("v"))
       val k = math.max(8L, math.ceil(math.sqrt(
         cachedCount(s, dir, "embeddings").toDouble)).toLong)
-      val centArr = graft.operators.VectorOps.centroidArray(
-        emb.filter(col("vec_id") < k)
-          .select(col("vec_id").as("cid"), col("v").as("cv")))
+      val seeds = emb.filter(col("vec_id") < k)
+        .select(col("vec_id").as("cid"), col("v").as("cv"))
       // per-centroid squared distance, ranked row-locally; the inner fold
       // is the codegen'd graft_sqdist kernel (same left-fold order as the
       // aggregate/zip_with HOF it replaced); ONE shared definition with
       // q82/lloydOnce so the engines' tie-break can never diverge
-      val dists = graft.operators.VectorOps.distRank
-      val assigned = emb.crossJoin(broadcast(centArr)).withColumn("ds", dists)
-        .select(col("vec_id"), col("v"), expr("ds[0].cid").as("cid"))
+      val assigned = graft.operators.VectorOps.assignCells(emb, "vec_id", seeds)
       // probes from a SEPARATE pre-filtered branch: the vec_id < 3 filter
       // pushes to the scan, so the nprobe cell ranking is computed for 3
       // vectors instead of re-deriving the full n-vector distance stage
+      // (the identical centroid-array plan reuses assigned's broadcast)
       val probes = emb.filter(col("vec_id") < 3)
-        .crossJoin(broadcast(centArr)).withColumn("ds", dists)
+        .crossJoin(broadcast(graft.operators.VectorOps.centroidArray(seeds)))
+        .withColumn("ds", graft.operators.VectorOps.distRank)
         .select(col("vec_id").as("qid"), col("v").as("qv"),
           explode(expr("transform(slice(ds, 1, 2), x -> x.cid)")).as("cid"))
       val wQ = Window.partitionBy(col("qid"))
@@ -1327,15 +1276,11 @@ object SparkEntry {
     // side) and the benchmark side (a separate small table in a real
     // deployment; here a filter of the same fixture corpus).
     "q85_fuzzy_decontam" -> ((s, dir) => {
-      def md5s(c: Column): Column = md5(to_binary(c, lit("utf-8")))
       def bandedSide(lo: Int, hi: Int, idName: String): DataFrame =
-        Dedup.minhashSig(tp(s, dir, "documents")
+        Dedup.minhashBands(Dedup.minhashSig(tp(s, dir, "documents")
           .withColumn("b", splitBucket).filter(col("b") >= lo && col("b") <= hi)
-          .select(col("doc_id"), col("text")))
-          .select(col("doc_id").as(idName), posexplode(array(
-            md5s(concat(col("h0"), col("h1"))), md5s(concat(col("h2"), col("h3"))),
-            md5s(concat(col("h4"), col("h5"))), md5s(concat(col("h6"), col("h7")))
-          ))).toDF(idName, "band", "key")
+          .select(col("doc_id"), col("text"))), "doc_id")
+          .toDF(idName, "band", "key")
       val trainB = bandedSide(0, 7, "train_doc")
       val testB = bandedSide(9, 9, "test_doc")
       trainB.join(broadcast(testB), Seq("band", "key"))
@@ -1903,16 +1848,10 @@ object SparkEntry {
     // equi-joins with the shared df<=128 skew guard, never all-pairs;
     // the index side would be a bucketed standing table in production.
     "q67_incremental_neardup" -> ((s, dir) => {
-      def md5s(c: Column): Column = md5(to_binary(c, lit("utf-8")))
       val sig = Dedup.minhashSig(
         tp(s, dir, "documents").select(col("doc_id"), col("text"))).drop("text")
-      val banded0 = sig.select(col("doc_id"), posexplode(array(
-        md5s(concat(col("h0"), col("h1"))), md5s(concat(col("h2"), col("h3"))),
-        md5s(concat(col("h4"), col("h5"))), md5s(concat(col("h6"), col("h7")))
-      ))).toDF("doc_id", "band", "key")
-      val wDf = Window.partitionBy(col("band"), col("key"))
-      val banded = banded0.withColumn("df", count(lit(1)).over(wDf))
-        .filter(col("df") <= 128).drop("df")
+      val banded = Dedup.dropHotKeys(
+        Dedup.minhashBands(sig, "doc_id"), Seq("band", "key"), 128)
       val ix = banded.filter(col("doc_id") % 2 === 0)
         .select(col("band"), col("key")).distinct()
       val batch = banded.filter(col("doc_id") % 2 === 1)
@@ -2390,19 +2329,7 @@ object SparkEntry {
     val banded0 = emb.select(col("doc_id"), col("v"),
       posexplode(array((0 to 3).map(bandKey): _*)))
       .toDF("doc_id", "v", "band", "key")
-    val wDf = Window.partitionBy(col("band"), col("key"))
-    val banded = banded0.withColumn("df", count(lit(1)).over(wDf))
-      .filter(col("df") <= 128).drop("df")
-    val a = banded.select(col("band"), col("key"),
-      col("doc_id").as("id1"), col("v").as("v1"))
-    // merge-pinned self-join: same rationale as minhashBandPairs — both
-    // sides reuse the df-guard window's Exchange(band, key) + sort
-    // instead of the build side broadcasting and re-running the
-    // embedding+banding chain (broadcast could never fire at scale;
-    // both sides are the corpus)
-    val b = banded.select(col("band"), col("key"),
-      col("doc_id").as("id2"), col("v").as("v2")).hint("merge")
-    a.join(b, Seq("band", "key")).filter(col("id1") < col("id2"))
+    Dedup.guardedSelfJoin(banded0, Seq("band", "key"), "doc_id", Seq("v"), 128)
   }
 
   /** q53/q80's verified near-dup pairs: the band join plus the exact
@@ -2412,6 +2339,28 @@ object SparkEntry {
     cosineBandJoined(emb)
       .filter(expr("graft_cosine(v1, v2)") >= 0.97)
       .select(col("id1"), col("id2")).distinct()
+
+  /** q80/q82's exact truth: ALL-pairs cosine ≥ 0.97 over (doc_id, v)
+    * embeddings as a broadcast BNLJ (q20's bounded shape; a production
+    * run executes it on a q58 sample).
+    */
+  private def exactCosinePairs(emb: DataFrame): DataFrame = {
+    val a = emb.select(col("doc_id").as("id1"), col("v").as("v1"))
+    val b = emb.select(col("doc_id").as("id2"), col("v").as("v2"))
+    a.join(broadcast(b), col("id1") < col("id2"))
+      .filter(expr("graft_cosine(v1, v2)") >= 0.97)
+      .select(col("id1"), col("id2"))
+  }
+
+  /** The recall gates' report row (q78/q80/q81/q82): exact truth pairs
+    * left-joined to the approximate `hits` on (id1, id2) → (n_exact,
+    * n_hit), crossed with the probe cost n_cand = |`cand`|.
+    */
+  private def recallReport(exact: DataFrame, hits: DataFrame,
+      cand: DataFrame): DataFrame =
+    exact.join(hits.withColumn("hit", lit(true)), Seq("id1", "id2"), "left")
+      .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
+      .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
 
   /** q44/q81's shared 32-bit SimHash signatures: per-token md5 nibble
     * votes folded into one sign bit per position (map-side combinable
@@ -2431,25 +2380,14 @@ object SparkEntry {
 
   /** q44/q81's shared banded Hamming join: 4×8-bit bands with the df≤128
     * hot-band guard — (id1, id2, sh1, sh2) candidate rows BEFORE the
-    * exact Hamming verify. The windowed count over (band, key) reuses
-    * the one shuffle the join needs anyway, so the signature aggregation
-    * is computed ONCE (a join against a groupBy would recompute the
-    * whole signature stage on the second branch). Pairs dropped in a hot
-    * band can still collide in a rarer band.
+    * exact Hamming verify. Pairs dropped in a hot band can still collide
+    * in a rarer band.
     */
   private def simhashBandJoined(sig: DataFrame): DataFrame = {
     val banded0 = sig.select(col("doc_id"), col("sh"),
       posexplode(array((0 to 3).map(j => substring(col("sh"), 8 * j + 1, 8)): _*)))
       .toDF("doc_id", "sh", "band", "key")
-    val wDf = Window.partitionBy(col("band"), col("key"))
-    val banded = banded0.withColumn("df", count(lit(1)).over(wDf))
-      .filter(col("df") <= 128).drop("df")
-    val a = banded.select(col("band"), col("key"), col("doc_id").as("id1"), col("sh").as("sh1"))
-    // merge-pinned self-join (same rationale as minhashBandPairs): both
-    // sides reuse the guard window's Exchange(band, key) + sort
-    val b = banded.select(col("band"), col("key"), col("doc_id").as("id2"), col("sh").as("sh2"))
-      .hint("merge")
-    a.join(b, Seq("band", "key")).filter(col("id1") < col("id2"))
+    Dedup.guardedSelfJoin(banded0, Seq("band", "key"), "doc_id", Seq("sh"), 128)
   }
 
   /** Exact Hamming distance between the binary-string columns sh1/sh2. */

@@ -1,15 +1,19 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Near-duplicate CLUSTER formation — the step between candidate-pair
-  * generation (MinHash/SimHash band joins, SparkEntry q18/q44) and the
-  * actual dedup decision: keep one document per connected component of
-  * the similarity graph. The reference's corpus tooling stops at
-  * file-group granularity (aio/aio.py unpacks and aligns whole groups);
-  * at web scale the same "one survivor per duplicate set" semantics is a
-  * connected-components problem over 10^9+ edges.
+/** Near-duplicate candidate pairs and CLUSTER formation. Candidate-pair
+  * generation is one operator, [[Dedup.guardedSelfJoin]]: every banded
+  * (MinHash, SimHash, cosine-sign) and celled (SemDedup) near-dup path
+  * keys its rows, then self-joins each bucket under a hot-key guard.
+  * Cluster formation is the actual dedup decision: keep one document per
+  * connected component of the similarity graph. The reference's corpus
+  * tooling stops at file-group granularity (aio/aio.py unpacks and
+  * aligns whole groups); at web scale the same "one survivor per
+  * duplicate set" semantics is a connected-components problem over
+  * 10^9+ edges.
   *
   * Algorithm: iterative minimum-label propagation (the alternating
   * star-contraction family — see the small-star/large-star formulation
@@ -71,38 +75,63 @@ object Dedup {
         (0 to 7).map(j => col("_mh").getItem(j).as(s"h$j")): _*)
   }
 
+  /** B=4×R=2 MinHash band keys over a frame carrying h0..h7: one
+    * (id, band, key) row per band, key = md5 of the band's two hashes
+    * concatenated. ONE projection shared by the guarded self-join
+    * ([[minhashBandPairs]]), q67's incremental probe and q85's unguarded
+    * bipartite decontam join; the oracles mirror it
+    * (`SparkEntry.minhashBandedCte`).
+    */
+  def minhashBands(sig: DataFrame, idCol: String): DataFrame = {
+    def md5s(c: Column) = md5(to_binary(c, lit("utf-8")))
+    sig.select(col(idCol), posexplode(array(
+      md5s(concat(col("h0"), col("h1"))), md5s(concat(col("h2"), col("h3"))),
+      md5s(concat(col("h4"), col("h5"))), md5s(concat(col("h6"), col("h7")))
+    ))).toDF(idCol, "band", "key")
+  }
+
+  /** Hot-key guard: drops every row whose `keys` bucket holds more than
+    * `cap` rows. A bucket shared by a large fraction of a
+    * boilerplate-heavy corpus would emit O(df²) self-join rows —
+    * quadratic at web scale. The windowed count shuffles on `keys`, the
+    * exchange a bucket join on `keys` needs anyway.
+    */
+  def dropHotKeys(df: DataFrame, keys: Seq[String], cap: Int): DataFrame =
+    df.withColumn("df", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
+      .filter(col("df") <= cap).drop("df")
+
+  /** The candidate-pair operator every banded and celled near-dup path
+    * shares: [[dropHotKeys]], then the bucket self-join on `keys` with
+    * `id1 < id2` (no self or mirrored pairs). Returns `keys`, `id1`,
+    * payload suffixed `1`, `id2`, payload suffixed `2`; a pair sharing
+    * several buckets appears once per shared bucket.
+    *
+    * The join is pinned to sort-merge, so the tiny-sf plan matches the
+    * at-scale one (both sides are the same corpus-sized frame): both
+    * sides reuse the ONE Exchange(keys) the guard window already paid
+    * (ReusedExchange, PlanAuditSpec), whose sort also satisfies SMJ's
+    * ordering. Left to the planner, the small build side broadcast and
+    * re-evaluated the whole keying + window chain.
+    */
+  def guardedSelfJoin(keyed: DataFrame, keys: Seq[String], id: String,
+      payload: Seq[String], cap: Int): DataFrame = {
+    val kept = dropHotKeys(keyed, keys, cap)
+    def side(n: Int) = kept.select(keys.map(col) ++
+      (col(id).as(s"id$n") +: payload.map(p => col(p).as(s"$p$n"))): _*)
+    side(1).join(side(2).hint("merge"), keys).filter(col("id1") < col("id2"))
+  }
+
   /** B=4×R=2 band equi-join candidate pairs over a frame already
     * carrying h0..h7: DISTINCT (id1, id2) with id1 < id2 under the
     * df≤`dfGuard` hot-band guard (default 128 — the constant the oracle
     * board mirrors; the production Run surface overrides it via
-    * `--neardup-df-guard`). The windowed df count shares the (band, key)
-    * shuffle the self-join needs anyway, so signatures are computed
-    * exactly once (ReusedExchange asserted in PlanAuditSpec).
+    * `--neardup-df-guard`). Pairs dropped in a hot band can still
+    * collide in one of the other 3 bands.
     */
   def minhashBandPairs(sig: DataFrame, idCol: String,
-      dfGuard: Int = 128): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    def md5s(c: org.apache.spark.sql.Column) = md5(to_binary(c, lit("utf-8")))
-    val banded0 = sig.select(col(idCol), posexplode(array(
-      md5s(concat(col("h0"), col("h1"))), md5s(concat(col("h2"), col("h3"))),
-      md5s(concat(col("h4"), col("h5"))), md5s(concat(col("h6"), col("h7")))
-    ))).toDF(idCol, "band", "key")
-    val wDf = Window.partitionBy(col("band"), col("key"))
-    val banded = banded0.withColumn("df", count(lit(1)).over(wDf))
-      .filter(col("df") <= dfGuard).drop("df")
-    val a = banded.select(col("band"), col("key"), col(idCol).as("id1"))
-    // pin the self-join to sort-merge: both sides are the same
-    // corpus-sized banded frame (broadcast can never fire at production
-    // scale), and the hint makes the tiny-sf plan match the at-scale one
-    // — both sides reuse the ONE Exchange(band, key) the df-guard window
-    // already paid (ReusedExchange, PlanAuditSpec), whose sort also
-    // satisfies SMJ's ordering; left to the planner the small build side
-    // broadcast and re-evaluated the whole signature+window chain.
-    val b = banded.select(col("band"), col("key"), col(idCol).as("id2"))
-      .hint("merge")
-    a.join(b, Seq("band", "key")).filter(col("id1") < col("id2"))
+      dfGuard: Int = 128): DataFrame =
+    guardedSelfJoin(minhashBands(sig, idCol), Seq("band", "key"), idCol, Nil, dfGuard)
       .select(col("id1"), col("id2")).distinct()
-  }
 
   /** Corpus-global near-dup keeper labels over (url, text) rows — the
     * production composition of the individually-oracled q18 (band
@@ -158,23 +187,12 @@ object Dedup {
     val k = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
     val emb = oneText.select(col("doc_id"),
       expr("graft_hashtf(split(text, ' '))").as("v"))
-    val centArr = VectorOps.centroidArray(
+    val assigned = VectorOps.assignCells(emb, "doc_id",
       emb.orderBy(col("doc_id")).limit(k)
         .select(col("doc_id").as("cid"), col("v").as("cv")))
-    val assigned = emb.crossJoin(broadcast(centArr))
-      .withColumn("ds", VectorOps.distRank)
-      .select(col("doc_id"), col("v"), expr("ds[0].cid").as("cid"))
-    val wc = org.apache.spark.sql.expressions.Window.partitionBy(col("cid"))
-    val inCell = assigned.withColumn("csz", count(lit(1)).over(wc))
-      .filter(col("csz") <= cellCap).drop("csz")
-    val a = inCell.select(col("cid"), col("doc_id").as("src"), col("v").as("v1"))
-    // merge-pinned cell self-join: both sides reuse the cell-cap
-    // window's Exchange(cid) + sort (see minhashBandPairs)
-    val b = inCell.select(col("cid"), col("doc_id").as("dst"), col("v").as("v2"))
-      .hint("merge")
-    val pairs = a.join(b, Seq("cid")).filter(col("src") < col("dst"))
+    val pairs = guardedSelfJoin(assigned, Seq("cid"), "doc_id", Seq("v"), cellCap)
       .filter(expr("graft_cosine(v1, v2)") >= tau)
-      .select(col("src"), col("dst"))
+      .select(col("id1").as("src"), col("id2").as("dst"))
     labelsFromPairs(withId, pairs)
   }
 
@@ -217,7 +235,6 @@ object Dedup {
   }
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-  @volatile private var warnedLocalFallback = false
 
   /** Reliable-checkpoint file of a checkpointed DataFrame round, for
     * stale-round cleanup (Spark never deletes reliable checkpoint data
@@ -306,6 +323,16 @@ object Dedup {
     var prevSum = labels.agg(sum(col("comp").cast("decimal(38,0)"))).first().getDecimal(0)
     var round = 0
     var converged = prevSum == null // empty graph: nothing to propagate
+    // decided once per call: every round of one call takes the same
+    // checkpoint path, and the fallback is logged at most once per call
+    val reliable = vertices.sparkSession.sparkContext.getCheckpointDir.isDefined
+    if (!reliable && !converged) {
+      log.warn("connectedComponents: no checkpoint dir configured - " +
+        "falling back to localCheckpoint. Executor-local blocks do NOT " +
+        "survive executor loss; on a cluster, set " +
+        "sparkContext.setCheckpointDir to a reliable (HDFS/S3) path or " +
+        "an executor failure mid-iteration kills the job.")
+    }
     while (!converged && round < maxRounds) {
       // neighborhood minimum: labels flow across every edge, then each
       // endpoint keeps the min of (its label, incoming labels)
@@ -329,15 +356,6 @@ object Dedup {
         .join(labels.as("l"), col("h.comp") === col("l.id"), "left")
         .select(col("h.id"),
           least(col("h.comp"), coalesce(col("l.comp"), col("h.comp"))).as("comp"))
-      val reliable = vertices.sparkSession.sparkContext.getCheckpointDir.isDefined
-      if (!reliable && !warnedLocalFallback) {
-        warnedLocalFallback = true
-        log.warn("connectedComponents: no checkpoint dir configured - " +
-          "falling back to localCheckpoint. Executor-local blocks do NOT " +
-          "survive executor loss; on a cluster, set " +
-          "sparkContext.setCheckpointDir to a reliable (HDFS/S3) path or " +
-          "an executor failure mid-iteration kills the job.")
-      }
       // reliable path: EAGER checkpoint (a lazy reliable checkpoint would
       // re-run the whole job a second time to write the files). local
       // path: LAZY localCheckpoint — it caches + truncates lineage on

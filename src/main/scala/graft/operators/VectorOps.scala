@@ -15,7 +15,8 @@ object VectorOps {
 
   /** The ONE-ROW broadcast frame holding the sorted (cid, cv) centroid
     * array — the build side of the row-local argmin. `cents` must carry
-    * (cid, cv). ONE definition shared by q40/q82 and [[lloydOnce]].
+    * (cid, cv). ONE definition shared by [[assignCells]], q40's probes
+    * and [[sse]].
     */
   def centroidArray(cents: DataFrame): DataFrame =
     cents.agg(F.sort_array(F.collect_list(F.struct(F.col("cid"), F.col("cv"))))
@@ -35,19 +36,27 @@ object VectorOps {
       |  graft_sqdist(v, c.cv) AS d2,
       |  c.cid AS cid)))""".stripMargin)
 
+  /** Row-local nearest-centroid cell assignment: `seeds` (cid, cv) are
+    * collapsed by [[centroidArray]] into one broadcast row, and every
+    * row of `emb` (`id`, v) takes the [[distRank]] argmin. Returns
+    * (`id`, v, cid) — no shuffle. ONE definition for q40, q82,
+    * [[graft.operators.Dedup.semDedupLabels]] and [[lloydOnce]]; each
+    * caller picks its own seeds.
+    */
+  def assignCells(emb: DataFrame, id: String, seeds: DataFrame): DataFrame =
+    emb.crossJoin(F.broadcast(centroidArray(seeds)))
+      .withColumn("ds", distRank)
+      .select(F.col(id), F.col("v"), F.expr("ds[0].cid").as("cid"))
+
   /** One Lloyd step. `emb` must have (vec_id LONG, v ARRAY<DOUBLE>);
     * returns refined centroids (cid -> mean vector), dropping empty cells.
     */
   def lloydOnce(emb: DataFrame, centroids: Seq[(Int, Array[Double])]): Seq[(Int, Array[Double])] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val cents = centroids.sortBy(_._1)
-    val centDf = centroidArray(
-      cents.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"))
+    val seeds = centroids.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
     graft.functions.CosineSim.register(spark) // graft_sqdist for the inner fold
-    val dists = distRank
-    val assigned = emb.crossJoin(F.broadcast(centDf))
-      .withColumn("cid", dists.getItem(0).getField("cid"))
+    val assigned = assignCells(emb, "vec_id", seeds)
       .select(F.col("cid"), F.posexplode(F.col("v")).as(Seq("dim", "x")))
     assigned.groupBy(F.col("cid"), F.col("dim"))
       .agg(F.avg(F.col("x")).as("m"))
@@ -66,8 +75,8 @@ object VectorOps {
   def sse(emb: DataFrame, centroids: Seq[(Int, Array[Double])]): Double = {
     import emb.sparkSession.implicits._
     graft.functions.CosineSim.register(emb.sparkSession)
-    val centDf = centroids.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
-      .agg(F.sort_array(F.collect_list(F.struct(F.col("cid"), F.col("cv")))).as("cents"))
+    val centDf = centroidArray(
+      centroids.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"))
     val minD2 = F.expr(
       """array_min(transform(cents, c -> graft_sqdist(v, c.cv)))""".stripMargin)
     emb.crossJoin(F.broadcast(centDf))

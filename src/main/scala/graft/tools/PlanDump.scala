@@ -8,8 +8,29 @@ import org.apache.spark.sql.execution.SQLExecution
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> q33_trigram_freq ...
   *        (no query args = all queries)
+  *
+  * The files are diffable across JVMs: [[mask]] replaces every identity
+  * that differs between two runs of the same plan, so a before/after
+  * pair of dumps `diff`s empty when the plan did not move.
   */
 object PlanDump {
+
+  /** Masks per-run identities: expression ids (`doc_id#712L` →
+    * `doc_id#NL`), exchange plan ids, RDD ids, source line numbers of
+    * RDD call sites, JVM lambda class names (`$$Lambda$N/0x…@hash`),
+    * and the AQE query-stage and codegen-stage ids of the executed
+    * plan, which follow the order in which concurrent stages happened
+    * to materialize.
+    */
+  private def mask(plan: String): String = plan
+    .replaceAll("#\\d+", "#N")
+    .replaceAll("QueryStage \\d+", "QueryStage N")
+    .replaceAll("\\*\\(\\d+\\)", "*(N)")
+    .replaceAll("plan_id=\\d+", "plan_id=N")
+    .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
+    .replaceAll("\\.scala:\\d+", ".scala:N")
+    .replaceAll("Lambda(\\$\\d+)?/0x[0-9a-f]+(@[0-9a-f]+)?", "Lambda\\$N")
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: PlanDump <outDir> <suffix> [query ...]")
@@ -41,7 +62,7 @@ object PlanDump {
           s"<execution failed: ${e.getMessage}>" }
       java.nio.file.Files.write(
         java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
-        (plan + "\n\n== Executed plan (AQE final) ==\n" + executed)
+        mask(plan + "\n\n== Executed plan (AQE final) ==\n" + executed)
           .getBytes("UTF-8"))
       println(s"[plandump] $n -> $outDir/${n}_$suffix.txt")
     }

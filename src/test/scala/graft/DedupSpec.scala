@@ -8,6 +8,24 @@ class DedupSpec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession.spark
 
+  test("guardedSelfJoin: cap-sized buckets survive, hot ones drop; one pair per unordered couple") {
+    import spark.implicits._
+    // bucket "a" holds exactly cap = 3 rows and survives the guard; "b"
+    // holds cap + 1 rows and is dropped whole
+    val keyed = (Seq(1L, 2L, 3L).map(i => ("a", i, s"p$i")) ++
+      Seq(10L, 11L, 12L, 13L).map(i => ("b", i, s"p$i"))).toDF("k", "id", "p")
+    val joined = Dedup.guardedSelfJoin(keyed, Seq("k"), "id", Seq("p"), cap = 3)
+    assert(joined.columns.toSeq == Seq("k", "id1", "p1", "id2", "p2"))
+    val rows = joined.collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getLong(3), r.getString(4)))
+      .sortBy(r => (r._2, r._4)).toSeq
+    // no self pairs, no mirrored pairs: exactly the 3 couples of "a"
+    assert(rows.map(r => (r._1, r._2, r._4)) == Seq(("a", 1L, 2L), ("a", 1L, 3L), ("a", 2L, 3L)),
+      s"unexpected pairs: $rows")
+    // payload columns travel with their side's id
+    assert(rows.forall(r => r._3 == s"p${r._2}" && r._5 == s"p${r._4}"), s"payload mixed: $rows")
+  }
+
   test("q78 recall gate: LSH candidates cover the exact truth at a bounded probe cost") {
     // generator facts at sf0.001: every exact Jaccard>=0.5 pair is
     // caught by the 4x2 bands (true pairs sit far above tau), and the

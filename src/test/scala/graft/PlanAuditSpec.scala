@@ -1,8 +1,20 @@
 package graft
 
+import graft.operators.Dedup
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Physical-plan audits: the scale properties SURVEY.md §4 promises must be
   * visible in the executed plan, not just intended — filter pushdown and
@@ -79,20 +91,94 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("128"), s"hot-band df guard missing from plan:\n$p")
   }
 
-  test("minhash LSH guard does not recompute the signature stage at shuffle scale") {
-    // at broadcast scale AQE legitimately recomputes the (tiny) build side;
-    // the 100x property is that when both band-join branches shuffle, the
-    // identical Exchange(band, key) subtree — shingle explode + 8 min-aggs
-    // + window guard — is computed ONCE and the second branch reuses it.
+  /** A physical node's inputs, looking through AQE wrappers, query
+    * stages, reused exchanges and cached relations.
+    */
+  private def inputs(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+    case other => other.children
+  }
+
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: inputs(p).flatMap(nodes)
+
+  /** Does `p` read a hot-key guard window without an aggregate between? */
+  private def readsGuard(p: SparkPlan): Boolean = p match {
+    case _: BaseAggregateExec => false
+    case _: WindowExec => true
+    case other => inputs(other).exists(readsGuard)
+  }
+
+  test("guarded self-joins do not recompute their keyed stage at shuffle scale") {
+    // at broadcast scale AQE legitimately recomputes the (tiny) build
+    // side; the 100x property is that when both sides of a guarded
+    // bucket self-join shuffle, the identical Exchange(keys) subtree —
+    // keying + hot-key guard window — is computed ONCE and the second
+    // side reuses it, and the pair join stays a sort-merge equi-join.
+    // Product joins elsewhere are by design (the one-row centroid-array
+    // broadcast of the celled paths, q82's exact truth and report
+    // rows); none of them may read the guard window directly.
+    val labelDocs = spark.read.parquet(s"$sf/documents.parquet")
+      .select(concat(lit("http://d/"), col("doc_id")).as("url"), col("text"))
+    def query(name: String): () => Seq[SparkPlan] = () => {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect() // AQE finalizes exchange reuse on execution
+      Seq(df.queryExecution.executedPlan)
+    }
+    // the labels operators run their pair join inside the CC loop's
+    // jobs, so audit every plan the call executes: those whose query
+    // ids follow a marker taken before the call, up to the final collect
+    def executed(labels: => org.apache.spark.sql.DataFrame): () => Seq[SparkPlan] = () => {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      val marker = spark.range(1).queryExecution.id
+      spark.listenerManager.register(listener)
+      try {
+        val df = labels
+        df.collect()
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (!seen.asScala.exists(_ eq df.queryExecution) && System.nanoTime() < deadline)
+          Thread.sleep(50)
+      } finally spark.listenerManager.unregister(listener)
+      seen.asScala.filter(_.id > marker).map(_.executedPlan).toSeq
+    }
+    val cases = Seq(
+      "q16_shingle_jaccard" -> query("q16_shingle_jaccard"),
+      "q18_minhash_lsh" -> query("q18_minhash_lsh"),
+      "q44_simhash_pairs" -> query("q44_simhash_pairs"),
+      "q53_cosine_neardup" -> query("q53_cosine_neardup"),
+      "q82_semdedup_recall" -> query("q82_semdedup_recall"),
+      "nearDupLabels" -> executed(Dedup.nearDupLabels(labelDocs)),
+      "semDedupLabels" -> executed(Dedup.semDedupLabels(labelDocs)))
     val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val df = SparkEntry.queries("q18_minhash_lsh")(spark, sf)
-      df.collect() // AQE finalizes exchange reuse on execution
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("ReusedExchange"),
-        s"second band-join branch recomputes the signature stage:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    try cases.foreach { case (name, plans) =>
+      val ps = plans()
+      val all = ps.flatMap(nodes)
+      def show = ps.mkString("\n")
+      // the reused exchange must be the guard window's Exchange(keys)
+      def names(es: Seq[Expression]) = es.flatMap(_.references.map(_.name)).toSet
+      val guardKeys = all.collect { case w: WindowExec => names(w.partitionSpec) }.toSet
+      val reusedKeys = all.collect {
+        case ReusedExchangeExec(_, ShuffleExchangeExec(h: HashPartitioning, _, _, _)) =>
+          names(h.expressions)
+      }.toSet
+      assert(guardKeys.exists(reusedKeys),
+        s"[$name] second self-join side recomputes the keyed stage " +
+          s"(guard keys $guardKeys, reused $reusedKeys):\n$show")
+      assert(all.exists(_.isInstanceOf[SortMergeJoinExec]),
+        s"[$name] bucket self-join is not sort-merge:\n$show")
+      val products = all.filter(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+        n.isInstanceOf[CartesianProductExec])
+      assert(!products.exists(_.children.exists(readsGuard)),
+        s"[$name] guarded self-join degenerated to a product join:\n$show")
+    }
+    finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
   }
 
   test("pipeline and scan queries run inside whole-stage codegen") {
