@@ -18,7 +18,8 @@ object ConfSurrogate {
 
   /** Per-word glyph confidences of one line reading: non-space char runs,
     * confidences indexed by absolute char position (word_conf_list shape,
-    * recognize.py:239-257).
+    * recognize.py:239-257). Each word's confidences are an unboxed
+    * `double[]` behind its `Seq[Double]`.
     */
   def wordCharConfs(exName: String, url: String, lineId: String, text: String, base: Double): IndexedSeq[Seq[Double]] = {
     val out = scala.collection.mutable.ArrayBuffer[Seq[Double]]()
@@ -28,7 +29,10 @@ object ConfSurrogate {
       if (text.charAt(i) != ' ') {
         val start = i
         while (i < n && text.charAt(i) != ' ') i += 1
-        out += (start until i).map(k => charConf(exName, url, lineId, k, base))
+        val confs = new Array[Double](i - start)
+        var k = 0
+        while (k < confs.length) { confs(k) = charConf(exName, url, lineId, start + k, base); k += 1 }
+        out += scala.collection.immutable.ArraySeq.unsafeWrapArray(confs)
       } else i += 1
     }
     out.toIndexedSeq

@@ -14,7 +14,9 @@ import scala.collection.mutable.ArrayBuffer
   *
   * These run row-local inside Dataset.map — O(n*m) per line, bounded by
   * the caller's line-length cap (the analog of the reference's w>5000
-  * guard, div/eval.py:55-57).
+  * guard, div/eval.py:55-57). `levenshtein` is bit-parallel when the
+  * shorter string has at most 64 chars and returns the same value as the
+  * reference DP; `xlevenshtein` keeps the full table its traceback needs.
   */
 object Edist {
 
@@ -23,15 +25,106 @@ object Edist {
     */
   private val TildePattern = java.util.regex.Pattern.compile("~+")
 
-  /** Levenshtein distance (edist.py:6-19). Rolling single-array DP.
-    * Equal strings short-circuit to 0 (trivially exact) — the common case
-    * in the hot paths that compare support lines/tokens against a master
-    * that the extractor transform did not touch.
+  /** Levenshtein distance (edist.py:6-19). Same value as the reference's
+    * DP, computed bit-parallel when the shorter string fits one 64-bit word
+    * (Myers 1999, in Hyyrö's global-distance form): the shorter string is
+    * the pattern, one column of the DP is held as +1/-1 vertical delta
+    * bit-vectors, and each char of the longer string advances the whole
+    * column in O(1) word operations. Longer pairs run the rolling
+    * single-array DP. Equal strings short-circuit to 0 — the common case in
+    * the hot paths that compare support lines/tokens against a master the
+    * extractor transform did not touch.
     */
   def levenshtein(a0: String, b0: String): Int = {
     if (a0 == b0) return 0
     var a = a0; var b = b0
     if (a.length > b.length) { val t = a; a = b; b = t }
+    if (a.isEmpty) b.length
+    else if (a.length <= 64) bitParallel(a, b)
+    else rollingDp(a, b)
+  }
+
+  /** Per-thread pattern-match table: `ascii(c)` is the bit mask of the
+    * pattern positions holding char c < 128; pattern chars >= 128 go to the
+    * small `hiChars`/`hiMasks` list. Only the entries a call set are
+    * cleared afterwards, so no call allocates or zeroes a full table.
+    */
+  private final class Peq {
+    val ascii = new Array[Long](128)
+    val hiChars = new Array[Char](64)
+    val hiMasks = new Array[Long](64)
+    var nHi = 0
+
+    def set(p: String): Unit = {
+      var i = 0
+      while (i < p.length) {
+        val c = p.charAt(i)
+        val bit = 1L << i
+        if (c < 128) ascii(c) |= bit
+        else {
+          var h = 0
+          while (h < nHi && hiChars(h) != c) h += 1
+          if (h == nHi) { hiChars(h) = c; hiMasks(h) = 0L; nHi += 1 }
+          hiMasks(h) |= bit
+        }
+        i += 1
+      }
+    }
+
+    def eq(c: Char): Long =
+      if (c < 128) ascii(c)
+      else {
+        var h = 0
+        while (h < nHi && hiChars(h) != c) h += 1
+        if (h == nHi) 0L else hiMasks(h)
+      }
+
+    def clear(p: String): Unit = {
+      var i = 0
+      while (i < p.length) {
+        val c = p.charAt(i)
+        if (c < 128) ascii(c) = 0L
+        i += 1
+      }
+      nHi = 0
+    }
+  }
+
+  private val peqs = ThreadLocal.withInitial[Peq](() => new Peq)
+
+  /** Distance for 1 <= p.length <= 64, p the pattern (DP rows), t the text
+    * (DP columns). `pv`/`mv` hold the +1/-1 vertical deltas of the current
+    * column; `score` tracks D[m][j] along the bottom row. Row 0 is
+    * D[0][j] = j, so every column shifts a +1 horizontal delta in at bit 0.
+    */
+  private def bitParallel(p: String, t: String): Int = {
+    val peq = peqs.get
+    peq.set(p)
+    val last = 1L << (p.length - 1)
+    var pv = -1L
+    var mv = 0L
+    var score = p.length
+    var j = 0
+    while (j < t.length) {
+      val e = peq.eq(t.charAt(j))
+      val xv = e | mv
+      val xh = (((e & pv) + pv) ^ pv) | e
+      var ph = mv | ~(xh | pv)
+      var mh = pv & xh
+      if ((ph & last) != 0) score += 1
+      else if ((mh & last) != 0) score -= 1
+      ph = (ph << 1) | 1L
+      mh = mh << 1
+      pv = mh | ~(xv | ph)
+      mv = ph & xv
+      j += 1
+    }
+    peq.clear(p)
+    score
+  }
+
+  /** The reference's rolling DP over the shorter string `a`. */
+  private def rollingDp(a: String, b: String): Int = {
     val n = a.length; val m = b.length
     var current = Array.tabulate(n + 1)(identity)
     var previous = new Array[Int](n + 1)

@@ -21,12 +21,6 @@ import scala.collection.mutable.ArrayBuffer
   */
 object MultiAlign {
 
-  /** Precompiled whitespace splitter (TextNorm's shared Pattern):
-    * alignLineVersions splits once per (word, support extractor) — a
-    * per-call Pattern.compile in the hottest loop without it.
-    */
-  private val WsPattern = TextNorm.WsPattern
-
   /** One word alignment: the master token and, per support extractor, the
     * list of its tokens aligned to that master token.
     */
@@ -38,6 +32,22 @@ object MultiAlign {
     * projection. Returns, for each master char index, the support char
     * indices aligned to it plus insertions attached to the preceding master
     * position.
+    *
+    * Band-limited and exact. With n = |support|, m = |master| and
+    * D = levenshtein(support, master), only the diagonals d = j - i with
+    * |d| + |(n - m) - d| <= D are filled; every other cell reads as
+    * infinity. Any path through diagonal d costs at least that sum (|d| to
+    * reach d from diagonal 0, |(n - m) - d| to reach the end cell), so no
+    * optimal path leaves the band. A band cell's value is the cheapest
+    * in-band path to it, never below its full-table value, and equal to it
+    * on every optimal-path cell (its optimal prefix stays in the band). The
+    * traceback starts at (m, n) and stands only on optimal-path cells. A
+    * neighbour passing an equality test there with its band value passes it
+    * with its full-table value, since neither is below the full-table
+    * value. Conversely, a neighbour passing the full-table test lies on an
+    * optimal path, so it is in the band and holds that value. The two
+    * tables therefore agree on every test the traceback makes, and it takes
+    * the same steps as over the full (m+1)*(n+1) table.
     */
   private def charAlign(support: String, master: String): Array[StringBuilder] = {
     val n = support.length; val m = master.length
@@ -55,29 +65,40 @@ object MultiAlign {
       fast(m) = new StringBuilder
       return fast
     }
-    // buckets(i) collects support chars aligned to master char i (0..m-1);
-    // buckets(m) holds leading insertions (attached to position 0 later).
-    // Flat row-major DP + lazily-created buckets: this runs once per
-    // (line, support extractor) in the hot path, so the (m+1)*(n+1)
-    // 2-D allocation and m+1 eager StringBuilders were measurable garbage.
-    val w = n + 1
+    // band of diagonals [lo, hi], clamped to the table; cell (i, j) lives at
+    // i * w + (j - i - lo) in row-major banded storage
+    val delta0 = n - m
+    val slack = (Edist.levenshtein(support, master) - math.abs(delta0)) / 2
+    val lo = math.max(math.min(0, delta0) - slack, -m)
+    val hi = math.min(math.max(0, delta0) + slack, n)
+    val w = hi - lo + 1
     val dp = new Array[Int]((m + 1) * w)
+    val Inf = Int.MaxValue / 2
+    def at(i: Int, j: Int): Int = {
+      val k = j - i - lo
+      if (k < 0 || k >= w) Inf else dp(i * w + k)
+    }
     var j = 0
-    while (j <= n) { dp(j) = j; j += 1 }
+    while (j <= hi) { dp(j - lo) = j; j += 1 }
     var i = 1
     while (i <= m) {
       val row = i * w; val prev = row - w
-      dp(row) = i
       val mc = master.charAt(i - 1)
-      var jj = 1
-      while (jj <= n) {
+      var jj = math.max(0, i + lo)
+      if (jj == 0) { dp(row - i - lo) = i; jj = 1 }
+      val jEnd = math.min(n, i + hi)
+      while (jj <= jEnd) {
+        val k = jj - i - lo
         val delta = if (support.charAt(jj - 1) != mc) 1 else 0
-        dp(row + jj) = math.min(dp(prev + jj) + 1,
-          math.min(dp(row + jj - 1) + 1, dp(prev + jj - 1) + delta))
+        val up = if (k + 1 < w) dp(prev + k + 1) + 1 else Inf
+        val left = if (k > 0) dp(row + k - 1) + 1 else Inf
+        dp(row + k) = math.min(up, math.min(left, dp(prev + k) + delta))
         jj += 1
       }
       i += 1
     }
+    // buckets(i) collects the support chars aligned to master char i;
+    // created lazily, as this runs once per (line, support) in the hot path
     val buckets = new Array[StringBuilder](m + 1)
     def bucket(k: Int): StringBuilder = {
       if (buckets(k) == null) buckets(k) = new StringBuilder
@@ -88,10 +109,10 @@ object MultiAlign {
     var ii = m; var jj = n
     while (ii > 0 || jj > 0) {
       val delta = if (ii > 0 && jj > 0 && support.charAt(jj - 1) != master.charAt(ii - 1)) 1 else 0
-      if (ii > 0 && jj > 0 && dp(ii * w + jj) == dp((ii - 1) * w + jj - 1) + delta) {
+      if (ii > 0 && jj > 0 && at(ii, jj) == at(ii - 1, jj - 1) + delta) {
         bucket(ii - 1).append(support.charAt(jj - 1))
         ii -= 1; jj -= 1
-      } else if (ii > 0 && dp(ii * w + jj) == dp((ii - 1) * w + jj) + 1) {
+      } else if (ii > 0 && at(ii, jj) == at(ii - 1, jj) + 1) {
         ii -= 1 // deletion: master char with no support char
       } else {
         // insertion: support char attached to current master position
@@ -133,7 +154,7 @@ object MultiAlign {
         val sb = new StringBuilder
         var i = ws
         while (i < we) { sb.append(buckets(i)); i += 1 }
-        WsPattern.split(sb).toSeq.filter(_.nonEmpty)
+        TextNorm.splitWs(sb)
       }
       WordAlignment(w, aligned)
     }
@@ -171,8 +192,8 @@ object MultiAlign {
 
   private def matchTokensLev(tokens: Seq[String], regions: IndexedSeq[String], i: Int): Int =
     matchTokensLambda(tokens, regions, i, (a, b) => {
-      val d = Edist.levenshtein(a, b)
-      d <= 1 || d <= 3 // align/cli.py:211-217 (k = 3)
+      // align/cli.py:211-217 tests d <= 1 or d <= k with k = 3: just d <= 3
+      Edist.levenshtein(a, b) <= 3
     })
 
   /** find_word (align/cli.py:174-201): locate the token sequence in the word
@@ -243,10 +264,10 @@ object MultiAlign {
     // word streams; findWord consumes a prefix of each. Offsets track each
     // stream's drop count so matched words map back to their original
     // token index for the per-word confidence lineage.
-    var mwords: IndexedSeq[String] = WsPattern.split(master.text).toIndexedSeq.filter(_.nonEmpty)
+    var mwords: IndexedSeq[String] = TextNorm.splitWs(master.text)
     var mOff = 0
     val owords = Array.tabulate(versions.length - 1) { i =>
-      WsPattern.split(versions(i + 1).text).toIndexedSeq.filter(_.nonEmpty)
+      TextNorm.splitWs(versions(i + 1).text)
     }
     val oOff = new Array[Int](versions.length - 1)
     val outWords = ArrayBuffer[AlignedWord]()

@@ -15,12 +15,26 @@ import java.text.Normalizer
   */
 object TextNorm {
 
-  /** Precompiled whitespace splitter — String.split("\\s+") pays a
-    * Pattern.compile per call (only single-char literals take the JDK
-    * fast path). Shared with MultiAlign's hot alignment loop;
-    * Pattern.split is semantics-identical to String.split.
+  /** The non-empty runs of non-whitespace chars of `s`, whitespace being
+    * Java regex `\s` (` \t\n\x0B\f\r`): the tokens of
+    * `s.split("\\s+").filter(_.nonEmpty)` for any input, without a regex.
+    * Shared with MultiAlign's hot alignment loop.
     */
-  private[core] val WsPattern = java.util.regex.Pattern.compile("\\s+")
+  def splitWs(s: CharSequence): IndexedSeq[String] = {
+    val out = scala.collection.immutable.ArraySeq.newBuilder[String]
+    val n = s.length
+    var i = 0
+    while (i < n) {
+      while (i < n && isWs(s.charAt(i))) i += 1
+      val start = i
+      while (i < n && !isWs(s.charAt(i))) i += 1
+      if (i > start) out += s.subSequence(start, i).toString
+    }
+    out.result()
+  }
+
+  private def isWs(c: Char): Boolean =
+    c == ' ' || c == '\t' || c == '\n' || c == '\u000b' || c == '\f' || c == '\r'
 
   /** Replacement table, ported verbatim from ocrolib/chars.py:42-65
     * (`replacements`). Order matters: applied sequentially like the
@@ -129,7 +143,7 @@ object TextNorm {
   def tokenize(text: String): Seq[String] = {
     val noDigits = text.replace("\n", " ").replace("\r", "").filterNot(_.isDigit)
     val noPunct = noDigits.map(c => if (isAsciiPunct(c)) ' ' else c)
-    WsPattern.split(noPunct.toLowerCase.trim).toSeq.filter(_.nonEmpty)
+    splitWs(noPunct.toLowerCase.trim)
   }
 
   /** string.punctuation from CPython — the exact set the reference's

@@ -290,10 +290,9 @@ object Pipeline {
       val mx = math.max(master.text.length, v.text.length).max(1)
       1.0 - Edist.levenshtein(master.text, v.text).toDouble / mx
     }.maxOption.getOrElse(1.0)
-    val wordByIdx: Map[Int, AlignedWord] =
-      line.words.zipWithIndex.map { case (w, i) => i -> w }.toMap
+    val words = line.words.toIndexedSeq
     tokens.zipWithIndex.map { case (tok, i) =>
-      val word = wordByIdx.get(i)
+      val word = words.lift(i)
       TokenInput(tok,
         word.map(_.variants.drop(1).map(_.text)).getOrElse(Nil),
         word.map(_.variants.head.conf).getOrElse(master.conf),

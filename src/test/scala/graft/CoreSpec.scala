@@ -1,6 +1,7 @@
 package graft
 
 import graft.core._
+import graft.pipeline.Pipeline
 import org.scalatest.funsuite.AnyFunSuite
 
 class TextNormSpec extends AnyFunSuite {
@@ -50,6 +51,18 @@ class TextNormSpec extends AnyFunSuite {
   test("tokenize: digits/punct stripped, lowered (aio.py:454-460)") {
     assert(TextNorm.tokenize("Hello, World! 123 foo-bar") ==
       Seq("hello", "world", "foo", "bar"))
+  }
+  test("splitWs yields the regex \\s+ split's non-empty tokens (fuzz)") {
+    val ws = java.util.regex.Pattern.compile("\\s+")
+    val rng = new java.util.Random(20261017L)
+    // Java's \s set, plus Unicode spaces and controls it does not match
+    val alphabet = "ab \t\n\u000b\f\r\u001c\u00a0\u2003\u0085ä"
+    (0 until 5000).foreach { _ =>
+      val s = Seq.fill(rng.nextInt(20))(alphabet.charAt(rng.nextInt(alphabet.length))).mkString
+      val want = ws.split(s).toSeq.filter(_.nonEmpty)
+      assert(TextNorm.splitWs(s) == want, s.map(_.toInt).mkString("[", ",", "]"))
+      assert(TextNorm.splitWs(new StringBuilder(s)) == want)
+    }
   }
   test("detectLanguage: stopword overlap argmax (aio.py:462-477)") {
     val sw = Seq(
@@ -169,6 +182,112 @@ class MultiAlignSpec extends AnyFunSuite {
     assert(w1.variants.head.source.startsWith("ocrd-cis-word-alignment-master-ocr:x-master/"))
     assert(w1.variants(1).text == "quiek")
     assert(w1.variants(1).source.startsWith("ocrd-cis-word-alignment:x-alt/"))
+  }
+}
+
+/** The band-limited `charAlign` against a test-local copy of the
+  * full-table aligner it replaced: same DP over the whole
+  * (m+1) x (n+1) table, same traceback, same word projection with the
+  * regex whitespace split. `alignLineVersions` must give the same word
+  * alignments on every input.
+  */
+class AlignDifferentialSpec extends AnyFunSuite {
+  import MultiAlign._
+
+  private val WsRegex = java.util.regex.Pattern.compile("\\s+")
+
+  private def fullTableCharAlign(support: String, master: String): Array[StringBuilder] = {
+    val n = support.length; val m = master.length
+    val dp = Array.ofDim[Int](m + 1, n + 1)
+    for (j <- 0 to n) dp(0)(j) = j
+    for (i <- 1 to m) {
+      dp(i)(0) = i
+      for (j <- 1 to n) {
+        val delta = if (support.charAt(j - 1) != master.charAt(i - 1)) 1 else 0
+        dp(i)(j) = math.min(dp(i - 1)(j) + 1, math.min(dp(i)(j - 1) + 1, dp(i - 1)(j - 1) + delta))
+      }
+    }
+    val buckets = Array.fill(m + 1)(new StringBuilder)
+    var ii = m; var jj = n
+    while (ii > 0 || jj > 0) {
+      val delta = if (ii > 0 && jj > 0 && support.charAt(jj - 1) != master.charAt(ii - 1)) 1 else 0
+      if (ii > 0 && jj > 0 && dp(ii)(jj) == dp(ii - 1)(jj - 1) + delta) {
+        buckets(ii - 1).insert(0, support.charAt(jj - 1))
+        ii -= 1; jj -= 1
+      } else if (ii > 0 && dp(ii)(jj) == dp(ii - 1)(jj) + 1) {
+        ii -= 1
+      } else {
+        buckets(if (ii == 0) 0 else ii - 1).insert(0, support.charAt(jj - 1))
+        jj -= 1
+      }
+    }
+    buckets
+  }
+
+  private def fullTableAlignLineVersions(versions: Seq[String]): Seq[WordAlignment] = {
+    val master = versions.head
+    if (master.isEmpty) return Nil
+    val ranges = scala.collection.mutable.ArrayBuffer[(Int, Int, String)]()
+    var pos = 0
+    master.split(" ", -1).foreach { w =>
+      if (w.nonEmpty) ranges += ((pos, pos + w.length, w))
+      pos += w.length + 1
+    }
+    val supports = versions.tail.map { s =>
+      if (s.isEmpty) Array.fill(master.length + 1)(new StringBuilder)
+      else fullTableCharAlign(s, master)
+    }
+    ranges.toSeq.map { case (ws, we, w) =>
+      WordAlignment(w, supports.map { buckets =>
+        WsRegex.split((ws until we).map(buckets(_)).mkString).toSeq.filter(_.nonEmpty)
+      })
+    }
+  }
+
+  private def assertSame(versions: Seq[String]): Unit = {
+    val got = alignLineVersions(versions)
+    val want = fullTableAlignLineVersions(versions)
+    assert(got == want, s"versions ${versions.map(v => s"[$v]").mkString(" vs ")}")
+  }
+
+  test("alignLineVersions equals the full-table aligner on 12k seeded random pairs") {
+    val pairs = EdistSpec.randomPairs(12000, 20261018L)
+    pairs.foreach { case (master, support) => assertSame(Seq(master, support)) }
+    pairs.grouped(2).foreach {
+      case Seq((m, s1), (_, s2)) => assertSame(Seq(m, s1, s2))
+      case _ =>
+    }
+  }
+
+  test("alignLineVersions equals the full-table aligner on the lines of Pipeline.generate(spark, 2000)") {
+    val pages = Pipeline.generate(SparkTestSession.spark, 2000).collect()
+    var lines = 0
+    pages.foreach { p =>
+      val texts = Pipeline.segmentPage(p).blocks.filter(_.kind == "text").map(_.text)
+      val versions = texts.map(t => Pipeline.extractors.map(ex => TextNorm.normalize(ex.transform(t))))
+      versions.foreach { v => assertSame(v); lines += 1 }
+      // neighbouring lines as master/support: far pairs with real words
+      versions.zip(versions.drop(1)).foreach { case (a, b) => assertSame(Seq(a.head, b.head)) }
+    }
+    assert(lines > 2000)
+  }
+
+  test("alignLineVersions edge cases match the full-table aligner") {
+    val master = "the quick brown fox"
+    Seq(
+      Seq(master, ""), // empty support
+      Seq(master, master + " jumps over"), // support longer
+      Seq(master, "the quick"), // support shorter
+      Seq(master, "xyz " + master), // leading insertions: bucket m -> slot 0
+      Seq(master, "  " + master), // leading whitespace insertions
+      Seq(master, "ZZZ ZZZZZ ZZZZZ ZZZ"), // all-mismatch, same length
+      Seq(master, "QQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQ"), // all-mismatch, longer
+      Seq("a", "bbbbbbbbbb"), Seq("aaaaaaaaaa", "b"), Seq("ä", "a"),
+      Seq(master * 5, (master * 5).reverse), // over 64 chars both sides
+      Seq(master, master.replace("c", "e"), "")
+    ).foreach(assertSame)
+    val lead = alignLineVersions(Seq("ab", "xyab"))
+    assert(lead.head.alignments.head == Seq("xyab"))
   }
 }
 

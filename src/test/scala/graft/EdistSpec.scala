@@ -122,4 +122,69 @@ class EdistSpec extends AnyFunSuite {
       case _ =>
     }
   }
+
+  /** Full-table Levenshtein DP, the textbook recurrence over the whole
+    * (|a|+1) x (|b|+1) table: the reference the kernel is checked against.
+    */
+  private def fullTableLevenshtein(a: String, b: String): Int = {
+    val d = Array.ofDim[Int](a.length + 1, b.length + 1)
+    for (i <- 0 to a.length) d(i)(0) = i
+    for (j <- 0 to b.length) d(0)(j) = j
+    for (i <- 1 to a.length; j <- 1 to b.length) {
+      val sub = if (a.charAt(i - 1) == b.charAt(j - 1)) 0 else 1
+      d(i)(j) = math.min(d(i - 1)(j - 1) + sub, math.min(d(i - 1)(j), d(i)(j - 1)) + 1)
+    }
+    d(a.length)(b.length)
+  }
+
+  test("levenshtein equals a full-table DP on 12k seeded pairs across the 64-char word") {
+    val pairs = EdistSpec.randomPairs(12000, 20261017L) ++ Seq(
+      ("", ""), ("", "a"), ("ä", ""), ("säugetiere", "säugethiere"), ("säugetiere", "saugetiere"),
+      ("a" * 64, "a" * 64), ("a" * 64, "b" * 64), ("a" * 63 + "ä", "a" * 65), ("ä" * 64, "ä" * 65),
+      ("d" * 10, "ä" * 10), ("Ā" * 5, "\u0000" * 5), ("x" * 140, ""), ("ab" * 70, "ba" * 70))
+    var checked = 0
+    pairs.foreach { case (a, b) =>
+      val want = fullTableLevenshtein(a, b)
+      assert(Edist.levenshtein(a, b) == want, s"lev(${a.length}: $a, ${b.length}: $b)")
+      assert(Edist.levenshtein(b, a) == want, s"lev(${b.length}: $b, ${a.length}: $a)")
+      checked += 1
+    }
+    val lens = pairs.map { case (a, b) => math.min(a.length, b.length) }
+    assert(checked >= 10000)
+    assert(lens.exists(_ <= 64) && lens.exists(_ > 64), "pairs must cross the 64-char word")
+    assert(pairs.exists { case (a, b) => a == b && a.nonEmpty })
+  }
+}
+
+object EdistSpec {
+
+  /** Seeded random string pairs over an alphabet with a space, ASCII 'd'
+    * and non-ASCII chars whose low seven bits collide with it ('ä' is
+    * 0xE4, 'd' is 0x64) or are zero ('Ā' is 0x100). Lengths run 0-140. A
+    * third of the pairs are independent strings; the rest are a string and
+    * a copy with 0-8 random edits (equal strings included), the regime of
+    * OCR line versions.
+    */
+  def randomPairs(n: Int, seed: Long): Seq[(String, String)] = {
+    val rng = new java.util.Random(seed)
+    val alphabet = "ab cä edĀ"
+    def char(): Char = alphabet.charAt(rng.nextInt(alphabet.length))
+    def string(len: Int): String = Seq.fill(len)(char()).mkString
+    def mutate(s: String): String = {
+      val sb = new StringBuilder(s)
+      (0 until rng.nextInt(9)).foreach { _ =>
+        val at = if (sb.isEmpty) 0 else rng.nextInt(sb.length)
+        rng.nextInt(3) match {
+          case 0 => sb.insert(at, char())
+          case 1 => if (sb.nonEmpty) sb.deleteCharAt(at)
+          case _ => if (sb.nonEmpty) sb.setCharAt(at, char())
+        }
+      }
+      sb.toString
+    }
+    Seq.fill(n) {
+      val a = string(rng.nextInt(141))
+      if (rng.nextInt(3) == 0) (a, string(rng.nextInt(141))) else (a, mutate(a))
+    }
+  }
 }
