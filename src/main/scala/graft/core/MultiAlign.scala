@@ -33,21 +33,22 @@ object MultiAlign {
     * indices aligned to it plus insertions attached to the preceding master
     * position.
     *
-    * Band-limited and exact. With n = |support|, m = |master| and
-    * D = levenshtein(support, master), only the diagonals d = j - i with
-    * |d| + |(n - m) - d| <= D are filled; every other cell reads as
-    * infinity. Any path through diagonal d costs at least that sum (|d| to
-    * reach d from diagonal 0, |(n - m) - d| to reach the end cell), so no
-    * optimal path leaves the band. A band cell's value is the cheapest
-    * in-band path to it, never below its full-table value, and equal to it
-    * on every optimal-path cell (its optimal prefix stays in the band). The
-    * traceback starts at (m, n) and stands only on optimal-path cells. A
+    * Band-limited and exact. With n = |support|, m = |master| and D =
+    * levenshtein(support, master), only the diagonals d = j - i with |d| +
+    * |(n - m) - d| <= D are filled and stored, at most min(n + 1, band width)
+    * cells per row, so the storage never exceeds the full table; every other
+    * cell reads as infinity. Any path through diagonal d costs at least that
+    * sum (|d| to reach d from diagonal 0, |(n - m) - d| to reach the end
+    * cell), so no optimal path leaves the band. A band cell's value is the
+    * cheapest in-band path to it, never below its full-table value, and equal
+    * to it on every optimal-path cell (its optimal prefix stays in the band).
+    * The traceback starts at (m, n) and stands only on optimal-path cells. A
     * neighbour passing an equality test there with its band value passes it
-    * with its full-table value, since neither is below the full-table
-    * value. Conversely, a neighbour passing the full-table test lies on an
-    * optimal path, so it is in the band and holds that value. The two
-    * tables therefore agree on every test the traceback makes, and it takes
-    * the same steps as over the full (m+1)*(n+1) table.
+    * with its full-table value, since neither is below the full-table value.
+    * Conversely, a neighbour passing the full-table test lies on an optimal
+    * path, so it is in the band and holds that value. The two tables
+    * therefore agree on every test the traceback makes, and it takes the same
+    * steps as over the full (m+1)*(n+1) table.
     */
   private def charAlign(support: String, master: String): Array[StringBuilder] = {
     val n = support.length; val m = master.length
@@ -65,34 +66,36 @@ object MultiAlign {
       fast(m) = new StringBuilder
       return fast
     }
-    // band of diagonals [lo, hi], clamped to the table; cell (i, j) lives at
-    // i * w + (j - i - lo) in row-major banded storage
+    // band of diagonals [lo, hi], clamped to the table. Row i stores its
+    // band columns c0 = max(0, i + lo) .. min(n, i + hi) from i * w on;
+    // w = min(hi - lo + 1, n + 1) bounds every row, so the storage never
+    // exceeds the full (m+1)*(n+1) table
     val delta0 = n - m
     val slack = (Edist.levenshtein(support, master) - math.abs(delta0)) / 2
     val lo = math.max(math.min(0, delta0) - slack, -m)
     val hi = math.min(math.max(0, delta0) + slack, n)
-    val w = hi - lo + 1
+    val w = math.min(hi - lo + 1, n + 1)
     val dp = new Array[Int]((m + 1) * w)
     val Inf = Int.MaxValue / 2
     def at(i: Int, j: Int): Int = {
-      val k = j - i - lo
-      if (k < 0 || k >= w) Inf else dp(i * w + k)
+      val c0 = math.max(0, i + lo)
+      if (j < c0 || j > i + hi) Inf else dp(i * w + j - c0)
     }
     var j = 0
-    while (j <= hi) { dp(j - lo) = j; j += 1 }
+    while (j <= hi) { dp(j) = j; j += 1 }
     var i = 1
     while (i <= m) {
-      val row = i * w; val prev = row - w
+      val c0 = math.max(0, i + lo)
+      val row = i * w - c0; val prev = (i - 1) * w - math.max(0, i - 1 + lo)
       val mc = master.charAt(i - 1)
-      var jj = math.max(0, i + lo)
-      if (jj == 0) { dp(row - i - lo) = i; jj = 1 }
+      var jj = c0
+      if (jj == 0) { dp(row) = i; jj = 1 }
       val jEnd = math.min(n, i + hi)
       while (jj <= jEnd) {
-        val k = jj - i - lo
         val delta = if (support.charAt(jj - 1) != mc) 1 else 0
-        val up = if (k + 1 < w) dp(prev + k + 1) + 1 else Inf
-        val left = if (k > 0) dp(row + k - 1) + 1 else Inf
-        dp(row + k) = math.min(up, math.min(left, dp(prev + k) + delta))
+        val up = if (jj < i + hi) dp(prev + jj) + 1 else Inf
+        val left = if (jj > c0) dp(row + jj - 1) + 1 else Inf
+        dp(row + jj) = math.min(up, math.min(left, dp(prev + jj - 1) + delta))
         jj += 1
       }
       i += 1

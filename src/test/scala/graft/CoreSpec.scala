@@ -284,7 +284,9 @@ class AlignDifferentialSpec extends AnyFunSuite {
       Seq(master, "QQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQQ"), // all-mismatch, longer
       Seq("a", "bbbbbbbbbb"), Seq("aaaaaaaaaa", "b"), Seq("ä", "a"),
       Seq(master * 5, (master * 5).reverse), // over 64 chars both sides
-      Seq(master, master.replace("c", "e"), "")
+      Seq(master, master.replace("c", "e"), ""),
+      Seq(master * 60, "q"), Seq(master * 60, "x fox"), // long master, tiny support
+      Seq("q", master * 60) // tiny master, long support
     ).foreach(assertSame)
     val lead = alignLineVersions(Seq("ab", "xyab"))
     assert(lead.head.alignments.head == Seq("xyab"))

@@ -2,19 +2,24 @@
 """Alternating parent/change benchmark pairs, with the gain verdict.
 
     python3 tools/perf_ab.py --parent <checkout> --change <checkout> \\
-        --workload <name> --pairs 10 --seed0 71 [--seconds 8]
+        --workload <name> --pairs 10 --seed0 71
 
 Pair k runs `perfbench/run.py --workload <name> --seed <seed0 + k>
 --seconds <s> --trace 0` once in each checkout, each side with its own
-perfbench and build. The side that runs first alternates between pairs, so
-a drift of the host over the runs falls on both sides alike. Nothing in
-either checkout is edited.
+perfbench and build; <s> is the run_seconds of the parent's BENCHMARK.json,
+so both sides run as long as the benchmark sets. The side that runs first
+alternates between pairs, so a drift of the host over the runs falls on both
+sides alike. Nothing in either checkout is edited.
 
 For every end-to-end metric of the parent's BENCHMARK.json it prints each
 side's median and quartiles, the change's wins (ties count for neither
 side), the median change against the metric's regression bound, and the
-gain verdict: the change wins at least nine tenths of the pairs and its
+verdict. "gain": the change wins at least nine tenths of the pairs and its
 median beats the parent's by more than the parent's interquartile range.
+"worse than bound": the change's median is worse than the parent's by more
+than the bound. "unresolved": either side's interquartile range, relative to
+its median, is wider than the bound and not every change run beats every
+parent run, so the runs cannot tell. "no claim": none of these.
 Every run's own result line goes to stderr as it finishes. The exit status
 is 1 when any run failed or reported a failed check.
 """
@@ -65,10 +70,16 @@ def summarize(spec, pairs):
         gap = (pmed - cmed) if lower else (cmed - pmed)
         rel = (cmed - pmed) / pmed if pmed else 0.0
         worse = -gap / pmed if pmed else 0.0
+        bound = m.get("bound", float("inf"))
+        spread = max((pq3 - pq1) / pmed if pmed else 0.0,
+                     (cq3 - cq1) / cmed if cmed else 0.0)
+        all_better = max(cs) < min(ps) if lower else min(cs) > max(ps)
         if wins >= 0.9 * len(done) and gap > pq3 - pq1:
             verdict = "gain"
-        elif worse > m.get("bound", float("inf")):
+        elif worse > bound:
             verdict = "worse than bound"
+        elif spread > bound and not all_better:
+            verdict = "unresolved"
         else:
             verdict = "no claim"
         print(f"{name:<18}{pq1:>10.4g}{pmed:>10.4g}{pq3:>10.4g}{cq1:>10.4g}{cmed:>10.4g}{cq3:>10.4g}"
@@ -82,13 +93,11 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seed0", type=int, required=True, help="pair k runs seed seed0 + k")
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="run length (default: run_seconds of the parent's BENCHMARK.json)")
     args = ap.parse_args()
     parent, change = os.path.abspath(args.parent), os.path.abspath(args.change)
     with open(os.path.join(parent, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    seconds = args.seconds if args.seconds is not None else spec["run_seconds"]
+    seconds = spec["run_seconds"]
 
     pairs, bad = [], 0
     for k in range(args.pairs):
