@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session bootstrap for the driver-facing mains (Smoke / Verify / Bench /
-  * ReTime / Train).
+  * ReTime / Train / SoloBench / StageBench).
   *
   * Standalone (sbt runMain, no master configured): build `local[cpus]`
   * with `spark.sql.shuffle.partitions = cpus` — the sandbox contract.

@@ -1,7 +1,8 @@
 package graft
 
 import graft.core._
-import graft.operators.Dedup
+import graft.operators.{Dedup, VectorOps}
+import graft.operators.Dedup.md5Utf8
 import graft.pipeline.Pipeline
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession, Column}
@@ -118,8 +119,7 @@ object SparkEntry {
     * near-dup shingles and q08's set-difference shingles, so the two
     * spellings cannot drift (both oracles mirror this expression).
     */
-  private def shingle12Stride7: Column = array_distinct(expr(
-    "transform(sequence(1, greatest(length(text) - 11, 1), 7), i -> substring(text, i, 12))"))
+  private def shingle12Stride7: Column = array_distinct(Dedup.shingles(12, 7))
 
   /** q16's exact shingle-Jaccard near-dup pairs (τ=0.5), shared with
     * q78's recall gate so the truth derivation can never desync from the
@@ -216,8 +216,7 @@ object SparkEntry {
     * split of a pair's endpoints from the ids alone, no doc join.
     */
   private def splitBucketOf(id: Column): Column =
-    conv(substring(md5(to_binary(
-      concat(lit("split:"), id.cast("string")), lit("utf-8"))),
+    conv(substring(md5Utf8(concat(lit("split:"), id.cast("string"))),
       1, 4), 16, 10).cast("long") % 10
 
   /** The split label over [[splitBucket]]'s `b` column — ONE definition
@@ -311,25 +310,27 @@ object SparkEntry {
     concat(schemeHost, path, query)
   }
 
-  /** Row-local distinct 24-char shingles (the decontamination n-gram). */
-  private def shingle24: Column = expr(
-    "transform(sequence(1, greatest(length(text) - 23, 1)), i -> substring(text, i, 24))")
-
-  /** 24-char-shingle contamination set: train-split docs (b < 8) sharing
-    * ANY shingle with the held-out test split (b = 9). Shared by q62/q73
-    * (q61 keeps its per-doc hit-count variant on the same [[shingle24]]).
-    * `docs` must carry (doc_id, text, b). Scale shape: the benchmark
-    * side's distinct shingles BROADCAST; the train side dedupes its
-    * shingles row-locally before the semi-join.
+  /** 24-char-shingle decontamination hits (sh, doc_id): one row per
+    * train-split doc (b < 8) and distinct shingle it shares with the
+    * held-out test split (b = 9). `docs` must carry (doc_id, text, b).
+    * Scale shape: the benchmark side's distinct shingles BROADCAST; the
+    * train side dedupes its shingles row-locally before the semi-join.
+    * q61 counts the hits per doc; [[contaminatedTrainDocs]] keeps the
+    * doc ids.
     */
-  private[graft] def contaminatedTrainDocs(docs: DataFrame): DataFrame = {
+  private def decontamHits(docs: DataFrame): DataFrame = {
     val testSh = docs.filter(col("b") === 9)
-      .select(explode(array_distinct(shingle24)).as("sh")).distinct()
+      .select(explode(array_distinct(Dedup.shingles(24))).as("sh")).distinct()
     docs.filter(col("b") < 8)
-      .select(col("doc_id"), explode(array_distinct(shingle24)).as("sh"))
+      .select(col("doc_id"), explode(array_distinct(Dedup.shingles(24))).as("sh"))
       .join(broadcast(testSh), Seq("sh"))
-      .select(col("doc_id")).distinct()
   }
+
+  /** 24-char-shingle contamination set: train-split docs sharing ANY
+    * shingle with the test split ([[decontamHits]]). Shared by q62/q73.
+    */
+  private[graft] def contaminatedTrainDocs(docs: DataFrame): DataFrame =
+    decontamHits(docs).select(col("doc_id")).distinct()
 
   /** The q64 chunk-dedup core, shared with the volume-linearity bench
     * ([[graft.tools.ChunkDedupBench]]) so the recorded numbers always
@@ -875,7 +876,7 @@ object SparkEntry {
     // path for lev(a,b) <= k predicates; codegen-compatible, see
     // graft.functions.BoundedLevenshtein)
     "q39_bounded_lev" -> ((s, dir) => {
-      graft.functions.BoundedLevenshtein.register(s)
+      graft.functions.SqlFunctions.register(s)
       t(s, dir, "nation").crossJoin(t(s, dir, "region"))
         .select(col("n_name"), col("r_name"),
           expr("graft_lev_bounded(n_name, r_name, 3)").as("bd"))
@@ -1011,19 +1012,9 @@ object SparkEntry {
     // SimHash document signatures: 32-bit sketch from the per-nibble high
     // bit of each token's md5, majority-voted across tokens. Shuffle-free
     // except one hash-agg on doc_id (map-side partials).
-    "q19_simhash" -> ((s, dir) => {
-      def md5s(c: Column): Column = md5(to_binary(c, lit("utf-8")))
-      val hashed = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-        .filter(length(col("tok")) > 0)
-        .select(col("doc_id"), md5s(col("tok")).as("h"))
-      def bit(k: Int): Column =
-        when(sum(when(substring(col("h"), k, 1) >= "8", 1).otherwise(-1)) >= 0,
-          "1").otherwise("0")
-      hashed.groupBy(col("doc_id"))
-        .agg(concat((1 to 32).map(bit): _*).as("simhash"))
-        .orderBy(col("doc_id"))
-    }),
+    "q19_simhash" -> ((s, dir) =>
+      simhashSigs(t(s, dir, "documents")).withColumnRenamed("sh", "simhash")
+        .orderBy(col("doc_id"))),
 
     // SimHash PAIRING stage: band the 32-bit signatures into 4 bytes,
     // equi-join on any equal band (Hamming-ball candidates: distance <= 3
@@ -1031,7 +1022,7 @@ object SparkEntry {
     // Hamming distance via bit_count(xor). Same banded-join scale shape
     // as q18 — no all-pairs comparison ever materializes.
     "q44_simhash_pairs" -> ((s, dir) =>
-      simhashBandJoined(simhashSigs(s, dir))
+      simhashBandJoined(simhashSigs(tp(s, dir, "documents")))
         .withColumn("hamming", simhashHamming)
         .filter(col("hamming") <= 2)
         .select(col("id1"), col("id2"), col("hamming")).distinct()
@@ -1048,7 +1039,7 @@ object SparkEntry {
     // 32-bit signatures (broadcast BNLJ — signatures are tiny; the
     // all-pairs side runs on a q58 sample at 100 TB).
     "q81_simhash_recall" -> ((s, dir) => {
-      val sig = simhashSigs(s, dir)
+      val sig = simhashSigs(tp(s, dir, "documents"))
       val joined = simhashBandJoined(sig)
       val hits = joined.withColumn("hamming", simhashHamming)
         .filter(col("hamming") <= 2)
@@ -1075,7 +1066,7 @@ object SparkEntry {
       // cosine via the codegen'd CosineSim expression (one fused pass over
       // the raw FLOAT arrays, bitwise-equal to the HOF fold it replaced —
       // HOFs are CodegenFallback and re-walk the arrays three times)
-      graft.functions.CosineSim.register(s)
+      graft.functions.SqlFunctions.register(s)
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -1097,12 +1088,10 @@ object SparkEntry {
     "q21_ann_lsh" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings").select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
-      def bandKey(j: Int): Column = concat((1 to 16).map(i =>
-        when(element_at(col("v"), 16 * j + i) >= 0, "1").otherwise("0")): _*)
       val banded = emb.select(col("vec_id"), col("v"),
-        posexplode(array((0 to 3).map(bandKey): _*)))
+        VectorOps.signBands(col("v"), 16, 4))
         .toDF("vec_id", "v", "band", "key")
-      graft.functions.CosineSim.register(s)
+      graft.functions.SqlFunctions.register(s)
       val a = banded.select(col("band"), col("key"), col("vec_id").as("id1"), col("v").as("v1"))
       val c = banded.select(col("band"), col("key"), col("vec_id").as("id2"), col("v").as("v2"))
       a.join(c, Seq("band", "key")).filter(col("id1") < col("id2"))
@@ -1125,7 +1114,7 @@ object SparkEntry {
     // ordering (d2, cid) gives the d2-asc/cid-asc tie rule for free. Only
     // the probe→cell equi-join and the final tiny top-k window shuffle.
     "q40_ann_ivf" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s) // registers graft_cosine + graft_sqdist
+      graft.functions.SqlFunctions.register(s)
       val emb = t(s, dir, "embeddings").select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
       val k = math.max(8L, math.ceil(math.sqrt(
@@ -1161,12 +1150,8 @@ object SparkEntry {
     // selection of grams whose md5 starts with '0' (1/16 sampling) —
     // content-defined, shift-robust fingerprints.
     "q22_fingerprint" -> ((s, dir) => {
-      def md5s(c: Column): Column = md5(to_binary(c, lit("utf-8")))
-      tp(s, dir, "documents").select(col("doc_id"),
-        explode(expr(
-          "transform(sequence(1, greatest(length(text) - 7, 1)), i -> substring(text, i, 8))"
-        )).as("g"))
-        .select(col("doc_id"), md5s(col("g")).as("h"))
+      tp(s, dir, "documents").select(col("doc_id"), explode(Dedup.shingles(8)).as("g"))
+        .select(col("doc_id"), md5Utf8(col("g")).as("h"))
         .filter(col("h").startsWith("0"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_fp"), min(col("h")).as("min_fp"))
@@ -1215,7 +1200,7 @@ object SparkEntry {
       // SAME keeper row per text hash, but partials fold per partition
       // before the h exchange and the per-group sort disappears
       quality.join(contaminated, Seq("doc_id"), "left_anti")
-        .withColumn("h", md5(to_binary(col("text"), lit("utf-8"))))
+        .withColumn("h", md5Utf8(col("text")))
         .groupBy(col("h"))
         .agg(min_by(struct(col("split"), col("lang"), col("n_tokens")),
           col("doc_id")).as("kp"))
@@ -1250,12 +1235,7 @@ object SparkEntry {
     // row-locally (array_distinct, no pre-shuffle) and the per-doc hit
     // count partial-aggregates in place after the broadcast semi-join.
     "q61_decontam" -> ((s, dir) => {
-      val docs = tp(s, dir, "documents").withColumn("b", splitBucket)
-      val testSh = docs.filter(col("b") === 9)
-        .select(explode(array_distinct(shingle24)).as("sh")).distinct()
-      docs.filter(col("b") < 8)
-        .select(col("doc_id"), explode(array_distinct(shingle24)).as("sh"))
-        .join(broadcast(testSh), Seq("sh"))
+      decontamHits(tp(s, dir, "documents").withColumn("b", splitBucket))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
         .orderBy(col("doc_id"))
     }),
@@ -1304,7 +1284,7 @@ object SparkEntry {
       val docs = tp(s, dir, "documents").withColumn("b", splitBucket)
       val contaminated = contaminatedTrainDocs(docs).withColumn("contam", lit(true))
       val flagged = withRepetitionStats(docs)
-        .withColumn("h", md5(to_binary(col("text"), lit("utf-8"))))
+        .withColumn("h", md5Utf8(col("text")))
         .select(col("doc_id"), col("h"), col("keep"), col("n_tokens"))
         .join(contaminated, Seq("doc_id"), "left")
         .withColumn("pass2", col("keep") && !coalesce(col("contam"), lit(false)))
@@ -1483,9 +1463,8 @@ object SparkEntry {
           (col("doc_id") % 8 === 0).as("is_t"))
       val toks = aug.select(col("doc_id"), col("grp"), col("is_t"),
         explode(split(col("aug"), " ")).as("tok"))
-        .withColumn("b", conv(substring(md5(to_binary(
-          concat(lit("dsir:"), col("tok")), lit("utf-8"))), 1, 4), 16, 10)
-          .cast("long") % 64)
+        .withColumn("b", conv(substring(md5Utf8(concat(lit("dsir:"), col("tok"))),
+          1, 4), 16, 10).cast("long") % 64)
       val bs = toks.groupBy(col("b"))
         .agg(count(when(col("is_t"), 1)).as("ct"), count(lit(1)).as("cr"))
       val votes = bs
@@ -1513,7 +1492,7 @@ object SparkEntry {
         .orderBy(col("h").asc, col("doc_id").asc)
       t(s, dir, "documents")
         .select(col("source"), col("doc_id"),
-          md5(to_binary(col("text"), lit("utf-8"))).as("h"))
+          md5Utf8(col("text")).as("h"))
         .withColumn("rk", row_number().over(w).cast("long"))
         .filter(col("rk") <= 3)
         .orderBy(col("source"), col("rk"))
@@ -1694,7 +1673,7 @@ object SparkEntry {
         nSpacesCol.cast("long").as("n_spaces"),
         avgWordLenCol.as("score"))
       val samp = docs.filter(
-        substring(md5(to_binary(col("doc_id").cast("string"), lit("utf-8"))), 1, 1)
+        substring(md5Utf8(col("doc_id").cast("string")), 1, 1)
           .isin("0", "1", "2", "3"))
       val wS = Window.orderBy(col("score").asc, col("doc_id").asc)
       val ranked = samp.withColumn("rn", row_number().over(wS).cast("long"))
@@ -1740,8 +1719,7 @@ object SparkEntry {
         .withColumn("rate",
           sqrt(min(col("n_before")).over(Window.partitionBy()).cast("double") /
             col("n_before").cast("double")))
-      val u = conv(substring(md5(to_binary(
-        concat(lit("temp:"), col("doc_id").cast("string")), lit("utf-8"))),
+      val u = conv(substring(md5Utf8(concat(lit("temp:"), col("doc_id").cast("string"))),
         1, 13), 16, 10).cast("long").cast("double") / lit(4503599627370496.0)
       docs.join(broadcast(rates), Seq("lang"))
         .withColumn("u", u)
@@ -1780,7 +1758,7 @@ object SparkEntry {
     // against the broadcast query keys — the corpus side never
     // shuffles, and every join in the reduction is broadcast-sized.
     "q65_ann_recall" -> ((s, dir) => {
-      graft.functions.CosineSim.register(s)
+      graft.functions.SqlFunctions.register(s)
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -1790,13 +1768,9 @@ object SparkEntry {
         .withColumn("cos_r", round(expr("graft_cosine(qv, v)"), 3))
         .withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 10)
         .select(col("qid"), col("vec_id"))
-      def bandKey(c: String, j: Int): Column = concat((1 to 4).map(i =>
-        when(element_at(col(c), 4 * j + i) >= 0, "1").otherwise("0")): _*)
-      val banded = emb.select(col("vec_id"),
-        posexplode(array((0 to 15).map(bandKey("v", _)): _*)))
+      val banded = emb.select(col("vec_id"), VectorOps.signBands(col("v"), 4, 16))
         .toDF("vec_id", "band", "key")
-      val qb = q.select(col("qid"),
-        posexplode(array((0 to 15).map(bandKey("qv", _)): _*)))
+      val qb = q.select(col("qid"), VectorOps.signBands(col("qv"), 4, 16))
         .toDF("qid", "band", "key")
       val cand = banded.join(broadcast(qb), Seq("band", "key"))
         .filter(col("vec_id") =!= col("qid"))
@@ -1906,10 +1880,8 @@ object SparkEntry {
     // (Max/MinCharNGramsFeature, config.json rrFeatures): corpus trigram
     // counts broadcast back onto each doc's trigrams
     "q33_trigram_freq" -> ((s, dir) => {
-      val triArr =
-        "transform(sequence(1, greatest(length(text) - 2, 1)), i -> substring(text, i, 3))"
       val freq = tp(s, dir, "documents")
-        .select(explode(expr(triArr)).as("g"))
+        .select(explode(Dedup.shingles(3)).as("g"))
         .groupBy(col("g")).agg(count(lit(1)).as("f"))
       // min/max over a doc's trigram SET equals over its multiset, so the
       // probe side dedupes ROW-LOCALLY (array_distinct before explode) —
@@ -1917,7 +1889,7 @@ object SparkEntry {
       // doc-contiguous, so the per-doc min/max partial-aggregates to one
       // row per doc before its shuffle
       tp(s, dir, "documents")
-        .select(col("doc_id"), explode(array_distinct(expr(triArr))).as("g"))
+        .select(col("doc_id"), explode(array_distinct(Dedup.shingles(3))).as("g"))
         .join(broadcast(freq), Seq("g"))
         .groupBy(col("doc_id"))
         .agg(min(col("f")).as("min_f"), max(col("f")).as("max_f"))
@@ -1934,10 +1906,7 @@ object SparkEntry {
     // per-doc partial agg (explode preserves row locality).
     "q60_lm_quality" -> ((s, dir) => {
       val tri = tp(s, dir, "documents")
-        .select(col("doc_id"), splitBucket.as("b"),
-          explode(expr(
-            "transform(sequence(1, greatest(length(text) - 2, 1)), i -> substring(text, i, 3))"
-          )).as("g"))
+        .select(col("doc_id"), splitBucket.as("b"), explode(Dedup.shingles(3)).as("g"))
       val lm = tri.filter(col("b") < 8).groupBy(col("g"))
         .agg(count(lit(1)).as("f"))
       tri.join(broadcast(lm), Seq("g"), "left")
@@ -2065,7 +2034,7 @@ object SparkEntry {
       val blocks = Pipeline.segment(Pipeline.generate(s, 100))
         .flatMap(p => p.blocks.map(b => (p.url, b.id, b.kind, b.text)))
         .toDF("url", "block_id", "kind", "text")
-        .withColumn("h", md5(to_binary(col("text"), lit("utf-8"))))
+        .withColumn("h", md5Utf8(col("text")))
       val dfCounts = blocks.select(col("h"), col("url"))
         .dropDuplicates("h", "url")
         .groupBy(col("h")).agg(count(lit(1)).as("df"))
@@ -2305,17 +2274,12 @@ object SparkEntry {
       |  FROM banded a JOIN banded b
       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)""".stripMargin
 
-  /** q53/q80's shared hashed-tf document embeddings: one-pass codegen
-    * kernel (graft_hashtf) + the per-vector mean the centered-sign bands
-    * key on. Registers the kernels on the session (idempotent).
+  /** q53/q80/q82's document embeddings ([[VectorOps.tfEmbeddings]])
+    * plus the per-vector mean the centered-sign bands key on.
     */
-  private def tfEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
-    graft.functions.HashTf.register(s)
-    tp(s, dir, "documents").select(col("doc_id"),
-      expr("graft_hashtf(split(text, ' '))").as("v"))
+  private def tfEmbeddings(s: SparkSession, dir: String): DataFrame =
+    VectorOps.tfEmbeddings(tp(s, dir, "documents"))
       .withColumn("m", expr("aggregate(v, 0d, (a, x) -> a + x) / 64"))
-  }
 
   /** q53/q80's shared band join: centered-sign 4×16-bit band equi-join
     * with the df≤128 hot-band guard — (id1, id2, v1, v2) candidate rows
@@ -2323,11 +2287,8 @@ object SparkEntry {
     * cost).
     */
   private def cosineBandJoined(emb: DataFrame): DataFrame = {
-    def bandKey(j: Int): Column = concat((1 to 16).map(i =>
-      when(element_at(col("v"), 16 * j + i) - col("m") >= 0, "1")
-        .otherwise("0")): _*)
     val banded0 = emb.select(col("doc_id"), col("v"),
-      posexplode(array((0 to 3).map(bandKey): _*)))
+      VectorOps.signBands(col("v"), 16, 4, Some(col("m"))))
       .toDF("doc_id", "v", "band", "key")
     Dedup.guardedSelfJoin(banded0, Seq("band", "key"), "doc_id", Seq("v"), 128)
   }
@@ -2362,15 +2323,16 @@ object SparkEntry {
       .agg(count(lit(1)).as("n_exact"), count(col("hit")).as("n_hit"))
       .crossJoin(cand.agg(count(lit(1)).as("n_cand")))
 
-  /** q44/q81's shared 32-bit SimHash signatures: per-token md5 nibble
-    * votes folded into one sign bit per position (map-side combinable
-    * agg), one row (doc_id, sh) per document.
+  /** q19/q44/q81's shared 32-bit SimHash signatures over `docs`
+    * (doc_id, text): per-token md5 nibble votes folded into one sign bit
+    * per position (map-side combinable agg), one row (doc_id, sh) per
+    * document.
     */
-  private def simhashSigs(s: SparkSession, dir: String): DataFrame = {
-    val hashed = tp(s, dir, "documents")
+  private def simhashSigs(docs: DataFrame): DataFrame = {
+    val hashed = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
-      .select(col("doc_id"), md5(to_binary(col("tok"), lit("utf-8"))).as("h"))
+      .select(col("doc_id"), md5Utf8(col("tok")).as("h"))
     def bit(k: Int): Column =
       when(sum(when(substring(col("h"), k, 1) >= "8", 1).otherwise(-1)) >= 0,
         "1").otherwise("0")
@@ -2574,7 +2536,7 @@ object SparkEntry {
       |)""".stripMargin
 
   /** Shared 24-char-shingle decontam CTEs (q61/q62/q73 oracles) —
-    * mirrors [[shingle24]]/[[contaminatedTrainDocs]]; `src` must expose
+    * mirrors [[decontamHits]]/[[contaminatedTrainDocs]]; `src` must expose
     * (doc_id, text, b). Emits test_sh (distinct held-out shingles) and
     * tr (train docs' distinct shingles).
     */

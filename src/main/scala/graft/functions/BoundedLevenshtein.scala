@@ -84,15 +84,3 @@ case class BoundedLevenshtein(first: Expression, second: Expression, third: Expr
       newFirst: Expression, newSecond: Expression, newThird: Expression): BoundedLevenshtein =
     copy(first = newFirst, second = newSecond, third = newThird)
 }
-
-object BoundedLevenshtein {
-  /** Register as a SQL function so `expr("graft_lev_bounded(a, b, 3)")`
-    * and spark.sql can use it (the SparkSessionExtensions-style injection
-    * point, done per-session).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_lev_bounded",
-      (children: Seq[Expression]) => BoundedLevenshtein(children(0), children(1), children(2)),
-      "scala_udf")
-}

@@ -75,23 +75,3 @@ case class HashTf(child: Expression, dim: Int) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): HashTf =
     copy(child = newChild)
 }
-
-object HashTf {
-  /** Per-session SQL registration: `graft_hashtf(toks)` (dim=64) or
-    * `graft_hashtf(toks, dim)` with a literal dim.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_hashtf",
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => HashTf(c, 64)
-        case Seq(c, org.apache.spark.sql.catalyst.expressions.Literal(d, IntegerType))
-            if d != null =>
-          HashTf(c, d.asInstanceOf[Int])
-        case Seq(_, bad) => throw new IllegalArgumentException(
-          s"graft_hashtf: dim must be a non-null literal INT, got $bad")
-        case _ => throw new IllegalArgumentException(
-          "graft_hashtf(tokens[, literal dim]) expects 1 or 2 arguments")
-      },
-      "scala_udf")
-}

@@ -13,12 +13,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * encoding, so the minima are bitwise-identical to `min(md5_hex)` over
   * the same shingle multiset) and hex-encoding only the 8 winners.
   *
-  * Shingle semantics mirror the relational spelling exactly:
-  * `transform(sequence(1, greatest(char_length(text) - (L-1), 1), S),
-  * i -> substring(text, i, L))` — CHARACTER-based positions/lengths via
-  * `UTF8String.substringSQL` (what Spark's `substring` uses), so
-  * multi-byte text shingles identically. A sub-L-length text yields one
-  * short shingle; an empty text yields md5("j:") per lane.
+  * Shingle semantics mirror the relational spelling exactly
+  * ([[graft.operators.Dedup.shingles]](L, S)): CHARACTER-based
+  * positions/lengths via `UTF8String.substringSQL` (what Spark's
+  * `substring` uses), so multi-byte and supplementary-plane text
+  * shingles identically. A sub-L-length text yields one short shingle;
+  * an empty text yields md5("j:") per lane. The streaming near-dup key
+  * ([[graft.streaming.StreamingPipeline.minhashSignature]]) calls this
+  * kernel too.
   */
 object MinhashKernel {
   private val tl: ThreadLocal[java.security.MessageDigest] =
@@ -114,19 +116,4 @@ case class MinhashSig(child: Expression, shingleLen: Int = 12, stride: Int = 7)
 
   override protected def withNewChildInternal(newChild: Expression): MinhashSig =
     copy(child = newChild)
-}
-
-object MinhashSig {
-  /** Per-session SQL registration: `graft_minhash8(text)` with the dedup
-    * family's fixed L=12/stride=7 shingling.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash8",
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => MinhashSig(c)
-        case _ => throw new IllegalArgumentException(
-          "graft_minhash8(text) expects exactly 1 argument")
-      },
-      "scala_udf")
 }

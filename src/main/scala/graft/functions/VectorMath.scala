@@ -124,22 +124,6 @@ case class CosineSim(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-object CosineSim {
-  /** Per-session SQL registration, so `expr("graft_cosine(a, b)")` works
-    * (same injection point as BoundedLevenshtein).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine",
-      (children: Seq[Expression]) => CosineSim(children(0), children(1)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sqdist",
-      (children: Seq[Expression]) => SqDist(children(0), children(1)),
-      "scala_udf")
-  }
-}
-
 /** Catalyst expression `graft_sqdist(a, b)` over ARRAY<DOUBLE> — the IVF
   * centroid-distance hot loop (q40), codegen-compatible and usable inside
   * SQL lambda bodies (`transform(cents, c -> graft_sqdist(v, c.cv))`).

@@ -68,7 +68,7 @@ object Dedup {
     * project) and the h-columns are O(1) array extracts.
     */
   def minhashSig(docs: DataFrame): DataFrame = {
-    graft.functions.MinhashSig.register(docs.sparkSession)
+    graft.functions.SqlFunctions.register(docs.sparkSession)
     docs
       .withColumn("_mh", expr("graft_minhash8(text)"))
       .select(docs.columns.toIndexedSeq.map(col) ++
@@ -82,13 +82,33 @@ object Dedup {
     * bipartite decontam join; the oracles mirror it
     * (`SparkEntry.minhashBandedCte`).
     */
-  def minhashBands(sig: DataFrame, idCol: String): DataFrame = {
-    def md5s(c: Column) = md5(to_binary(c, lit("utf-8")))
+  def minhashBands(sig: DataFrame, idCol: String): DataFrame =
     sig.select(col(idCol), posexplode(array(
-      md5s(concat(col("h0"), col("h1"))), md5s(concat(col("h2"), col("h3"))),
-      md5s(concat(col("h4"), col("h5"))), md5s(concat(col("h6"), col("h7")))
+      md5Utf8(concat(col("h0"), col("h1"))), md5Utf8(concat(col("h2"), col("h3"))),
+      md5Utf8(concat(col("h4"), col("h5"))), md5Utf8(concat(col("h6"), col("h7")))
     ))).toDF(idCol, "band", "key")
+
+  /** Char shingle array over `text`: `substring(text, i, len)` for
+    * i = 1, 1 + stride, … up to length(text) − (len − 1), and at least
+    * one (a text shorter than `len` is its own single shingle). ONE
+    * spelling for every char-n-gram derivation of the query board
+    * (q08/q16/q78 near-dup, q22 fingerprints, q33/q60 trigrams, the
+    * q61/q62/q73 decontam shingles); [[graft.functions.MinhashKernel]]
+    * walks the same positions for the MinHash signature. The DuckDB
+    * oracles mirror the expression. Positions and lengths count
+    * characters, as Spark's `length`/`substring` do.
+    */
+  def shingles(len: Int, stride: Int = 1): Column = {
+    val step = if (stride == 1) "" else s", $stride"
+    expr(s"transform(sequence(1, greatest(length(text) - ${len - 1}, 1)$step), " +
+      s"i -> substring(text, i, $len))")
   }
+
+  /** Lowercase-hex md5 of a string column's UTF-8 bytes — the ONE
+    * spelling of every md5 key, bucket and sample on the query board
+    * (DuckDB's `md5(varchar)` hashes the same bytes).
+    */
+  def md5Utf8(c: Column): Column = md5(to_binary(c, lit("utf-8")))
 
   /** Hot-key guard: drops every row whose `keys` bucket holds more than
     * `cap` rows. A bucket shared by a large fraction of a
@@ -170,9 +190,6 @@ object Dedup {
     */
   def semDedupLabels(docs: DataFrame, tau: Double = 0.97,
       cellCap: Int = 128): DataFrame = {
-    val spark = docs.sparkSession
-    graft.functions.CosineSim.register(spark)
-    graft.functions.HashTf.register(spark)
     val withId = vertexIds(docs, "semDedupLabels")
     // ONE embedding row per vertex: a url re-crawled with CHANGED text
     // survives exact dedup twice under one vertex id — embed the MIN
@@ -185,8 +202,7 @@ object Dedup {
       .agg(min(col("text")).as("text"))
     val n = oneText.count()
     val k = math.max(4, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val emb = oneText.select(col("doc_id"),
-      expr("graft_hashtf(split(text, ' '))").as("v"))
+    val emb = VectorOps.tfEmbeddings(oneText)
     val assigned = VectorOps.assignCells(emb, "doc_id",
       emb.orderBy(col("doc_id")).limit(k)
         .select(col("doc_id").as("cid"), col("v").as("cv")))

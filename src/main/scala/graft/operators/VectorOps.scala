@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
 import org.apache.spark.sql.expressions.Window
 
 /** Distributed vector-quantizer training for the IVF similarity-search
@@ -12,6 +12,31 @@ import org.apache.spark.sql.expressions.Window
   * triples, k*d keys total.
   */
 object VectorOps {
+
+  /** Hashed-tf document embeddings (doc_id, v): `v` is the 64-dim
+    * md5-bucketed term counts of the space-split `text`, in one codegen
+    * pass ([[graft.functions.HashTf]]). ONE definition for q53/q80/q82
+    * and [[graft.operators.Dedup.semDedupLabels]]; registers the graft
+    * SQL functions on the session.
+    */
+  def tfEmbeddings(docs: DataFrame): DataFrame = {
+    graft.functions.SqlFunctions.register(docs.sparkSession)
+    docs.select(F.col("doc_id"), F.expr("graft_hashtf(split(text, ' '))").as("v"))
+  }
+
+  /** Sign-bit band keys of vector column `v`, posexploded to (pos, col):
+    * band j's key is `bits` '1'/'0' characters, one per element
+    * `v[bits·j + i]` (i = 1..bits, 1-based), '1' when the element minus
+    * `centre` (if given) is ≥ 0. ONE spelling for the hyperplane-LSH
+    * bands of q21 (4×16) and q65 (16×4) and the centred cosine bands of
+    * q53/q80 (4×16 around the per-vector mean).
+    */
+  def signBands(v: Column, bits: Int, bands: Int,
+      centre: Option[Column] = None): Column =
+    F.posexplode(F.array((0 until bands).map(j => F.concat((1 to bits).map { i =>
+      val x = F.element_at(v, bits * j + i)
+      F.when(centre.fold(x)(x - _) >= 0, "1").otherwise("0")
+    }: _*)): _*))
 
   /** The ONE-ROW broadcast frame holding the sorted (cid, cv) centroid
     * array — the build side of the row-local argmin. `cents` must carry
@@ -29,7 +54,7 @@ object VectorOps {
     * the DuckDB oracles mirror (`ORDER BY d2 ASC, cid ASC`) — keep the
     * three call sites on this one definition or the "assignment can
     * never flip between engines" guarantee silently diverges. Requires
-    * graft_sqdist (graft.functions.CosineSim.register).
+    * graft_sqdist ([[graft.functions.SqlFunctions.register]]).
     */
   def distRank: org.apache.spark.sql.Column = F.expr(
     """array_sort(transform(cents, c -> struct(
@@ -55,7 +80,7 @@ object VectorOps {
     val spark = emb.sparkSession
     import spark.implicits._
     val seeds = centroids.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv")
-    graft.functions.CosineSim.register(spark) // graft_sqdist for the inner fold
+    graft.functions.SqlFunctions.register(spark) // graft_sqdist for the inner fold
     val assigned = assignCells(emb, "vec_id", seeds)
       .select(F.col("cid"), F.posexplode(F.col("v")).as(Seq("dim", "x")))
     assigned.groupBy(F.col("cid"), F.col("dim"))
@@ -74,7 +99,7 @@ object VectorOps {
     */
   def sse(emb: DataFrame, centroids: Seq[(Int, Array[Double])]): Double = {
     import emb.sparkSession.implicits._
-    graft.functions.CosineSim.register(emb.sparkSession)
+    graft.functions.SqlFunctions.register(emb.sparkSession)
     val centDf = centroidArray(
       centroids.map { case (cid, cv) => (cid, cv.toSeq) }.toDF("cid", "cv"))
     val minD2 = F.expr(

@@ -1,6 +1,6 @@
 package graft.plans
 
-import graft.functions.BoundedLevenshtein
+import graft.functions.{BoundedLevenshtein, SqlFunctions}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -23,8 +23,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * slack is the difference between a scan and a stall.
   *
   * Registered through SparkSessionExtensions (the documented plug-in
-  * point): `GraftExtensions` also installs `graft_lev_bounded` as a SQL
-  * function. Enable with
+  * point): `GraftExtensions` also installs every `graft_*` SQL function
+  * of [[graft.functions.SqlFunctions]]. Enable with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
   * call `BoundedLevPredicateRewrite.inject(spark)` on a live session.
   */
@@ -58,8 +58,7 @@ object BoundedLevPredicateRewrite extends Rule[LogicalPlan] {
 
   /** Install on a live session (tests / notebooks). */
   def inject(spark: org.apache.spark.sql.SparkSession): Unit = {
-    BoundedLevenshtein.register(spark)
-    graft.functions.CosineSim.register(spark)
+    SqlFunctions.register(spark)
     if (!spark.sessionState.optimizer.preCBORules.contains(this) &&
         !spark.experimental.extraOptimizations.contains(this))
       spark.experimental.extraOptimizations =
@@ -71,10 +70,6 @@ object BoundedLevPredicateRewrite extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => BoundedLevPredicateRewrite)
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lev_bounded"),
-      new ExpressionInfo(classOf[BoundedLevenshtein].getName, "graft_lev_bounded"),
-      (children: Seq[Expression]) =>
-        BoundedLevenshtein(children(0), children(1), children(2))))
+    SqlFunctions.inject(ext)
   }
 }

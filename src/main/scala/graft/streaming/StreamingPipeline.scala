@@ -2,10 +2,13 @@ package graft.streaming
 
 import graft.core.{CorrectedPage, PageRow}
 import graft.fixtures.PagesGen
+import graft.functions.MinhashKernel
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Structured Streaming front-end for the extraction pipeline.
   *
@@ -79,19 +82,16 @@ object StreamingPipeline {
         rows.take(1)
       }
 
-  /** Row-local MinHash signature — the SAME scheme as the batch near-dup
-    * pair stage (SparkEntry q18: stride-7 char-12-gram shingles, 8 salted
-    * md5 min-hashes), folded to one string key.
+  /** Row-local MinHash signature: the batch near-dup signature itself
+    * ([[graft.functions.MinhashKernel.minhash8]], the kernel behind
+    * `graft_minhash8`: stride-7 char-12-gram shingles, 8 salted md5
+    * min-hashes), folded to one string key. Calling the kernel keeps the
+    * streaming key equal to the batch one by construction, including
+    * its character (not UTF-16 unit) shingle positions.
     */
-  def minhashSignature(text: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def md5hex(s: String): String =
-      md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val last = math.max(text.length - 11, 1)
-    val shingles = (1 to last by 7).map(i =>
-      text.substring(i - 1, math.min(text.length, i + 11)))
-    (0 until 8).map(j => shingles.map(sh => md5hex(s"$j:$sh")).min).mkString("|")
-  }
+  def minhashSignature(text: String): String =
+    MinhashKernel.minhash8(UTF8String.fromString(text), 12, 7)
+      .toObjectArray(StringType).mkString("|")
 
   /** Stateful cross-batch NEAR-duplicate suppression: incoming docs are
     * keyed by their full 8-hash MinHash signature and the first sighting

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.SparkSession
 
 /** One "executor" of the multi-process scaling protocol
   * (tools/bench_executors.sh): a single JVM = a single executor with its
@@ -18,12 +17,7 @@ object SoloBench {
     val nDocs = args(1).toLong
     val reps = if (args.length > 2) args(2).toInt else 2
     val label = if (args.length > 3) args(3) else "solo"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkBoot.session(cpus.toString)
     def one(): Long =
       Pipeline.run(Pipeline.generate(spark, nDocs, partitions = cpus * 4)).count()
     one() // warmup (codegen + JIT)

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.fixtures.PagesGen
 import graft.pipeline.Pipeline
-import org.apache.spark.sql.SparkSession
 
 /** Locates where the Spark e2e pipeline spends time relative to the raw
   * kernels (Microbench): times each prefix of the typed-map chain, plus an
@@ -13,12 +12,7 @@ object StageBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 40000L
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkBoot.session(cpus)
     import spark.implicits._
 
     def time(label: String)(f: => Long): Unit = {

@@ -24,7 +24,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_lev_bounded expression works in SQL and stays in codegen") {
-    BoundedLevenshtein.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
     val df = Seq(("kitten", "sitting"), ("abc", "abc"), ("aaaa", "zzzz"))
       .toDF("a", "b")
@@ -36,7 +36,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("bounded lev agrees with full DP as a dedup predicate over real data") {
-    BoundedLevenshtein.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
       .select(col("n_name"))
     val pairs = docs.crossJoin(docs.withColumnRenamed("n_name", "m_name"))
@@ -52,7 +52,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_cosine is bitwise-equal to the HOF fold it replaced, float and double") {
-    graft.functions.CosineSim.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
     val rng = new scala.util.Random(7)
     val vecs = (0 until 50).map(i =>
@@ -82,7 +82,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_cosine/graft_sqdist return NULL for ragged or null-element arrays, like the HOFs") {
-    graft.functions.CosineSim.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     val r = spark.sql(
       """SELECT
         |  graft_cosine(array(1.0D, 2.0D), array(1.0D)) AS ragged,
@@ -95,7 +95,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_cosine stays inside whole-stage codegen over a parquet scan") {
-    graft.functions.CosineSim.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select(expr("graft_cosine(embedding, embedding)").as("c"))
     assert(emb.filter(col("c").isNaN === false).count() > 0)
@@ -105,7 +105,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_hashtf matches the relational md5-bucket spelling exactly") {
-    graft.functions.HashTf.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .limit(50)
       .select(col("doc_id"),
@@ -127,7 +127,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_minhash8 matches the explode+groupBy relational spelling exactly") {
-    graft.functions.MinhashSig.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
     // real corpus text + crafted edges: empty, sub-shingle-length,
     // exactly-12-char, multi-byte (char-based substring), stride tail
@@ -169,7 +169,7 @@ class FunctionsSpec extends AnyFunSuite {
   }
 
   test("graft_hashtf skips empties/nulls, honors dim, nulls through") {
-    graft.functions.HashTf.register(spark)
+    graft.functions.SqlFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (1, Seq("a", "", "a")), // empty token skipped, 'a' counted twice
@@ -241,8 +241,17 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions installs the rule and the SQL function") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    // records the names GraftExtensions injects
+    val injected = scala.collection.mutable.Buffer.empty[String]
+    val ext = new org.apache.spark.sql.SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = {
+        injected += f._1.funcName
+        super.injectFunction(f)
+      }
+    }
     new graft.plans.GraftExtensions()(ext) // must register without throwing
+    assert(injected.sorted == Seq("graft_cosine", "graft_hashtf", "graft_lev_bounded",
+      "graft_minhash8", "graft_sqdist"))
     // the banded kernel agrees with full levenshtein below the bound and
     // caps at bound+1 above it
     assert(graft.functions.Lev.bounded("kitten", "sitting", 3) == 3)

@@ -217,7 +217,9 @@ class StatefulStreamingSpec extends AnyFunSuite {
     import spark.implicits._
     // same shingling + salted min-hash as the SQL pair stage: cross-check
     // the row-local Scala fold against the Spark SQL expression chain
-    val texts = (0L until 5L).map(i => PagesGen.page(i).row.text)
+    // the last text holds a supplementary-plane character (one character,
+    // two UTF-16 units): shingle positions must count characters
+    val texts = (0L until 5L).map(i => PagesGen.page(i).row.text) :+ "a\ud83d\ude00bcdefghijklmnop"
     val sqlSig = texts.toDF("text")
       .select(expr(
         """concat_ws('|', transform(sequence(0, 7), j ->
