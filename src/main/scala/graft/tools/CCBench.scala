@@ -8,6 +8,11 @@ import org.apache.spark.sql.functions._
   * chains (adversarial diameter) plus isolated vertices — pushed through
   * the production CC operator, reporting rounds and wall time for
   * BASELINE.md. Deterministic: edges are a pure function of their index.
+  * `path` names the CC path taken: `distributed` (the label-propagation
+  * loop this bench exists to measure; the default 10^7 input edges are
+  * 160 MB at 16 B an edge before symmetrizing, far over the default
+  * driver budget) or
+  * `driver` (the small-graph exit, for shapes under the budget).
   *
   * Usage: runMain graft.tools.CCBench [nVertices] [nEdges] [chainLen]
   */
@@ -44,7 +49,10 @@ object CCBench {
       vertices, edges, maxRounds = 25)
     val nComp = labels.agg(countDistinct(col("comp"))).first().getLong(0)
     val sec = (System.nanoTime() - t0) / 1e9
-    println(f"""{"bench":"cc_scale","vertices":$n,"edges":$m,"chain_len":$chainLen,"rounds":$rounds,"components":$nComp,"wall_sec":$sec%.1f}""")
+    // the loop runs >= 1 round on any graph with edges (the default shape
+    // has 10^7), so 0 rounds means the small-graph exit ran
+    val path = if (rounds == 0) "driver" else "distributed"
+    println(f"""{"bench":"cc_scale","vertices":$n,"edges":$m,"chain_len":$chainLen,"path":"$path","rounds":$rounds,"components":$nComp,"wall_sec":$sec%.1f}""")
     spark.stop()
   }
 }

@@ -18,9 +18,12 @@ object PlanDump {
   /** Masks per-run identities: expression ids (`doc_id#712L` →
     * `doc_id#NL`), exchange plan ids, RDD ids, source line numbers of
     * RDD call sites, JVM lambda class names (`$$Lambda$N/0x…@hash`),
-    * and the AQE query-stage and codegen-stage ids of the executed
-    * plan, which follow the order in which concurrent stages happened
-    * to materialize.
+    * the identity hash of an anonymous-class instance such as a typed
+    * Aggregator (`Metrics$$anon$1@48f6f272`), the random temp-dir
+    * location of p12's table (`graft-ptable<digits>`), and the AQE
+    * query-stage and codegen-stage ids of the executed plan, which
+    * follow the order in which concurrent stages happened to
+    * materialize.
     */
   private def mask(plan: String): String = plan
     .replaceAll("#\\d+", "#N")
@@ -30,6 +33,8 @@ object PlanDump {
     .replaceAll("RDD\\[\\d+\\]", "RDD[N]")
     .replaceAll("\\.scala:\\d+", ".scala:N")
     .replaceAll("Lambda(\\$\\d+)?/0x[0-9a-f]+(@[0-9a-f]+)?", "Lambda\\$N")
+    .replaceAll("(\\$anon\\$\\d+)@[0-9a-f]+", "$1@N")
+    .replaceAll("graft-ptable\\d+", "graft-ptableN")
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,

@@ -190,36 +190,132 @@ class DedupSpec extends AnyFunSuite {
     assert(comp(7L) == 7L)
   }
 
+  /** Reference labels for vertices 0 until n: vertex -> min id of its
+    * union-find class.
+    */
+  private def expectedComponents(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
+    edges.foreach { case (a, b) =>
+      val (ra, rb) = (find(a.toInt), find(b.toInt))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val root = (0 until n).map(v => v.toLong -> find(v).toLong).toMap
+    // min id of each union-find class (find() root is not min in general)
+    val minOfClass = root.groupBy(_._2).map { case (r, m) => r -> m.keys.min }
+    root.map { case (v, r) => v -> minOfClass(r) }
+  }
+
+  /** Seeded random graphs over 40–79 vertices with ~30 edges. */
+  private def randomGraphs(seed: Int): Seq[(Int, Seq[(Long, Long)])] = {
+    val rng = new scala.util.Random(seed)
+    (1 to 3).map { _ =>
+      val n = 40 + rng.nextInt(40)
+      n -> Seq.fill(30)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
+        .filter(e => e._1 != e._2)
+    }
+  }
+
+  /** The 0-1-2-3-4 chain, the 5-6 pair and isolated 7, as 5 edges given
+    * one-directional and unsorted.
+    */
+  private val chainGraph = 8 -> Seq((3L, 4L), (1L, 0L), (2L, 3L), (1L, 2L), (6L, 5L))
+
+  private def labelsOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** Runs `body` under `spark.sql.autoBroadcastJoinThreshold = v`. */
+  private def withThreshold[T](v: String)(body: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, v)
+    try body finally spark.conf.set(key, old)
+  }
+
+  /** Runs `body` with a driver budget ≤ 0, so every connected-components
+    * call inside it takes the distributed label-propagation loop.
+    */
+  private def distributedOnly[T](body: => T): T = withThreshold("-1")(body)
+
   test("connected components agree with a driver-side union-find on random graphs") {
     import spark.implicits._
-    val rng = new scala.util.Random(11)
-    (1 to 3).foreach { _ =>
-      val n = 40 + rng.nextInt(40)
-      val edges = Seq.fill(30)((rng.nextInt(n).toLong, rng.nextInt(n).toLong))
-        .filter(e => e._1 != e._2)
-      // reference: plain union-find
-      val parent = Array.tabulate(n)(identity)
-      def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = (0 until n).map { v =>
-        // component representative = min id, reachable via repeated find
-        var r = find(v)
-        while (parent(r) != r) r = parent(r)
-        v.toLong -> r.toLong
-      }.toMap
-      // min id of each union-find class (find() root is not min in general)
-      val minOfClass = expected.groupBy(_._2).map { case (root, m) => root -> m.keys.min }
-      val got = Dedup.connectedComponents(
-        (0L until n.toLong).toDF("id"), edges.toDF("src", "dst"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    randomGraphs(11).foreach { case (n, edges) =>
+      val want = expectedComponents(n, edges)
+      val got = labelsOf(Dedup.connectedComponents(
+        (0L until n.toLong).toDF("id"), edges.toDF("src", "dst")))
       (0 until n).foreach { v =>
-        assert(got(v.toLong) == minOfClass(expected(v.toLong)),
-          s"vertex $v: got ${got(v.toLong)}, want ${minOfClass(expected(v.toLong))} (n=$n)")
+        assert(got(v.toLong) == want(v.toLong),
+          s"vertex $v: got ${got(v.toLong)}, want ${want(v.toLong)} (n=$n)")
       }
     }
+  }
+
+  test("connected components: driver and distributed paths agree") {
+    import spark.implicits._
+    (chainGraph +: randomGraphs(11)).foreach { case (n, edges) =>
+      val verts = (0L until n.toLong).toDF("id")
+      val (driver, r0) = Dedup.connectedComponentsWithRounds(verts, edges.toDF("src", "dst"))
+      val (loop, r1) = distributedOnly(
+        Dedup.connectedComponentsWithRounds(verts, edges.toDF("src", "dst")))
+      assert(r0 == 0, s"small graph (n=$n) did not take the driver path: $r0 rounds")
+      assert(r1 > 0, s"budget -1 (n=$n) did not take the distributed loop")
+      val want = expectedComponents(n, edges)
+      assert(labelsOf(driver) == want, s"driver path (n=$n)")
+      assert(labelsOf(loop) == want, s"distributed path (n=$n)")
+    }
+  }
+
+  test("connected components: budget boundary") {
+    import spark.implicits._
+    // 5 undirected edges symmetrize to k = 10 directed edges; the budget
+    // is threshold / 16 edges: k edges fit, k + 1 do not
+    val (n, pairs) = chainGraph
+    val verts = (0L until n.toLong).toDF("id")
+    val edges = pairs.toDF("src", "dst")
+    val k = 10
+    val (atBudget, r0) = withThreshold(s"${16 * k}b")(
+      Dedup.connectedComponentsWithRounds(verts, edges))
+    val (overBudget, r1) = withThreshold(s"${16 * (k - 1)}b")(
+      Dedup.connectedComponentsWithRounds(verts, edges))
+    assert(r0 == 0, s"edges == budget must take the driver path, ran $r0 rounds")
+    assert(r1 > 0, "edges == budget + 1 must take the distributed loop")
+    val want = expectedComponents(n, pairs)
+    assert(labelsOf(atBudget) == want)
+    assert(labelsOf(overBudget) == want)
+  }
+
+  test("connected components: an empty edge set labels every vertex alone") {
+    import spark.implicits._
+    val verts = (0L until 5L).toDF("id")
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val (driver, r0) = Dedup.connectedComponentsWithRounds(verts, edges)
+    val (loop, r1) = distributedOnly(Dedup.connectedComponentsWithRounds(verts, edges))
+    assert(r0 == 0 && r1 == 0)
+    val want = (0L until 5L).map(v => v -> v).toMap
+    assert(labelsOf(driver) == want)
+    assert(labelsOf(loop) == want)
+  }
+
+  test("connected components: labels-shaped consumer on the driver path") {
+    import spark.implicits._
+    // the near-dup labels tail: CC labels unioned with the isolated-vertex
+    // anti-join, then joined back to urls and grouped by component — the
+    // consumer shape that tripped Catalyst's Union constraint rewrite
+    // ("key not found: id#…") when the labels carried a derived plan
+    val withId = (0L to 7L).map(i => (i, s"http://u.$i/")).toDF("doc_id", "url")
+    val pairs = Seq((0L, 1L), (1L, 2L), (5L, 6L)).toDF("src", "dst")
+    val (comp, rounds) = Dedup.connectedComponentsWithRounds(
+      withId.select(col("doc_id").as("id")).distinct(), pairs, edgesDistinct = true)
+    assert(rounds == 0, s"expected the driver path, ran $rounds rounds")
+    val byId = withId.select(col("doc_id").as("id"), col("url")).distinct()
+    val labeled = comp.join(byId, Seq("id"))
+    val reps = labeled.groupBy(col("comp")).agg(min(col("url")).as("nd_dup_of"))
+    val got = labeled.join(reps, Seq("comp"))
+      .filter(col("url") =!= col("nd_dup_of"))
+      .select(col("url"), col("nd_dup_of"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    assert(got == Set("http://u.1/" -> "http://u.0/", "http://u.2/" -> "http://u.0/",
+      "http://u.6/" -> "http://u.5/"), got.toString)
   }
 
   test("connected components: throws rather than returning a non-fixpoint") {
@@ -228,7 +324,7 @@ class DedupSpec extends AnyFunSuite {
     val edges = (0L to 8L).map(i => (i, i + 1)).toDF("src", "dst")
     val e = intercept[IllegalArgumentException] {
       // diameter 9 cannot converge in 2 rounds
-      Dedup.connectedComponents(verts, edges, maxRounds = 2)
+      distributedOnly(Dedup.connectedComponents(verts, edges, maxRounds = 2))
     }
     assert(e.getMessage.contains("converge"))
   }
@@ -242,7 +338,7 @@ class DedupSpec extends AnyFunSuite {
     val n = 1000L
     val verts = (0L until n).toDF("id")
     val edges = (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
-    val (labels, rounds) = Dedup.connectedComponentsWithRounds(verts, edges)
+    val (labels, rounds) = distributedOnly(Dedup.connectedComponentsWithRounds(verts, edges))
     val comp = labels.agg(countDistinct(col("comp")), max(col("comp"))).first()
     assert(comp.getLong(0) == 1L && comp.getLong(1) == 0L)
     assert(rounds <= 12,
@@ -257,7 +353,7 @@ class DedupSpec extends AnyFunSuite {
     try {
       val verts = (0L until 64L).toDF("id")
       val edges = (0L until 63L).map(i => (i, i + 1)).toDF("src", "dst")
-      val comp = Dedup.connectedComponents(verts, edges)
+      val comp = distributedOnly(Dedup.connectedComponents(verts, edges))
       assert(comp.agg(countDistinct(col("comp"))).first().getLong(0) == 1L)
       // the reliable path must have been taken (>= 1 rdd checkpoint under
       // the dir) AND all stale per-round snapshots deleted — only the
