@@ -75,9 +75,9 @@ object SparkEntry {
     * size). A table whose on-disk bytes are below maxPartitionBytes x
     * cores scans as FEWER SPLITS THAN THE CLUSTER HAS CORES (a
     * single-file table scans as ONE task), which serializes every
-    * per-row kernel that runs before the first exchange — md5 shingle
-    * explodes, graft_minhash8 / graft_hashtf, array_sort repetition
-    * folds — on one core while the rest idle. Spreading the (tiny) rows
+    * per-row kernel that runs before the first exchange — graft_shingles
+    * explodes, graft_minhash8 / graft_hashtf, graft_repetition_stats —
+    * on one core while the rest idle. Spreading the (tiny) rows
     * round-robin first costs one sub-MB exchange and buys cores-way
     * parallelism for the expensive projections. At production scale the
     * predicate is false (the scan already yields >= cores splits of
@@ -227,55 +227,22 @@ object SparkEntry {
     when(col("b") < 8, "train").when(col("b") === 8, "val").otherwise("test")
 
   /** q55's row-local Gopher-rule repetition stats appended to `docs`
-    * (requires a `text` column): n_tokens, n_distinct, top_bigram,
-    * top_bigram_cnt, dup5_occ, keep — sorted n-gram arrays folded with
-    * run-length `aggregate` HOFs, zero shuffle. Shared by q55 and the
-    * composed q62 curation pipeline. Tie on the max bigram count
-    * resolves to the lexicographically smallest bigram (the sorted fold
-    * only replaces the champion on a STRICTLY longer run).
+    * (requires a `text` column): dup5_occ, n_tokens, n_distinct,
+    * top_bigram, top_bigram_cnt, keep — the fields of ONE
+    * `graft_repetition_stats` kernel call a row
+    * ([[graft.functions.RepetitionStats]]), zero shuffle. Shared by q55,
+    * the composed q62 curation pipeline and the q73 funnel. Tie on the
+    * max bigram count resolves to the lexicographically smallest bigram.
+    * A filter on `keep` pushed below [[tp]]'s repartition onto the scan
+    * stays one kernel call: `keep` is a field of the struct, not a
+    * conjunction over the other fields.
     */
   private def withRepetitionStats(docs: DataFrame): DataFrame =
     docs
-      .withColumn("ts", split(col("text"), " "))
-      .withColumn("bgs", expr(
-        """IF(size(ts) < 2, array(),
-          |   array_sort(zip_with(slice(ts, 1, size(ts) - 1),
-          |                       slice(ts, 2, size(ts) - 1),
-          |                       (a, b) -> concat(a, ' ', b))))""".stripMargin))
-      .withColumn("fgs", expr(
-        """IF(size(ts) < 5, array(),
-          |   array_sort(transform(sequence(1, size(ts) - 4),
-          |                        i -> array_join(slice(ts, i, 5), ' '))))""".stripMargin))
-      .withColumn("top", expr(
-        """aggregate(bgs,
-          |  named_struct('prev', CAST(NULL AS STRING), 'run', 0L,
-          |               'best', 0L, 'bstr', ''),
-          |  (acc, x) -> named_struct(
-          |    'prev', x,
-          |    'run',  IF(x <=> acc.prev, acc.run + 1, 1L),
-          |    'best', IF(IF(x <=> acc.prev, acc.run + 1, 1L) > acc.best,
-          |               IF(x <=> acc.prev, acc.run + 1, 1L), acc.best),
-          |    'bstr', IF(IF(x <=> acc.prev, acc.run + 1, 1L) > acc.best,
-          |               x, acc.bstr)),
-          |  acc -> named_struct('cnt', acc.best, 'bg', acc.bstr))""".stripMargin))
-      .withColumn("dup5_occ", expr(
-        """aggregate(fgs,
-          |  named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'dup', 0L),
-          |  (acc, x) -> named_struct(
-          |    'prev', x,
-          |    'run', IF(x <=> acc.prev, acc.run + 1, 1L),
-          |    'dup', acc.dup + IF(x <=> acc.prev,
-          |                        IF(acc.run = 1, 2L, 1L), 0L)),
-          |  acc -> acc.dup)""".stripMargin))
-      .withColumn("n_tokens", size(col("ts")).cast("long"))
-      .withColumn("n_distinct", size(array_distinct(col("ts"))).cast("long"))
-      .withColumn("top_bigram", col("top.bg"))
-      .withColumn("top_bigram_cnt", col("top.cnt"))
-      .withColumn("keep",
-        col("top_bigram_cnt") * 25 <= col("n_tokens") &&
-          col("dup5_occ") * 4 <= col("n_tokens") &&
-          col("n_distinct") * 3 >= col("n_tokens"))
-      .drop("ts", "bgs", "fgs", "top")
+      .withColumn("_rep", expr("graft_repetition_stats(text)"))
+      .select(docs.columns.toIndexedSeq.map(col) ++
+        Seq("dup5_occ", "n_tokens", "n_distinct", "top_bigram", "top_bigram_cnt", "keep")
+          .map(f => col(s"_rep.$f").as(f)): _*)
 
   /** URL canonicalizer (q71): lowercase scheme+host, strip the
     * SCHEME-DEFAULT port (http:80 / https:443 only — https:80 is a
@@ -448,7 +415,21 @@ object SparkEntry {
       .select($"url", $"lang", $"text", $"nCorrections")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every board query by name. A call first registers the graft SQL
+    * functions in its session ([[graft.functions.SqlFunctions.register]],
+    * idempotent), so query bodies spell the kernels by name:
+    * `graft_shingles` behind [[Dedup.shingles]], `graft_repetition_stats`,
+    * `graft_cosine`, `graft_lev_bounded` and the rest.
+    */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    board.map { case (name, q) =>
+      name -> ((s: SparkSession, dir: String) => {
+        graft.functions.SqlFunctions.register(s)
+        q(s, dir)
+      })
+    }
+
+  private def board: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ---- §2.4 aggregations ----
 
     // WER stats shape (wer/cli.py:50-67): total/correct/incorrect + rate.
@@ -876,7 +857,6 @@ object SparkEntry {
     // path for lev(a,b) <= k predicates; codegen-compatible, see
     // graft.functions.BoundedLevenshtein)
     "q39_bounded_lev" -> ((s, dir) => {
-      graft.functions.SqlFunctions.register(s)
       t(s, dir, "nation").crossJoin(t(s, dir, "region"))
         .select(col("n_name"), col("r_name"),
           expr("graft_lev_bounded(n_name, r_name, 3)").as("bd"))
@@ -1066,7 +1046,6 @@ object SparkEntry {
       // cosine via the codegen'd CosineSim expression (one fused pass over
       // the raw FLOAT arrays, bitwise-equal to the HOF fold it replaced —
       // HOFs are CodegenFallback and re-walk the arrays three times)
-      graft.functions.SqlFunctions.register(s)
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("v").as("qv"))
@@ -1091,7 +1070,6 @@ object SparkEntry {
       val banded = emb.select(col("vec_id"), col("v"),
         VectorOps.signBands(col("v"), 16, 4))
         .toDF("vec_id", "v", "band", "key")
-      graft.functions.SqlFunctions.register(s)
       val a = banded.select(col("band"), col("key"), col("vec_id").as("id1"), col("v").as("v1"))
       val c = banded.select(col("band"), col("key"), col("vec_id").as("id2"), col("v").as("v2"))
       a.join(c, Seq("band", "key")).filter(col("id1") < col("id2"))
@@ -1114,7 +1092,6 @@ object SparkEntry {
     // ordering (d2, cid) gives the d2-asc/cid-asc tie rule for free. Only
     // the probe→cell equi-join and the final tiny top-k window shuffle.
     "q40_ann_ivf" -> ((s, dir) => {
-      graft.functions.SqlFunctions.register(s)
       val emb = t(s, dir, "embeddings").select(col("vec_id"),
         expr("transform(embedding, x -> cast(x as double))").as("v"))
       val k = math.max(8L, math.ceil(math.sqrt(
@@ -1168,12 +1145,12 @@ object SparkEntry {
 
     // repetition-based quality gate (the Gopher-rule family: fraction of
     // content inside the most frequent word 2-gram, duplicated 5-gram
-    // occurrences, distinct-token ratio). Entirely ROW-LOCAL: sort the
-    // per-doc n-gram array once and fold run lengths with an `aggregate`
-    // HOF — no explode, no shuffle, so at 100 TB this is a pure map stage
-    // whose cost is O(tokens log tokens) per document. Tie on the max
-    // count resolves to the lexicographically smallest 2-gram (the sorted
-    // fold only replaces the champion on a STRICTLY longer run).
+    // occurrences, distinct-token ratio). Entirely ROW-LOCAL: one
+    // graft_repetition_stats kernel call a document groups its tokens,
+    // 2-grams and 5-grams in one pass — no explode, no shuffle, so at
+    // 100 TB this is a pure map stage whose cost is linear in the
+    // document. Tie on the max count resolves to the lexicographically
+    // smallest 2-gram.
     "q55_repetition_filter" -> ((s, dir) => {
       withRepetitionStats(t(s, dir, "documents"))
         .select(col("doc_id"), col("n_tokens"), col("n_distinct"),
@@ -1758,7 +1735,6 @@ object SparkEntry {
     // against the broadcast query keys — the corpus side never
     // shuffles, and every join in the reduction is broadcast-sized.
     "q65_ann_recall" -> ((s, dir) => {
-      graft.functions.SqlFunctions.register(s)
       val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding").as("v"))
       val q = emb.filter(col("vec_id") < 5)
         .select(col("vec_id").as("qid"), col("v").as("qv"))

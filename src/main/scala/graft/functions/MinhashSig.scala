@@ -13,12 +13,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * encoding, so the minima are bitwise-identical to `min(md5_hex)` over
   * the same shingle multiset) and hex-encoding only the 8 winners.
   *
-  * Shingle semantics mirror the relational spelling exactly
-  * ([[graft.operators.Dedup.shingles]](L, S)): CHARACTER-based
-  * positions/lengths via `UTF8String.substringSQL` (what Spark's
-  * `substring` uses), so multi-byte and supplementary-plane text
-  * shingles identically. A sub-L-length text yields one short shingle;
-  * an empty text yields md5("j:") per lane. The streaming near-dup key
+  * The shingles are those of [[graft.operators.Dedup.shingles]](L, S):
+  * their byte bounds come from [[ShingleKernel.bounds]], the one
+  * definition of char-shingle positions (counted in characters, so
+  * multi-byte and supplementary-plane text shingles identically), and
+  * each shingle is hashed straight from the text's bytes. A sub-L-length
+  * text yields one short shingle; an empty text yields md5("j:") per
+  * lane. The streaming near-dup key
   * ([[graft.streaming.StreamingPipeline.minhashSignature]]) calls this
   * kernel too.
   */
@@ -32,21 +33,21 @@ object MinhashKernel {
   def minhash8(text: UTF8String, shingleLen: Int, stride: Int): ArrayData = {
     if (text == null) return null
     val md = tl.get()
-    val end = math.max(text.numChars() - (shingleLen - 1), 1)
+    val b = text.getBytes
+    val bd = ShingleKernel.bounds(b, shingleLen, stride)
     val mins = new Array[Array[Byte]](8)
-    var pos = 1
-    while (pos <= end) {
-      val sh = text.substringSQL(pos, shingleLen).getBytes
+    var k = 0
+    while (k < bd.length) {
       var j = 0
       while (j < 8) {
         md.reset()
         md.update(salts(j))
-        md.update(sh)
+        md.update(b, bd(k), bd(k + 1) - bd(k))
         val d = md.digest()
         if (mins(j) == null || unsignedLess(d, mins(j))) mins(j) = d
         j += 1
       }
-      pos += stride
+      k += 2
     }
     val out = new Array[Any](8)
     var j = 0

@@ -34,6 +34,18 @@ object SqlFunctions {
       case Seq(c) => MinhashSig(c)
       case _ => throw new IllegalArgumentException(
         "graft_minhash8(text) expects exactly 1 argument")
+    }),
+    // graft_shingles(text, len, stride), len and stride literals
+    ("graft_shingles", classOf[CharShingles], {
+      case Seq(c, Literal(l: Int, IntegerType), Literal(s: Int, IntegerType)) =>
+        CharShingles(c, l, s)
+      case _ => throw new IllegalArgumentException(
+        "graft_shingles(text, literal len, literal stride) expects 3 arguments")
+    }),
+    ("graft_repetition_stats", classOf[RepetitionStats], {
+      case Seq(c) => RepetitionStats(c)
+      case _ => throw new IllegalArgumentException(
+        "graft_repetition_stats(text) expects exactly 1 argument")
     }))
 
   /** Registers every function a live session does not have yet, so

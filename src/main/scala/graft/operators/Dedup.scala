@@ -97,19 +97,19 @@ object Dedup {
 
   /** Char shingle array over `text`: `substring(text, i, len)` for
     * i = 1, 1 + stride, … up to length(text) − (len − 1), and at least
-    * one (a text shorter than `len` is its own single shingle). ONE
-    * spelling for every char-n-gram derivation of the query board
-    * (q08/q16/q78 near-dup, q22 fingerprints, q33/q60 trigrams, the
-    * q61/q62/q73 decontam shingles); [[graft.functions.MinhashKernel]]
-    * walks the same positions for the MinHash signature. The DuckDB
-    * oracles mirror the expression. Positions and lengths count
-    * characters, as Spark's `length`/`substring` do.
+    * one (a text shorter than `len` is its own single shingle; a null
+    * text gives `[null]`). ONE spelling for every char-n-gram derivation
+    * of the query board (q08/q16/q78 near-dup, q22 fingerprints, q33/q60
+    * trigrams, the q61/q62/q73 decontam shingles), computed by the
+    * `graft_shingles` kernel ([[graft.functions.CharShingles]]) in one
+    * linear walk over the text; [[graft.functions.MinhashKernel]] walks
+    * the same positions for the MinHash signature. The DuckDB oracles
+    * mirror the expression. Positions and lengths count characters, as
+    * Spark's `length`/`substring` do. The session resolving the column
+    * needs the graft functions registered, as `SparkEntry.queries` does.
     */
-  def shingles(len: Int, stride: Int = 1): Column = {
-    val step = if (stride == 1) "" else s", $stride"
-    expr(s"transform(sequence(1, greatest(length(text) - ${len - 1}, 1)$step), " +
-      s"i -> substring(text, i, $len))")
-  }
+  def shingles(len: Int, stride: Int = 1): Column =
+    expr(s"graft_shingles(text, $len, $stride)")
 
   /** Lowercase-hex md5 of a string column's UTF-8 bytes — the ONE
     * spelling of every md5 key, bucket and sample on the query board

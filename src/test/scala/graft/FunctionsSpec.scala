@@ -1,8 +1,11 @@
 package graft
 
 import graft.core.Edist
-import graft.functions.{BoundedLevenshtein, Lev, Metrics}
-import org.apache.spark.sql.SparkSession
+import graft.functions.{BoundedLevenshtein, CharShingles, Lev, Metrics, RepetitionStats}
+import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -184,6 +187,131 @@ class FunctionsSpec extends AnyFunSuite {
     assert(rows(3).isEmpty) // null array -> null embedding
   }
 
+  /** Seeded fuzz texts for the text kernels: tokens from a small
+    * vocabulary (so n-grams repeat and top-bigram counts tie) with
+    * empty, multi-byte and supplementary-plane tokens, single spaces and
+    * runs of them, leading and trailing spaces, and verbatim repeats of
+    * a short phrase; plus null, the empty text and all-space texts.
+    */
+  private def kernelFuzz(seed: Int, n: Int): Seq[String] = {
+    val rng = new scala.util.Random(seed)
+    val vocab = Seq("a", "b", "c", "ab", "", "é", "жж", "中文", "\uD83D\uDE00",
+      "x\uD801\uDC37y", "q")
+    def sep = if (rng.nextInt(5) == 0) " " * (2 + rng.nextInt(3)) else " "
+    def words(k: Int) = (1 to k).map(_ => vocab(rng.nextInt(vocab.length)))
+    val fixed = Seq(null, "", " ", "   ", "a", " a", "a ", " a  b ", "b c b c a b a b",
+      "c b c b a b a b", "\uD83D\uDE00\uD83D\uDE00\uD83D\uDE00", "x" * 30)
+    fixed ++ (1 to n).map { _ =>
+      val body = rng.nextInt(4) match {
+        case 0 => Seq.fill(2 + rng.nextInt(8))(words(3).mkString(" ")).mkString(sep)
+        case _ => words(rng.nextInt(40)).mkString(sep)
+      }
+      (if (rng.nextInt(4) == 0) sep else "") + body + (if (rng.nextInt(4) == 0) sep else "")
+    }
+  }
+
+  /** `texts` as a parquet-backed frame (id, text): a local Seq would be
+    * folded into a LocalRelation, evaluated without codegen.
+    */
+  private def textFrame(texts: Seq[String]) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-kern").toString
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+      .write.parquet(s"$dir/t")
+    spark.read.parquet(s"$dir/t")
+  }
+
+  test("graft_shingles equals the transform/substring spelling, and graft_minhash8 its md5 minima") {
+    graft.functions.SqlFunctions.register(spark)
+    val texts = kernelFuzz(11, 300)
+    val df = textFrame(texts)
+    for ((len, stride) <- Seq((1, 1), (3, 1), (8, 1), (12, 7), (24, 1), (5, 7))) {
+      val hof = expr(s"transform(sequence(1, greatest(length(text) - ${len - 1}, 1), $stride), " +
+        s"i -> substring(text, i, $len))")
+      val rows = df.select(col("id"), col("text"), hof.as("hof"),
+        expr(s"graft_shingles(text, $len, $stride)").as("k")).collect()
+      rows.foreach { r =>
+        val text = r.getString(1)
+        val want = r.getSeq[String](2)
+        assert(r.getSeq[String](3) == want, s"L=$len S=$stride text='$text'")
+        val interpreted = CharShingles(Literal(text), len, stride).eval(null)
+          .asInstanceOf[ArrayData]
+        assert((0 until interpreted.numElements()).map(i =>
+          Option(interpreted.getUTF8String(i)).map(_.toString).orNull) == want,
+          s"interpreted L=$len S=$stride text='$text'")
+      }
+    }
+    val minima = (0 to 7).map(j => expr(
+      s"array_min(transform(transform(sequence(1, greatest(length(text) - 11, 1), 7), " +
+        s"i -> substring(text, i, 12)), s -> md5(to_binary(concat('$j:', s), 'utf-8'))))"))
+    val sig = df.filter(col("text").isNotNull)
+      .select(array(minima: _*).as("hof"), expr("graft_minhash8(text)").as("k")).collect()
+    sig.foreach(r => assert(r.getSeq[String](1) == r.getSeq[String](0)))
+  }
+
+  test("graft_repetition_stats equals the sorted-array HOF folds it replaced") {
+    graft.functions.SqlFunctions.register(spark)
+    val texts = kernelFuzz(23, 400)
+    // the row-local q55 spelling the kernel replaced, kept here verbatim
+    val hof = textFrame(texts)
+      .withColumn("ts", split(col("text"), " "))
+      .withColumn("bgs", expr(
+        """IF(size(ts) < 2, array(),
+          |   array_sort(zip_with(slice(ts, 1, size(ts) - 1),
+          |                       slice(ts, 2, size(ts) - 1),
+          |                       (a, b) -> concat(a, ' ', b))))""".stripMargin))
+      .withColumn("fgs", expr(
+        """IF(size(ts) < 5, array(),
+          |   array_sort(transform(sequence(1, size(ts) - 4),
+          |                        i -> array_join(slice(ts, i, 5), ' '))))""".stripMargin))
+      .withColumn("top", expr(
+        """aggregate(bgs,
+          |  named_struct('prev', CAST(NULL AS STRING), 'run', 0L,
+          |               'best', 0L, 'bstr', ''),
+          |  (acc, x) -> named_struct(
+          |    'prev', x,
+          |    'run',  IF(x <=> acc.prev, acc.run + 1, 1L),
+          |    'best', IF(IF(x <=> acc.prev, acc.run + 1, 1L) > acc.best,
+          |               IF(x <=> acc.prev, acc.run + 1, 1L), acc.best),
+          |    'bstr', IF(IF(x <=> acc.prev, acc.run + 1, 1L) > acc.best,
+          |               x, acc.bstr)),
+          |  acc -> named_struct('cnt', acc.best, 'bg', acc.bstr))""".stripMargin))
+      .withColumn("dup5_occ", expr(
+        """aggregate(fgs,
+          |  named_struct('prev', CAST(NULL AS STRING), 'run', 0L, 'dup', 0L),
+          |  (acc, x) -> named_struct(
+          |    'prev', x,
+          |    'run', IF(x <=> acc.prev, acc.run + 1, 1L),
+          |    'dup', acc.dup + IF(x <=> acc.prev,
+          |                        IF(acc.run = 1, 2L, 1L), 0L)),
+          |  acc -> acc.dup)""".stripMargin))
+      .withColumn("n_tokens", size(col("ts")).cast("long"))
+      .withColumn("n_distinct", size(array_distinct(col("ts"))).cast("long"))
+      .withColumn("keep",
+        col("top.cnt") * 25 <= col("n_tokens") &&
+          col("dup5_occ") * 4 <= col("n_tokens") &&
+          col("n_distinct") * 3 >= col("n_tokens"))
+      .withColumn("k", expr("graft_repetition_stats(text)"))
+    val rows = hof.select(col("text"),
+      struct(col("n_tokens"), col("n_distinct"), col("top.bg"), col("top.cnt"),
+        col("dup5_occ"), col("keep")).as("want"), col("k")).collect()
+    def fields(r: Row): Option[Seq[Any]] = Option(r).map(_.toSeq)
+    rows.foreach { r =>
+      val text = r.getString(0)
+      val want = if (text == null) None else fields(r.getStruct(1))
+      assert(fields(r.getStruct(2)) == want, s"text='$text'")
+      val interpreted = Option(RepetitionStats(Literal(text)).eval(null)
+        .asInstanceOf[InternalRow])
+        .map(i => Seq(i.getLong(0), i.getLong(1), i.getUTF8String(2).toString,
+          i.getLong(3), i.getLong(4), i.getBoolean(5)))
+      assert(interpreted == want, s"interpreted text='$text'")
+    }
+    // the fuzz must reach the cases the folds are subtle on
+    assert(rows.exists(r => r.getStruct(2) != null && r.getStruct(2).getLong(4) > 0))
+    assert(rows.exists(r => r.getStruct(2) != null && !r.getStruct(2).getBoolean(5)))
+    assert(rows.exists(r => r.getStruct(2) != null && r.getStruct(2).getBoolean(5)))
+  }
+
   test("CER aggregator matches the reference formula") {
     import spark.implicits._
     val ds = Seq(("abc", "abd"), ("hello", "hello"), ("xy", "xyz")).toDS()
@@ -251,7 +379,7 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     new graft.plans.GraftExtensions()(ext) // must register without throwing
     assert(injected.sorted == Seq("graft_cosine", "graft_hashtf", "graft_lev_bounded",
-      "graft_minhash8", "graft_sqdist"))
+      "graft_minhash8", "graft_repetition_stats", "graft_shingles", "graft_sqdist"))
     // the banded kernel agrees with full levenshtein below the bound and
     // caps at bound+1 above it
     assert(graft.functions.Lev.bounded("kitten", "sitting", 3) == 3)

@@ -3,8 +3,8 @@ package graft
 import graft.operators.Dedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -279,6 +279,29 @@ class PlanAuditSpec extends AnyFunSuite {
       s"repetition stats shuffled (explode+groupBy spelling?):\n$p")
     assert(!p.toLowerCase.contains("generate"),
       s"unexpected explode in row-local repetition stats:\n$p")
+  }
+
+  test("repetition and shingle stages are kernels; q62's pushed quality gate is one kernel call") {
+    // graft_repetition_stats and graft_shingles replaced the HOF folds and
+    // the transform(sequence, substring) shingles: no lambda may remain
+    for (name <- Seq("q55_repetition_filter", "q62_curation_pipeline", "q73_gate_funnel")) {
+      val opt = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan.toString
+      assert(!opt.toLowerCase.contains("lambdafunction"), s"[$name] HOF left:\n$opt")
+    }
+    // the keep filter is pushed below tp()'s round-robin repartition onto
+    // the scan; FilterExec eliminates no common subexpression, so the
+    // pushed condition must be the ONE kernel call reading its keep field
+    val executed = SparkEntry.queries("q62_curation_pipeline")(spark, sf)
+      .queryExecution.executedPlan
+    def belowExchange(p: SparkPlan): Seq[SparkPlan] =
+      p +: inputs(p).filterNot(_.isInstanceOf[ShuffleExchangeExec]).flatMap(belowExchange)
+    def calls(f: FilterExec) =
+      f.condition.collect { case r: graft.functions.RepetitionStats => r }.size
+    val gates = nodes(executed).collect {
+      case e @ ShuffleExchangeExec(_: RoundRobinPartitioning, _, _, _) => e
+    }.flatMap(e => belowExchange(e.child)).collect { case f: FilterExec if calls(f) > 0 => f }
+    assert(gates.size == 1 && calls(gates.head) == 1,
+      s"pushed quality gate is not one graft_repetition_stats call:\n$executed")
   }
 
   test("split-mix report aggregates map-side (partial + final)") {

@@ -4,11 +4,13 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property tests for the q55 repetition gate's row-local HOF folds.
+/** Property tests for the q55 repetition gate's row-local stats (the
+  * `graft_repetition_stats` kernel; FunctionsSpec checks it against the
+  * sorted-array HOF folds it replaced).
   *
   * The DuckDB oracle cross-checks 500 corpus docs, but the synthetic
-  * vocabulary is narrow; these tests pin the sorted-run-length fold
-  * against a plain-Scala reference on adversarial inputs the corpus
+  * vocabulary is narrow; these tests pin the stats against a plain-Scala
+  * reference on adversarial inputs the corpus
   * never produces — empty docs, single tokens, all-identical tokens,
   * and deliberate top-count TIES (where the lexicographically smallest
   * n-gram must win).
