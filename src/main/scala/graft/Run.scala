@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.{GraftConfig, Pipeline}
 
@@ -92,6 +93,7 @@ object Run {
     */
   def execute(spark: SparkSession, pagesArg: String, outRoot: String,
       buckets: Int, cfg: GraftConfig = GraftConfig.default): String = {
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val pages =
       if (pagesArg.startsWith("synth:"))
         Pipeline.generate(spark, pagesArg.stripPrefix("synth:").toLong).toDF()
@@ -126,7 +128,11 @@ object Run {
       s""""$st":{"buckets":${r.ledger.size},"rows":${r.ledger.map(_.rows).sum},""" +
         s""""processed":${r.processedBuckets.size},"skipped":${r.skippedBuckets.size}}"""
     }.mkString(",")
-    f"""{"metric":"run_docs_per_sec","value":${nPages / math.max(wallSec, 1e-9)}%.1f,"unit":"docs/sec","pages":$nPages$kept,"wall_sec":$wallSec%.2f,"buckets":$buckets,"stages":{$stages},"out":"$outRoot"}"""
+    // Janino compilations in this JVM over the run (tasks included under
+    // local[N]); a warm long-lived driver that re-runs a plan it has
+    // already run should add ~0 (SparkBoot.CodegenCacheEntries)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    f"""{"metric":"run_docs_per_sec","value":${nPages / math.max(wallSec, 1e-9)}%.1f,"unit":"docs/sec","pages":$nPages$kept,"wall_sec":$wallSec%.2f,"buckets":$buckets,"stages":{$stages},"codegen_compiles":$compiles,"out":"$outRoot"}"""
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.SQLExecution
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
@@ -48,6 +49,7 @@ object PlanDump {
     val spark = graft.SparkBoot.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     names.foreach { n =>
       val df = qs(n)(spark, dir)
       val plan = df.queryExecution.explainString(
@@ -71,6 +73,11 @@ object PlanDump {
           .getBytes("UTF-8"))
       println(s"[plandump] $n -> $outDir/${n}_$suffix.txt")
     }
+    // the classes the dumped queries compiled: with a code cache that
+    // evicts nothing, their distinct working set
+    // (SparkBoot.CodegenCacheEntries is sized from the all-queries count)
+    println(s"[plandump] codegen_compiles=" +
+      (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0))
     spark.stop()
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * that reshape partition boundaries most at cluster scale. A query
   * whose result depends on partition count (e.g. a first() without an
   * ordering, or a non-commutative agg) fails here before it ships.
+  * Re-running a query must also reuse its generated code rather than
+  * recompile it.
   */
 class DeterminismSpec extends AnyFunSuite {
 
@@ -44,5 +47,21 @@ class DeterminismSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.shuffle.partitions", partitions0)
       spark.conf.set("spark.sql.adaptive.enabled", aqe0)
     }
+  }
+
+  test("a second interleaved pass over the curation board compiles no classes") {
+    // the four queries compile ~100 classes a pass; a code cache smaller
+    // than that working set (Spark's default 100 entries, split into 4
+    // LRU segments) evicts each class before the cycle comes back to it
+    val board = Seq("q50_dedup_clusters", "q62_curation_pipeline",
+      "q15_dedup_exact", "q38_salted_join")
+    def pass(): Long = {
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      board.foreach(n => SparkEntry.queries(n)(spark, sf).count())
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    }
+    pass()
+    val second = pass()
+    assert(second == 0, s"the second pass compiled $second classes")
   }
 }

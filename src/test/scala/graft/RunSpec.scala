@@ -23,6 +23,10 @@ class RunSpec extends AnyFunSuite {
     val json = Run.execute(spark, pagesPath, root, buckets = 4)
     assert(json.contains("\"pages\":40"), json)
     assert(json.contains("\"metric\":\"run_docs_per_sec\""), json)
+    // the run's Janino compilations, a non-negative count
+    val compiles = "\"codegen_compiles\":(-?\\d+)[,}]".r.findFirstMatchIn(json)
+      .map(_.group(1).toLong)
+    assert(compiles.exists(_ >= 0), json)
     // a clean run processed every bucket and skipped none
     assert(json.contains("\"processed\":4") && json.contains("\"skipped\":0"), json)
     // all three stages committed all four buckets

@@ -7,14 +7,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+/** The suite's one session: SparkBoot's, at local[4] with 4 shuffle
+  * partitions, so the tests run with the settings every main runs with.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkBoot.session("4")
 }
 
 /** End-to-end pipeline tests — the Spark restatement of the reference's

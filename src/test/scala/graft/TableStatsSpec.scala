@@ -2,26 +2,58 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SparkEntry's per-(dir, table) stats memo behind `tp`'s scan
-  * repartition decision and the memoized row count.
+  * repartition decision, the memoized row count and the memoized schema
+  * every table scan reads with.
   */
 class TableStatsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
 
-  /** (Re)write `dir/documents.parquet` with `rows` rows and pin the
-    * directory's mtime, so each rewrite is a distinct table version
-    * regardless of the filesystem's timestamp granularity.
+  /** (Re)write `dir/documents.parquet` with `rows` rows (plus the `extra`
+    * column expressions) and pin the directory's mtime, so each rewrite is
+    * a distinct table version regardless of the filesystem's timestamp
+    * granularity.
     */
-  private def writeDocs(dir: String, rows: Int, mtimeMs: Long): Unit = {
-    spark.range(rows).selectExpr("id AS doc_id", "repeat('x', 40) AS text")
+  private def writeDocs(dir: String, rows: Int, mtimeMs: Long, extra: String*): Unit = {
+    spark.range(rows).selectExpr(Seq("id AS doc_id", "repeat('x', 40) AS text") ++ extra: _*)
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     Files.setLastModifiedTime(Paths.get(s"$dir/documents.parquet"),
       FileTime.fromMillis(mtimeMs))
+  }
+
+  /** Spark jobs started while `f` runs on this thread. A fence job in the
+    * same job group follows `f`; the listener bus delivers in order, so
+    * once the fence arrives every job `f` started has arrived too.
+    */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"tablestats-${System.nanoTime}"
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => started.put(p.getProperty("spark.job.description", "")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      val out = f
+      sc.setJobGroup(group, "fence")
+      spark.range(1).count()
+      val body = Iterator.continually(started.poll(30, TimeUnit.SECONDS))
+        .takeWhile(d => d != null && d != "fence").size
+      (out, body)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   private def repartitioned(dir: String, name: String): Boolean =
@@ -61,5 +93,27 @@ class TableStatsSpec extends AnyFunSuite {
     assert(SparkEntry.tableStats.keys.count(_._1 == dir) == 1)
     val last = SparkEntry.tableStats((dir, "documents"))
     assert(last.mtime == 4000000L && last.rows.contains(40L) && last.bytes.isDefined)
+  }
+
+  test("a memo hit builds the scan with no Spark job") {
+    val dir = Files.createTempDirectory("graft-tablestats-schema").toString
+    writeDocs(dir, 10, 1000000L)
+    val (_, inferJobs) = jobsDuring(SparkEntry.t(spark, dir, "documents"))
+    assert(inferJobs >= 1, "the first read infers the schema with a job")
+    assert(SparkEntry.tableStats((dir, "documents")).schema.isDefined)
+    val (df, hitJobs) = jobsDuring(SparkEntry.t(spark, dir, "documents"))
+    assert(hitJobs == 0, s"a memoized read started $hitJobs jobs")
+    assert(df.columns.toSeq == Seq("doc_id", "text") && df.count() == 10)
+  }
+
+  test("a rewrite that adds a column shows the new column") {
+    val dir = Files.createTempDirectory("graft-tablestats-addcol").toString
+    writeDocs(dir, 10, 1000000L)
+    assert(SparkEntry.t(spark, dir, "documents").columns.toSeq == Seq("doc_id", "text"))
+    writeDocs(dir, 7, 2000000L, "id * 2 AS n")
+    val df = SparkEntry.t(spark, dir, "documents")
+    assert(df.columns.toSeq == Seq("doc_id", "text", "n"))
+    assert(df.selectExpr("sum(n)").first().getLong(0) == 42L)
+    assert(SparkEntry.tableStats.keys.count(_._1 == dir) == 1)
   }
 }
