@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Session bootstrap for the driver-facing mains (Smoke / Verify / Bench /
-  * Run / ReTime / Train / SoloBench / StageBench), the benchmark and the
-  * test suite's shared session.
+  * Run / Train / PlanDump), the benchmark and the test suite's shared
+  * session.
   *
   * Standalone (sbt runMain, no master configured): build `local[cpus]`
   * with `spark.sql.shuffle.partitions = cpus` — the sandbox contract.

@@ -65,12 +65,30 @@ object Checkpoint {
     f.listStatus(dir).toSeq
       .filter(s => s.getPath.getName.startsWith("bucket-"))
       .sortBy(_.getPath.getName)
-      .map { s =>
-        val in = f.open(s.getPath)
-        val line = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        parseEntry(line.trim)
-      }
+      .map(s => parseEntry(readSmall(f, s.getPath).trim))
+  }
+
+  private def readSmall(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+  }
+
+  /** Writes a one-line file with a single atomic create. */
+  private def createSmall(f: FileSystem, p: Path, line: String): Unit = {
+    val out = f.create(p, true)
+    try out.write(s"$line\n".getBytes("UTF-8")) finally out.close()
+  }
+
+  /** Pins `value` in the file `p` on first run; on a rerun, refuses any
+    * other value with `refusal(pinned)`.
+    */
+  private def pin(spark: SparkSession, p: Path, value: String)(
+      refusal: String => String): Unit = {
+    val f = fs(spark, p.toString)
+    if (f.exists(p)) {
+      val pinned = readSmall(f, p).trim
+      require(pinned == value, refusal(pinned))
+    } else createSmall(f, p, value)
   }
 
   // hand-rolled fixed-schema JSON (no external json dep in main)
@@ -96,24 +114,13 @@ object Checkpoint {
     * failure mode a resumable writer can have.
     */
   private def pinBucketCount(spark: SparkSession, root: String,
-      stage: String, nBuckets: Int): Unit = {
-    val f = fs(spark, root)
-    val p = new Path(ledgerDir(root, stage), "nbuckets")
-    if (f.exists(p)) {
-      val in = f.open(p)
-      val pinned =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-        finally in.close()
-      require(pinned == nBuckets,
-        s"stage '$stage' at $root was committed with nBuckets=$pinned; " +
-          s"resuming with nBuckets=$nBuckets would recompute rows under a " +
-          "different bucket modulus and duplicate already-committed output. " +
-          "Use the original bucket count (or a fresh root).")
-    } else {
-      val out = f.create(p, true)
-      try out.write(s"$nBuckets\n".getBytes("UTF-8")) finally out.close()
+      stage: String, nBuckets: Int): Unit =
+    pin(spark, new Path(ledgerDir(root, stage), "nbuckets"), nBuckets.toString) { pinned =>
+      s"stage '$stage' at $root was committed with nBuckets=$pinned; " +
+        s"resuming with nBuckets=$nBuckets would recompute rows under a " +
+        "different bucket modulus and duplicate already-committed output. " +
+        "Use the original bucket count (or a fresh root)."
     }
-  }
 
   /** Pin an opaque run-configuration fingerprint at the root on first
     * run; refuse a resume under a different one. Same failure class as
@@ -123,30 +130,17 @@ object Checkpoint {
     * The caller supplies the canonical string (e.g.
     * [[graft.pipeline.GraftConfig.canonical]]); an empty root adopts it.
     */
-  def pinRunConfig(spark: SparkSession, root: String, canonical: String): Unit = {
-    val f = fs(spark, root)
-    val p = new Path(root, "_config")
-    if (f.exists(p)) {
-      val in = f.open(p)
-      val pinned =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      require(pinned == canonical,
-        s"checkpoint root $root was committed under config [$pinned]; " +
-          s"resuming with [$canonical] would mix per-bucket output from two " +
-          "configs. Rerun with the original flags (or a fresh root).")
-    } else {
-      val out = f.create(p, true)
-      try out.write(s"$canonical\n".getBytes("UTF-8")) finally out.close()
+  def pinRunConfig(spark: SparkSession, root: String, canonical: String): Unit =
+    pin(spark, new Path(root, "_config"), canonical) { pinned =>
+      s"checkpoint root $root was committed under config [$pinned]; " +
+        s"resuming with [$canonical] would mix per-bucket output from two " +
+        "configs. Rerun with the original flags (or a fresh root)."
     }
-  }
 
   /** Commit one bucket's ledger entry: a single atomic file create. */
   private def commitEntry(spark: SparkSession, root: String, stage: String, e: BucketEntry): Unit = {
-    val f = fs(spark, root)
-    val p = new Path(ledgerDir(root, stage), f"bucket-${e.bucket}%05d.json")
-    val out = f.create(p, true)
-    try out.write((renderEntry(e) + "\n").getBytes("UTF-8")) finally out.close()
+    createSmall(fs(spark, root),
+      new Path(ledgerDir(root, stage), f"bucket-${e.bucket}%05d.json"), renderEntry(e))
   }
 
   /** Run one resumable stage.

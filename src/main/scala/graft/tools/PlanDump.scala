@@ -1,14 +1,19 @@
 package graft.tools
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FormattedMode, SQLExecution}
 
 /** Dump `.explain("formatted")` for named SparkEntry queries to files —
-  * the plans/r06 before/after evidence trail. Not part of the bench
-  * contract (Bench.scala is frozen); measurement stays in Bench/ReTime.
+  * the plans/r06 before/after evidence trail — and time each one's full
+  * plan. Bench.scala (frozen) times `.count()`, which prunes the joins,
+  * windows or generators of leaves whose output columns it drops; this
+  * runs the plan the leaf defines.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <suffix> q33_trigram_freq ...
-  *        (no query args = all queries)
+  *        (no query args = all queries; name a leaf N times for N-1 warm
+  *        lines, and take their min)
   *
   * The files are diffable across JVMs: [[mask]] replaces every identity
   * that differs between two runs of the same plan, so a before/after
@@ -40,44 +45,61 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2,
       "usage: PlanDump <outDir> <suffix> [query ...]")
-    val outDir = args(0)
-    val suffix = args(1)
-    val qs = graft.SparkEntry.queries // def — build the map once
     val names =
       if (args.length > 2) args.drop(2).toSeq
-      else qs.keys.toSeq.sorted
+      else graft.SparkEntry.queries.keys.toSeq.sorted
     val spark = graft.SparkBoot.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    names.foreach { n =>
-      val df = qs(n)(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-      // AQE finalizes exchange reuse / join rewrites only on execution —
-      // append the executed plan so ReusedExchange and the final join
-      // strategies are visible in the evidence files. The action runs on
-      // the df's OWN QueryExecution (count() would plan a new one, so
-      // this adaptive plan would never finalize) and returns no rows
-      // (collect() would, unbounded for pair-level outputs).
-      val qe = df.queryExecution
-      val executed =
-        try {
-          SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
-          qe.executedPlan.toString
-        } catch { case scala.util.control.NonFatal(e) =>
-          s"<execution failed: ${e.getMessage}>" }
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get(outDir, s"${n}_$suffix.txt"),
-        mask(plan + "\n\n== Executed plan (AQE final) ==\n" + executed)
-          .getBytes("UTF-8"))
-      println(s"[plandump] $n -> $outDir/${n}_$suffix.txt")
-    }
+    dump(spark, dir, args(0), args(1), names).foreach(println)
     // the classes the dumped queries compiled: with a code cache that
     // evicts nothing, their distinct working set
     // (SparkBoot.CodegenCacheEntries is sized from the all-queries count)
     println(s"[plandump] codegen_compiles=" +
       (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0))
     spark.stop()
+  }
+
+  /** The per-leaf loop: dumps each named leaf, repeats included, and yields
+    * one JSON line per leaf as it finishes:
+    * `{"leaf":…,"wall_s":…,"codegen_compiles":…}`. `wall_s` covers
+    * building the leaf's DataFrame (some leaves run Spark jobs while
+    * they are built) and executing its full plan, not the explain or the
+    * file write; a failed execution reports -1, as Bench does. Session
+    * lifecycle belongs to the caller.
+    */
+  def dump(spark: SparkSession, sfDir: String, outDir: String, suffix: String,
+      names: Seq[String]): Iterator[String] = {
+    val qs = graft.SparkEntry.queries // def — build the map once
+    Files.createDirectories(Paths.get(outDir))
+    names.iterator.map { n =>
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val t0 = System.nanoTime()
+      val df = qs(n)(spark, sfDir)
+      val builtNs = System.nanoTime() - t0
+      val plan = df.queryExecution.explainString(FormattedMode)
+      // AQE finalizes exchange reuse / join rewrites only on execution —
+      // append the executed plan so ReusedExchange and the final join
+      // strategies are visible in the evidence files. The action runs on
+      // the df's OWN QueryExecution (count() would plan a new one, so
+      // this adaptive plan would never finalize, and would prune the
+      // joins, windows or generators its output does not need) and
+      // returns no rows (collect() would, unbounded for pair-level
+      // outputs).
+      val qe = df.queryExecution
+      val (executed, wallS) =
+        try {
+          val t1 = System.nanoTime()
+          SQLExecution.withNewExecutionId(qe)(qe.toRdd.foreach(_ => ()))
+          val ranNs = System.nanoTime() - t1
+          (qe.executedPlan.toString, (builtNs + ranNs) / 1e9)
+        } catch { case scala.util.control.NonFatal(e) =>
+          (s"<execution failed: ${e.getMessage}>", -1.0) }
+      Files.write(Paths.get(outDir, s"${n}_$suffix.txt"),
+        mask(plan + "\n\n== Executed plan (AQE final) ==\n" + executed)
+          .getBytes("UTF-8"))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      f"""{"leaf":"$n","wall_s":$wallS%.3f,"codegen_compiles":$compiles}"""
+    }
   }
 }

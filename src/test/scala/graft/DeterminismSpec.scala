@@ -64,4 +64,18 @@ class DeterminismSpec extends AnyFunSuite {
     val second = pass()
     assert(second == 0, s"the second pass compiled $second classes")
   }
+
+  test("PlanDump times each named leaf, and a repeated leaf compiles nothing") {
+    val out = java.nio.file.Files.createTempDirectory("graft-plandump")
+    val lines = tools.PlanDump.dump(spark, sf, out.toString, "t",
+      Seq("q15_dedup_exact", "q15_dedup_exact")).toList
+    assert(lines.size == 2, lines)
+    val rows = lines.map(new com.fasterxml.jackson.databind.ObjectMapper().readTree(_))
+    rows.foreach { r =>
+      assert(r.get("leaf").asText == "q15_dedup_exact", r)
+      assert(r.get("wall_s").asDouble > 0, r)
+    }
+    assert(rows(1).get("codegen_compiles").asLong == 0, rows(1))
+    assert(java.nio.file.Files.size(out.resolve("q15_dedup_exact_t.txt")) > 0)
+  }
 }

@@ -23,16 +23,19 @@ sbt -batch compile >/dev/null 2>&1
 CP="target/scala-2.13/classes:src/main/resources:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 ADD_OPENS="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED"
 
-run_exec() { # $1=core-range $2=label $3=outfile
-  taskset -c "$1" java $ADD_OPENS -Xmx6g "-XX:ActiveProcessorCount=$C" \
+run_exec() { # $1=core-range $2=outfile
+  # graft.Bench's pipeline-only mode: the e2e pipeline at local[C] over
+  # C*4 partitions, full-size warmup, best of 5 timed passes; its "value"
+  # is the executor's docs/s
+  SPARK_GRAFT_PIPELINE_ONLY=1 SPARK_GRAFT_CPUS="$C" SPARK_GRAFT_BENCH_DOCS="$DOCS" \
+    taskset -c "$1" java $ADD_OPENS -Xmx6g "-XX:ActiveProcessorCount=$C" \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" graft.tools.SoloBench "$C" "$DOCS" 2 "$2" \
-    2>/dev/null | grep '"label"' > "$3"
+    -cp "$CP" graft.Bench 2>/dev/null | grep '"metric"' > "$2"
 }
 
 lo_once() { # 1 executor; echoes docs/s
-  run_exec "0-$((C-1))" lo "$OUT/lo.json"
-  python3 -c "import json;print(json.load(open('$OUT/lo.json'))['docs_per_sec'])"
+  run_exec "0-$((C-1))" "$OUT/lo.json"
+  python3 -c "import json;print(json.load(open('$OUT/lo.json'))['value'])"
 }
 
 hi_once() { # 4 concurrent executors on disjoint cores; echoes aggregate docs/s
@@ -40,7 +43,7 @@ hi_once() { # 4 concurrent executors on disjoint cores; echoes aggregate docs/s
   local t0=$(date +%s.%N)
   for i in 0 1 2 3; do
     local lo_core=$((i*C)); local hi_core=$((i*C+C-1))
-    run_exec "$lo_core-$hi_core" "hi$i" "$OUT/hi$i.json" &
+    run_exec "$lo_core-$hi_core" "$OUT/hi$i.json" &
     pids+=($!)
   done
   for p in "${pids[@]}"; do wait "$p"; done
@@ -49,7 +52,7 @@ hi_once() { # 4 concurrent executors on disjoint cores; echoes aggregate docs/s
   python3 - "$OUT" <<'EOF'
 import json, sys
 out = sys.argv[1]
-print(sum(json.load(open(f"{out}/hi{i}.json"))["docs_per_sec"] for i in range(4)))
+print(sum(json.load(open(f"{out}/hi{i}.json"))["value"] for i in range(4)))
 EOF
 }
 
