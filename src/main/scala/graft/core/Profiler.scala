@@ -203,9 +203,6 @@ object Corrector {
   ) {
     def rawOrToken: String = if (raw.nonEmpty) raw else token
     def maxCharConf: Double = if (glyphConfs.nonEmpty) glyphConfs.max else conf
-    def minCharConf: Double = if (glyphConfs.nonEmpty) glyphConfs.min else conf
-    def avgCharConf: Double =
-      if (glyphConfs.nonEmpty) glyphConfs.sum / glyphConfs.length else conf
   }
 
   def lengthClass(len: Int, short: Int, medium: Int, long: Int): Double =

@@ -617,9 +617,11 @@ object Pipeline {
     * callers can report processed-vs-skipped buckets per stage without
     * re-reading ledgers or hardcoding the stage list. Stage closures
     * resolve their resources lazily — a fully-resumed run (all ledgers
-    * complete) never pays the profile learn, because
-    * [[graft.plans.Checkpoint.runStage]] only invokes the transform when
-    * buckets are pending.
+    * complete) never pays the profile learn nor the near-dup labels,
+    * because [[graft.plans.Checkpoint.runStage]] only invokes the
+    * transform when buckets are pending. The commit protocol (bucket hash,
+    * ledger, committed-once labels) lives in [[graft.plans.Checkpoint]];
+    * this method makes no file-system call of its own.
     */
   def runCheckpointed(
       spark: SparkSession,
@@ -697,55 +699,36 @@ object Pipeline {
         // GLOBAL — no bucketing key can confine a similarity component
         // the way the fingerprint confines an exact-dup group:
         //   1. a LABELS ARTIFACT (root/neardup/_labels) computed from the
-        //      complete committed dedup table and written exactly once —
-        //      an engine-owned atomic marker file is the commit, so a
-        //      crash mid-write recomputes from the same (complete,
-        //      deterministic) input and a resume after commit reuses the
-        //      bytes without re-running CC;
+        //      complete committed dedup table and committed once
+        //      (Checkpoint.once), so a crash mid-write recomputes from the
+        //      same (complete, deterministic) input and a resume after
+        //      commit reuses the bytes without re-running CC;
         //   2. a bucket-local resumable FLAG stage (url-keyed) that
         //      left-joins the labels — partial resume reproduces clean
         //      bytes because every pending bucket joins the SAME
-        //      committed labels.
+        //      committed labels. The labels are read (or computed) inside
+        //      the flag stage's transform, which runs only when one of its
+        //      buckets is pending: a complete stage never needs them.
         // Rows are flagged (nd_keep/nd_dup_of), never dropped, matching
         // the exact-dedup lineage contract; nd_keep means "survives BOTH
         // gates" so downstream filters on one column.
-        val labelsPath = s"$root/neardup/_labels"
-        val hfs = new org.apache.hadoop.fs.Path(labelsPath)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // the commit marker is OUR OWN single atomic file create (the
-        // same primitive the per-bucket ledgers use), not the Hadoop
-        // _SUCCESS marker — cluster configs routinely disable
-        // marksuccessfuljobs (S3A committers), which would silently
-        // downgrade "computed exactly once" to recompute-per-resume
-        val markerPath = new org.apache.hadoop.fs.Path(
-          s"$root/neardup/_labels.commit")
-        val committed = hfs.exists(markerPath)
-        // a fully-committed flag stage never needs the labels again —
-        // without this, a complete resume with a lost marker would
-        // re-run the whole CC for nothing
-        val stageDone = Checkpoint.readLedger(spark, root, "neardup")
-          .map(_.bucket).toSet.size == buckets
-        if (!committed && !stageDone) {
-          val survivors = dedupOut.filter(col("keep"))
-            .select(col("url"), col("text"))
-          val labels = cfg.nearDupStrategy match {
-            case "semdedup" =>
-              graft.operators.Dedup.semDedupLabels(survivors, cfg.nearDupTau,
-                cellCap = cfg.nearDupDfGuard)
-            case "minhash" =>
-              graft.operators.Dedup.nearDupLabels(survivors, cfg.nearDupDfGuard)
-            // GraftConfig validates the strategy set; a strategy added
-            // there but not here must fail LOUDLY, not silently run
-            // minhash under a pin claiming the new strategy
-            case other => sys.error(s"unhandled nearDupStrategy '$other'")
-          }
-          labels.write.mode("overwrite").parquet(labelsPath)
-          val out = hfs.create(markerPath, true)
-          try out.write("committed\n".getBytes("UTF-8")) finally out.close()
-        }
         val nd = Checkpoint.runStage(spark, "neardup", root, dedupOut,
           "url", buckets) { df =>
-          val lbl = spark.read.parquet(labelsPath)
+          val lbl = Checkpoint.once(spark, s"$root/neardup/_labels") {
+            val survivors = dedupOut.filter(col("keep"))
+              .select(col("url"), col("text"))
+            cfg.nearDupStrategy match {
+              case "semdedup" =>
+                graft.operators.Dedup.semDedupLabels(survivors, cfg.nearDupTau,
+                  cellCap = cfg.nearDupDfGuard)
+              case "minhash" =>
+                graft.operators.Dedup.nearDupLabels(survivors, cfg.nearDupDfGuard)
+              // GraftConfig validates the strategy set; a strategy added
+              // there but not here must fail LOUDLY, not silently run
+              // minhash under a pin claiming the new strategy
+              case other => sys.error(s"unhandled nearDupStrategy '$other'")
+            }
+          }
           df.join(lbl, Seq("url"), "left")
             .withColumn("nd_keep", col("keep") && col("nd_dup_of").isNull)
         }

@@ -2,8 +2,10 @@ package graft.plans
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Per-partition checkpoint ledger — the engine's resume substrate.
   *
@@ -29,6 +31,13 @@ import org.apache.spark.sql.functions._
   *  - per-bucket row counts and wall times come from task-side
   *    accumulators inside the SAME job as the write — no extra
   *    persist+count pass over the data.
+  *
+  * This object is the one copy of the commit protocol: the bucket hash
+  * ([[bucketOf]]), the retry-safe in-job row count ([[countRows]]), the
+  * one-line atomic create and the committed-once artifact ([[once]]).
+  * [[graft.sources.PagesTable]] and the near-dup stage of
+  * [[graft.pipeline.Pipeline.runCheckpointed]] call them rather than
+  * restating them.
   *
   * Emulates the Iceberg snapshot/manifest contract with plain partitioned
   * Parquet + manifest files (SURVEY.md §7.4) since no Iceberg runtime jar
@@ -73,9 +82,11 @@ object Checkpoint {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
 
-  /** Writes a one-line file with a single atomic create. */
-  private def createSmall(f: FileSystem, p: Path, line: String): Unit = {
-    val out = f.create(p, true)
+  /** Writes a one-line file with a single atomic create (atomic on object
+    * stores too, where only single-file puts are).
+    */
+  private[graft] def createSmall(spark: SparkSession, path: String, line: String): Unit = {
+    val out = fs(spark, path).create(new Path(path), true)
     try out.write(s"$line\n".getBytes("UTF-8")) finally out.close()
   }
 
@@ -88,7 +99,7 @@ object Checkpoint {
     if (f.exists(p)) {
       val pinned = readSmall(f, p).trim
       require(pinned == value, refusal(pinned))
-    } else createSmall(f, p, value)
+    } else createSmall(spark, p.toString, value)
   }
 
   // hand-rolled fixed-schema JSON (no external json dep in main)
@@ -139,8 +150,83 @@ object Checkpoint {
 
   /** Commit one bucket's ledger entry: a single atomic file create. */
   private def commitEntry(spark: SparkSession, root: String, stage: String, e: BucketEntry): Unit = {
-    createSmall(fs(spark, root),
-      new Path(ledgerDir(root, stage), f"bucket-${e.bucket}%05d.json"), renderEntry(e))
+    createSmall(spark, f"${ledgerDir(root, stage)}/bucket-${e.bucket}%05d.json", renderEntry(e))
+  }
+
+  /** The bucket of a row: `pmod(xxhash64(key), n)`. The one spelling of
+    * the hash, so a [[graft.sources.PagesTable]] `p_bucket` and a stage's
+    * bucket agree whenever the bucket counts do.
+    */
+  def bucketOf(key: Column, n: Int): Column = pmod(xxhash64(key), lit(n)).cast("int")
+
+  /** One successful task attempt's rows and wall ms for one key. */
+  private[graft] final case class TaskCount(partition: Int, attempt: Int, key: Int, rows: Long, wallMs: Long)
+
+  /** Driver-side half of [[countRows]]: keeps the last successful attempt
+    * of each partition, then sums rows and wall ms per key. Any successful
+    * attempt saw its whole partition, so which one is kept does not change
+    * the counts; keeping only one stops a retried or speculative task from
+    * being counted twice.
+    */
+  private[graft] def lastAttemptTotals(counts: Seq[TaskCount]): Map[Int, (Long, Long)] = {
+    val last = counts.groupMapReduce(_.partition)(_.attempt)(math.max)
+    counts.filter(c => c.attempt == last(c.partition))
+      .groupMapReduce(_.key)(c => (c.rows, c.wallMs)) {
+        case ((n1, w1), (n2, w2)) => (n1 + n2, w1 + w2)
+      }
+  }
+
+  /** Counts rows per `key` inside whatever job consumes the returned frame,
+    * so a write needs no second pass to learn its size. A task's wall time
+    * is split over its keys by row count.
+    *
+    * Accumulators updated in transformations are not retry-exactly-once: a
+    * retried task adds again. So only successful, non-interrupted attempts
+    * emit (a failed or speculatively-killed attempt's completion listener
+    * still fires, with partial counts), and the returned function reduces
+    * them with [[lastAttemptTotals]]. Call it after the job has run.
+    */
+  def countRows(df: DataFrame, name: String)(
+      key: Row => Int): (DataFrame, () => Map[Int, (Long, Long)]) = {
+    val acc = df.sparkSession.sparkContext.collectionAccumulator[TaskCount](name)
+    val counted = df.mapPartitions { it =>
+      val t0 = System.currentTimeMillis()
+      val counts = scala.collection.mutable.HashMap.empty[Int, Long]
+      Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit] { ctx =>
+        if (!ctx.isFailed() && !ctx.isInterrupted()) {
+          val wall = System.currentTimeMillis() - t0
+          val total = counts.values.sum.max(1L)
+          counts.foreach { case (k, n) =>
+            acc.add(TaskCount(ctx.partitionId(), ctx.attemptNumber(), k, n,
+              math.max(1L, wall * n / total)))
+          }
+        }
+      })
+      it.map { r =>
+        val k = key(r)
+        counts(k) = counts.getOrElse(k, 0L) + 1L
+        r
+      }
+    }(Encoders.row(df.schema))
+    (counted, () => lastAttemptTotals(acc.value.asScala.toSeq))
+  }
+
+  /** A committed-once artifact: if `<path>.commit` is absent, writes
+    * `compute` to `path` (overwrite), then creates the marker with the same
+    * single atomic create as a ledger entry; either way returns the read of
+    * `path`. A crash before the marker recomputes the whole artifact. The
+    * marker is the engine's own, not Hadoop's `_SUCCESS`: S3A committers
+    * and `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` disable
+    * that one, which would silently turn "computed once" into "recomputed
+    * on every resume".
+    */
+  def once(spark: SparkSession, path: String)(compute: => DataFrame): DataFrame = {
+    val marker = s"$path.commit"
+    if (!fs(spark, marker).exists(new Path(marker))) {
+      compute.write.mode(SaveMode.Overwrite).parquet(path)
+      createSmall(spark, marker, "committed")
+    }
+    spark.read.parquet(path)
   }
 
   /** Run one resumable stage.
@@ -151,7 +237,8 @@ object Checkpoint {
     * @param keyCol   column whose hash defines the bucket (e.g. "url")
     * @param nBuckets bucket count — the resume granularity; at cluster
     *                 scale set ≈ executors × a small factor
-    * @param f        the stage transform. CONTRACT: it must keep `keyCol`
+    * @param f        the stage transform, invoked only when some bucket is
+    *                 pending. CONTRACT: it must keep `keyCol`
     *                 in its output and must not rewrite its values — the
     *                 bucket is recomputed after the transform, and a row
     *                 whose key migrated to a bucket outside the pending
@@ -173,69 +260,38 @@ object Checkpoint {
     val todo = all.filterNot(done)
     val out = dataPath(root, stage)
 
-    var outSchema: org.apache.spark.sql.types.StructType = null
-    if (todo.nonEmpty) {
-      val bucketOf = pmod(xxhash64(col(keyCol)), lit(nBuckets)).cast("int")
+    val output = if (todo.isEmpty) spark.read.parquet(out) else {
+      val bucket = bucketOf(col(keyCol), nBuckets)
       // resume filter FIRST (prune completed buckets before any work),
       // then the stage transform, then per-bucket dynamic overwrite
-      val pending = in.withColumn("p_bucket", bucketOf)
+      val pending = in.withColumn("p_bucket", bucket)
         .filter(col("p_bucket").isin(todo: _*))
       // cluster rows by bucket before the partitioned write: otherwise
       // every task opens a parquet writer per bucket it sees (tasks x
       // buckets writer inits — the classic dynamic-partitioning write
       // explosion); clustered, each bucket is written by few tasks
       val transformed = f(pending)
-        .withColumn("p_bucket", bucketOf)
+        .withColumn("p_bucket", bucket)
         .repartition(nBuckets, col("p_bucket"))
-      outSchema = transformed.schema
 
-      // per-bucket stats from inside the write job: rows per bucket and
-      // task wall attributed to each bucket proportionally by row count.
-      // Stats carry (partitionId, attempt) because accumulators in
-      // TRANSFORMATIONS are not retry-exactly-once: a retried task adds
-      // its tuples again. Only SUCCESSFUL attempts emit (a failed or
-      // speculatively-killed task's completion listener still fires, and
-      // its PARTIAL counts must not displace a committed attempt's), and
-      // the driver then keeps one attempt per partition — any successful
-      // attempt saw the full partition, so their counts are identical.
-      val statsAcc = spark.sparkContext
-        .collectionAccumulator[(Int, Int, Int, Long, Long)](s"graft.ledger.$stage")
+      // per-bucket rows and wall from inside the write job
       val todoSet = todo.toSet
       val bIdx = transformed.schema.fieldIndex("p_bucket")
-      val enc = Encoders.row(transformed.schema)
-      val stageName = stage; val keyName = keyCol
-      val tracked = transformed.mapPartitions { it =>
-        val t0 = System.currentTimeMillis()
-        val counts = scala.collection.mutable.HashMap.empty[Int, Long]
-        val tc = Option(TaskContext.get())
-        val pid = tc.map(_.partitionId()).getOrElse(0)
-        val att = tc.map(_.attemptNumber()).getOrElse(0)
-        tc.foreach(_.addTaskCompletionListener[Unit] { ctx =>
-          if (!ctx.isFailed() && !ctx.isInterrupted()) {
-            val wall = System.currentTimeMillis() - t0
-            val total = counts.values.sum.max(1L)
-            counts.foreach { case (b, n) =>
-              statsAcc.add((pid, att, b, n, math.max(1L, wall * n / total)))
-            }
-          }
-        })
-        it.map { r =>
-          val b = r.getInt(bIdx)
-          // key-stability contract check IN the write tasks: a row whose
-          // recomputed bucket left the pending set means the transform
-          // rewrote the key column, and writing it would dynamically
-          // overwrite an already-committed bucket's partition. Failing the
-          // task here aborts the job BEFORE the output commit, so
-          // committed buckets stay intact (a post-write driver check would
-          // detect the clobbering only after it happened).
-          if (!todoSet.contains(b))
-            throw new IllegalStateException(
-              s"stage '$stageName': row bucket $b is outside the pending " +
-                s"set — the transform rewrote '$keyName' values")
-          counts(b) = counts.getOrElse(b, 0L) + 1L
-          r
-        }
-      }(enc)
+      val (tracked, perBucket) = countRows(transformed, s"graft.ledger.$stage") { r =>
+        val b = r.getInt(bIdx)
+        // key-stability contract check IN the write tasks: a row whose
+        // recomputed bucket left the pending set means the transform
+        // rewrote the key column, and writing it would dynamically
+        // overwrite an already-committed bucket's partition. Failing the
+        // task here aborts the job BEFORE the output commit, so
+        // committed buckets stay intact (a post-write driver check would
+        // detect the clobbering only after it happened).
+        if (!todoSet.contains(b))
+          throw new IllegalStateException(
+            s"stage '$stage': row bucket $b is outside the pending " +
+              s"set — the transform rewrote '$keyCol' values")
+        b
+      }
 
       tracked.write
         .mode(SaveMode.Overwrite)
@@ -243,19 +299,7 @@ object Checkpoint {
         .partitionBy("p_bucket")
         .parquet(out)
 
-      // keep one (the last) successful attempt per partition
-      val lastAttempt = new scala.collection.mutable.HashMap[Int, Int]()
-      statsAcc.value.forEach { case (pid, att, _, _, _) =>
-        if (att > lastAttempt.getOrElse(pid, -1)) lastAttempt(pid) = att
-      }
-
-      val stats = new scala.collection.mutable.HashMap[Int, (Long, Long)]()
-      statsAcc.value.forEach { case (pid, att, b, n, w) =>
-        if (att == lastAttempt.getOrElse(pid, 0)) {
-          val (pn, pw) = stats.getOrElse(b, (0L, 0L))
-          stats(b) = (pn + n, pw + w)
-        }
-      }
+      val stats = perBucket()
       val now = System.currentTimeMillis()
       // ledger commit AFTER the data commit: a crash between the two
       // re-processes those buckets (overwrite makes that idempotent)
@@ -267,24 +311,12 @@ object Checkpoint {
         val (rows, wall) = stats.getOrElse(b, (0L, 0L))
         commitEntry(spark, root, stage, BucketEntry(stage, b, rows, wall, now))
       }
+      // read back with the write job's schema, laid out as a partitioned
+      // read lays it out (data columns, then p_bucket): no inference job,
+      // and all-empty pending buckets leave no data file to infer from
+      val (parts, data) = transformed.schema.partition(_.name == "p_bucket")
+      spark.read.schema(StructType(data ++ parts)).parquet(out)
     }
-
-    // read back with a guard for the all-buckets-empty case, where the
-    // partitioned write leaves no parquet data files to infer from
-    val output =
-      if (fs(spark, root).exists(new Path(out))) {
-        try spark.read.parquet(out)
-        catch {
-          case e: org.apache.spark.sql.AnalysisException
-              if outSchema != null && e.getMessage.contains("infer") =>
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-        }
-      } else if (outSchema != null) {
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
-      } else {
-        throw new IllegalStateException(
-          s"stage '$stage': no data and no ledger — nothing was ever written")
-      }
 
     StageResult(
       output,

@@ -1,8 +1,8 @@
 package graft.sources
 
 import graft.core.PageRow
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SaveMode, SparkSession}
+import graft.plans.Checkpoint
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The Pages storage layout — the Iceberg-style table the engine scans at
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * columns over plain Parquet since no Iceberg runtime jar ships offline
   * (SURVEY §7.4):
   *
-  *   root/p_day=[days since epoch]/p_bucket=[xxhash64(url) mod N]/part-....parquet
+  *   root/p_day=[days since epoch]/p_bucket=[Checkpoint.bucketOf(url, N)]/part-....parquet
   *
   * `p_day` gives time-range partition pruning (Iceberg's `days(warc_ts)`
   * transform); `p_bucket` gives url-bucket co-location (Iceberg's
@@ -29,7 +29,7 @@ object PagesTable {
     */
   private def withPartitions(df: DataFrame, buckets: Int): DataFrame =
     df.withColumn("p_day", datediff(to_date(col("warc_ts")), lit("1970-01-01")))
-      .withColumn("p_bucket", pmod(xxhash64(col("url")), lit(buckets)).cast("int"))
+      .withColumn("p_bucket", Checkpoint.bucketOf(col("url"), buckets))
 
   def write(pages: Dataset[PageRow], root: String, buckets: Int = defaultBuckets): Unit = {
     val spark = pages.sparkSession
@@ -37,44 +37,16 @@ object PagesTable {
       // cluster by partition tuple: one writer per (day, bucket) instead of
       // tasks x partitions writer inits
       .repartition(col("p_day"), col("p_bucket"))
-    // manifest row count from the SAME job as the write (accumulator) —
-    // re-reading the table just to count paid a second full scan. Tuples
-    // carry (partitionId, attempt): transformation-side accumulators are
-    // not retry-exactly-once, so only SUCCESSFUL attempts emit (a failed
-    // or speculatively-killed task's completion listener still fires with
-    // a PARTIAL count that must not displace a committed attempt's), and
-    // the driver keeps one attempt per partition (same protocol as
-    // Checkpoint's ledger stats).
-    val rowsAcc = spark.sparkContext
-      .collectionAccumulator[(Int, Int, Long)]("pagesTableRows")
-    val counted = df.mapPartitions { it =>
-      val tc = Option(org.apache.spark.TaskContext.get())
-      val pid = tc.map(_.partitionId()).getOrElse(0)
-      val att = tc.map(_.attemptNumber()).getOrElse(0)
-      var n = 0L
-      tc.foreach(_.addTaskCompletionListener[Unit] { ctx =>
-        if (!ctx.isFailed() && !ctx.isInterrupted()) rowsAcc.add((pid, att, n))
-      })
-      it.map { r => n += 1L; r }
-    }(Encoders.row(df.schema))
+    // manifest row count from the SAME job as the write — re-reading the
+    // table just to count paid a second full scan
+    val (counted, totals) = Checkpoint.countRows(df, "pagesTableRows")(_ => 0)
     counted.write.mode(SaveMode.Overwrite)
       .partitionBy("p_day", "p_bucket")
       .parquet(s"$root/data")
-    val lastAttempt = new scala.collection.mutable.HashMap[Int, Int]()
-    rowsAcc.value.forEach { case (pid, att, _) =>
-      if (att > lastAttempt.getOrElse(pid, -1)) lastAttempt(pid) = att
-    }
-    var rows = 0L
-    rowsAcc.value.forEach { case (pid, att, n) =>
-      if (att == lastAttempt.getOrElse(pid, 0)) rows += n
-    }
-    val manifest =
-      s"""{"format":"pages-table-v1","buckets":$buckets,"partitioning":["days(warc_ts)","bucket(url,$buckets)"],"rows":$rows}"""
-    // manifest via the Hadoop FS API: root may be HDFS/S3, and a single
-    // file create is atomic on object stores
-    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(new Path(root, "manifest.json"), true)
-    try out.write(manifest.getBytes("UTF-8")) finally out.close()
+    val rows = totals().get(0).fold(0L)(_._1)
+    // one atomic create, like a ledger entry: root may be HDFS/S3
+    Checkpoint.createSmall(spark, s"$root/manifest.json",
+      s"""{"format":"pages-table-v1","buckets":$buckets,"partitioning":["days(warc_ts)","bucket(url,$buckets)"],"rows":$rows}""")
   }
 
   /** Scan returning the logical schema; partition columns stay available

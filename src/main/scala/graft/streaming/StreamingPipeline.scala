@@ -15,7 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * The reference is pure batch (SURVEY §1.2: no streaming abstraction
   * exists), so parity does not require this — but the pipeline is a
   * narrow, stateless map chain, which means the SAME stage functions run
-  * unchanged under `readStream`: micro-batches of pages stream through
+  * unchanged under `readStream`: the streaming pipeline is the batch
+  * [[Pipeline.run]] applied to a stream (e.g. `Pipeline.run(pagesStream(spark))`
+  * into [[writer]]), so micro-batches of pages stream through
   * segment -> align -> correct with no watermark or state store needed.
   * This is the continuous-ingest mode a crawl feed would use; per-batch
   * output commits give the same resume granularity as the batch ledger
@@ -36,10 +38,6 @@ object StreamingPipeline {
       .select("value").as[Long]
       .map(i => PagesGen.page(i).row)
   }
-
-  /** The streaming pipeline: the batch [[Pipeline.run]] itself. */
-  def corrected(pages: Dataset[PageRow]): Dataset[CorrectedPage] =
-    Pipeline.run(pages)
 
   /** Stateful cross-batch url dedup via mapGroupsWithState: a crawl feed
     * re-delivers urls (recrawls, retries); the first sighting wins and

@@ -279,8 +279,8 @@ object Train {
     // 7.6) and the DM veto was dead code. LE-accepted tokens are valid
     // words the ranker would still "correct" — exactly the wrong-top-
     // candidate negatives the DM must learn to veto on realistic data. ----
-    val rrW = rr.w; val rrB = rr.bias; val leW = le.w; val leB = le.bias
-    // rows: (dmFeatures, label, leAccepted-flag)
+    val rrW = rr.w; val rrB = rr.bias
+    // rows: (dmFeatures, label)
     val dmRows = exs.flatMap { ex =>
       val lex = bLexs.value(ex.lang)
       if (!lex.contains(ex.ctx.token)) {
@@ -292,9 +292,7 @@ object Train {
         if (ranked.nonEmpty && ranked.head.candidate.suggestion != ex.ctx.token) {
           val y = if (ranked.head.candidate.suggestion == ex.truth &&
             ex.ctx.token != ex.truth) 1.0 else 0.0
-          val leAcc = Corrector.sigmoid(
-            Corrector.dot(Corrector.leFeatures(ex.ctx, cands, lex), leW, leB)) > 0.5
-          Iterator.single((Corrector.dmFeatures(ranked), y, if (leAcc) 1.0 else 0.0))
+          Iterator.single((Corrector.dmFeatures(ranked), y))
         } else Iterator.empty
       } else Iterator.empty
     }.persist(StorageLevel.MEMORY_AND_DISK)
@@ -304,16 +302,6 @@ object Train {
       s"degenerate DM training set: $nDmPos positives / $nDm examples — a " +
         "one-class fit collapses to a constant and the decision-maker " +
         "veto becomes dead code")
-    sys.env.get("GRAFT_TRAIN_DUMP").foreach { p =>
-      // debug-only diagnostic dump — the single place examples reach the
-      // driver, behind an env flag, never in the training path
-      val sb = new StringBuilder
-      dmRows.collect().foreach { case (x, y, leAcc) =>
-        sb.append(x.mkString("\t")).append('\t').append(y)
-          .append('\t').append(leAcc).append('\n')
-      }
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(p), sb.toString)
-    }
     // positives are upweighted (a false VETO silently re-breaks a token the
     // ranker had fixed — the worst failure mode), then the bias is
     // calibrated so the weakest training positive scores 0.70: every true
@@ -323,24 +311,24 @@ object Train {
     // 3 DM features (verified by perceptron), so without the calibration
     // any usable fit trades false vetoes against dead-code constancy.
     def logit(p: Double): Double = math.log(p / (1.0 - p))
-    val dmData = dmRows.map { case (x, y, _) => (x, y, if (y == 1.0) 8.0 else 1.0) }
+    val dmData = dmRows.map { case (x, y) => (x, y, if (y == 1.0) 8.0 else 1.0) }
     val dm0 = fitLogisticRdd(rightSized(dmData, nDm), 3, epochs)
     // clamp away from 1.0: a fully-saturated weakest positive would give
     // logit = +inf and poison the bias shift. min is exactly commutative —
     // no fixed-point needed for a distributed minimum.
     val dm0W = dm0.w; val dm0B = dm0.bias
     val posMin = dmRows.filter(_._2 == 1.0)
-      .map { case (x, _, _) => Corrector.sigmoid(Corrector.dot(x, dm0W, dm0B)) }
+      .map { case (x, _) => Corrector.sigmoid(Corrector.dot(x, dm0W, dm0B)) }
       .reduce(math.min).min(1.0 - 1e-12)
     val dm = dm0.copy(bias = dm0.bias + (logit(0.70) - logit(posMin)))
     // the calibrated head must be loss-free on true corrections AND still
     // discriminate: a constant fit means the veto never (or always) fires
     val dmW = dm.w; val dmB = dm.bias; val thr = Corrector.dmThreshold
-    val falseVetoes = dmRows.filter { case (x, y, _) =>
+    val falseVetoes = dmRows.filter { case (x, y) =>
       y == 1.0 && Corrector.sigmoid(Corrector.dot(x, dmW, dmB)) <= thr
     }.count()
     require(falseVetoes == 0, s"$falseVetoes true corrections vetoed after calibration")
-    val liveVetoes = dmRows.filter { case (x, y, _) =>
+    val liveVetoes = dmRows.filter { case (x, y) =>
       y == 0.0 && Corrector.sigmoid(Corrector.dot(x, dmW, dmB)) <= thr
     }.count()
     require(liveVetoes > 0,

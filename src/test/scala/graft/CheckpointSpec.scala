@@ -166,4 +166,47 @@ class CheckpointSpec extends AnyFunSuite {
     assert(res.ledger.size == 4 && res.ledger.forall(_.rows == 0L))
     rmTree(Paths.get(root))
   }
+
+  test("attempt reduction keeps only the last successful attempt of each partition") {
+    import Checkpoint.TaskCount
+    // partition 0 succeeded twice (a retry, or a speculative copy that
+    // also finished) with different counts; partition 1 once, over two keys
+    val counts = Seq(
+      TaskCount(partition = 0, attempt = 0, key = 1, rows = 5, wallMs = 10),
+      TaskCount(partition = 1, attempt = 0, key = 1, rows = 3, wallMs = 4),
+      TaskCount(partition = 0, attempt = 1, key = 1, rows = 7, wallMs = 12),
+      TaskCount(partition = 1, attempt = 0, key = 2, rows = 2, wallMs = 1))
+    assert(Checkpoint.lastAttemptTotals(counts) == Map(1 -> (10L, 16L), 2 -> (2L, 1L)))
+    assert(Checkpoint.lastAttemptTotals(Nil).isEmpty)
+  }
+
+  test("read-back schema equals a plain read when the transform appends columns after p_bucket") {
+    // the dedup stage's shape: keep/dup_of land after p_bucket in the
+    // transform's schema, while a partitioned read puts p_bucket last
+    val root = tmpRoot()
+    val res = Checkpoint.runStage(spark, "s", root, input(), "url", 4)(df =>
+      df.withColumn("keep", col("v") % 2 === 0)
+        .withColumn("dup_of", when(col("keep"), lit(null).cast("string")).otherwise(col("url"))))
+    val plain = spark.read.parquet(s"$root/s/data").schema
+    assert(res.output.schema == plain, s"${res.output.schema} != $plain")
+    assert(res.output.columns.toSeq == Seq("url", "v", "keep", "dup_of", "p_bucket"))
+    assert(res.output.count() == 200L)
+    // a full resume reads the same columns back
+    val again = Checkpoint.runStage(spark, "s", root, input(), "url", 4)(identity)
+    assert(again.processedBuckets.isEmpty && again.output.schema == plain)
+    rmTree(Paths.get(root))
+  }
+
+  test("once computes an artifact until its commit marker exists") {
+    import spark.implicits._
+    val root = tmpRoot()
+    var computed = 0
+    def artifact() = Checkpoint.once(spark, s"$root/a") { computed += 1; Seq(1, 2, 3).toDF("x") }
+    assert(artifact().count() == 3L && computed == 1)
+    assert(Files.readString(Paths.get(s"$root/a.commit")) == "committed\n")
+    assert(artifact().count() == 3L && computed == 1, "a committed artifact was recomputed")
+    Files.delete(Paths.get(s"$root/a.commit"))
+    assert(artifact().count() == 3L && computed == 2, "a lost marker must recompute")
+    rmTree(Paths.get(root))
+  }
 }

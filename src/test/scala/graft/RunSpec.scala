@@ -408,4 +408,28 @@ class RunSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException](
       Run.parseConfig(Seq("--neardup-strategy=simhash")))
   }
+
+  test("neardup full resume with only the labels marker lost does not recompute the labels") {
+    // every flag bucket is committed, so the flag stage's transform (the
+    // only place the labels are read or computed) never runs: the labels
+    // files keep their bytes and mtimes although their marker is gone
+    val cfg = Run.parseConfig(Seq("--dedup=true", "--neardup=true"))
+    val root = tmp("nd-full")
+    Run.execute(spark, "synth:24", root, buckets = 2, cfg)
+    val labels = java.nio.file.Paths.get(s"$root/neardup/_labels")
+    def files() = {
+      val s = java.nio.file.Files.list(labels)
+      try s.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path]).sortBy(_.toString).map { f =>
+        (f.getFileName.toString, java.nio.file.Files.getLastModifiedTime(f),
+          java.security.MessageDigest.getInstance("SHA-256")
+            .digest(java.nio.file.Files.readAllBytes(f)).map("%02x".format(_)).mkString)
+      } finally s.close()
+    }
+    val before = files()
+    assert(before.exists(_._1.endsWith(".parquet")), s"no labels written: $before")
+    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$root/neardup/_labels.commit"))
+    val json = Run.execute(spark, "synth:24", root, buckets = 2, cfg)
+    assert(""""neardup":\{[^}]*"processed":0,"skipped":2\}""".r.findFirstIn(json).nonEmpty, json)
+    assert(files() == before, "full resume recomputed the labels")
+  }
 }

@@ -54,7 +54,8 @@ class SourcesStreamingSpec extends AnyFunSuite {
     PagesTable.write(Pipeline.generate(spark, 80), root, buckets = 8)
     val b3 = PagesTable.scanBucket(spark, root, 3)
       .select(col("url")).collect().map(_.getString(0)).toSet
-    // same hash expression as Checkpoint: xxhash64(url) % 8
+    // the frozen layout, spelled independently of Checkpoint.bucketOf:
+    // pmod(xxhash64(url), 8)
     val expected = PagesTable.read(spark, root)
       .filter(pmod(xxhash64(col("url")), lit(8)) === 3)
       .select(col("url")).collect().map(_.getString(0)).toSet
@@ -125,7 +126,7 @@ class SourcesStreamingSpec extends AnyFunSuite {
     val out = Files.createTempDirectory("graft-stream-out").toString
     val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
     val q = StreamingPipeline.writer(
-      StreamingPipeline.corrected(StreamingPipeline.pagesStream(spark, rowsPerSecond = 500)),
+      Pipeline.run(StreamingPipeline.pagesStream(spark, rowsPerSecond = 500)),
       s"$out/data", ckpt,
       org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds")).start()
     // poll until at least one non-empty micro-batch committed (rate source
