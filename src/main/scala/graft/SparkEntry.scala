@@ -291,17 +291,38 @@ object SparkEntry {
   /** 24-char-shingle decontamination hits (sh, doc_id): one row per
     * train-split doc (b < 8) and distinct shingle it shares with the
     * held-out test split (b = 9). `docs` must carry (doc_id, text, b).
-    * Scale shape: the benchmark side's distinct shingles BROADCAST; the
-    * train side dedupes its shingles row-locally before the semi-join.
-    * q61 counts the hits per doc; [[contaminatedTrainDocs]] keeps the
-    * doc ids.
+    * Both sides list each doc's distinct windows as (h, pos) with
+    * `graft_window_hashes` (no string per window). The train windows
+    * probe the BROADCAST test windows on the 64-bit `h` alone (a long-keyed
+    * hashed relation); a 24-char string is built only to check a hash
+    * hit against the test window's bytes, so a 64-bit collision adds a
+    * candidate that the check rejects and never drops a hit (the argument
+    * is on [[graft.functions.ShingleKernel.windows]]). The probe is a semi-join,
+    * so a window that recurs in many test docs still matches once and the
+    * test side needs no global distinct. The two prefix tests spell string
+    * equality so that the planner keeps `h` the only join key: an `=`
+    * between the sides would become a second, string-valued key and build
+    * the string of every train window. q61 counts the hits per doc;
+    * [[contaminatedTrainDocs]] keeps the doc ids.
     */
   private def decontamHits(docs: DataFrame): DataFrame = {
-    val testSh = docs.filter(col("b") === 9)
-      .select(explode(array_distinct(Dedup.shingles(24))).as("sh")).distinct()
-    docs.filter(col("b") < 8)
-      .select(col("doc_id"), explode(array_distinct(Dedup.shingles(24))).as("sh"))
-      .join(broadcast(testSh), Seq("sh"))
+    def windows(d: DataFrame) =
+      d.select(col("doc_id"), col("text"), explode(expr("graft_window_hashes(text, 24, 1)")).as("w"))
+        .select(col("doc_id"), col("text"), col("w.h").as("h"), col("w.pos").as("pos"))
+    windowProbe(windows(docs.filter(col("b") < 8)), windows(docs.filter(col("b") === 9)))
+  }
+
+  /** The probe of [[decontamHits]] over two window frames (doc_id, text,
+    * h, pos), each window `substring(text, pos, 24)` with hash `h`:
+    * (sh, doc_id) for every train window whose bytes equal some test
+    * window's.
+    */
+  private[graft] def windowProbe(train: DataFrame, test: DataFrame): DataFrame = {
+    val sh = col("text").substr(col("pos"), lit(24))
+    val testSide = test.select(col("h").as("test_h"), sh.as("test_sh"))
+    train.join(broadcast(testSide), col("h") === col("test_h") &&
+        sh.startsWith(col("test_sh")) && col("test_sh").startsWith(sh), "left_semi")
+      .select(sh.as("sh"), col("doc_id"))
   }
 
   /** 24-char-shingle contamination set: train-split docs sharing ANY

@@ -42,6 +42,18 @@ object SqlFunctions {
       case _ => throw new IllegalArgumentException(
         "graft_shingles(text, literal len, literal stride) expects 3 arguments")
     }),
+    // graft_window_hashes(text, len, stride), len and stride literals
+    ("graft_window_hashes", classOf[WindowHashes], {
+      case Seq(c, Literal(l: Int, IntegerType), Literal(s: Int, IntegerType)) =>
+        WindowHashes(c, l, s)
+      case _ => throw new IllegalArgumentException(
+        "graft_window_hashes(text, literal len, literal stride) expects 3 arguments")
+    }),
+    ("graft_fingerprint2", classOf[Fingerprint2], {
+      case Seq(c) => Fingerprint2(c)
+      case _ => throw new IllegalArgumentException(
+        "graft_fingerprint2(text) expects exactly 1 argument")
+    }),
     ("graft_repetition_stats", classOf[RepetitionStats], {
       case Seq(c) => RepetitionStats(c)
       case _ => throw new IllegalArgumentException(

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -43,22 +45,17 @@ object Dedup {
 
   /** Two-lane commutative multiset fingerprint columns (fp1, fp2) over
     * `text` — the exact-dedup key (SparkEntry q15/q51 and the production
-    * Run dedup stage). Lane i sums 48-bit md5 slices (chars 1-12 /
-    * 13-24) mod a distinct ~2^61/2^60 prime, reducing mod p at every
-    * addition step (a < p, x < 2^48, so a + x never overflows int64).
-    * Modular addition is commutative and map-side combinable; the pair
-    * key lives in a ~2^121 space, so at 10^12 docs the birthday
-    * collision mass is ~10^24 * 2^-121 ~= 4e-13.
+    * Run dedup stage), computed by the `graft_fingerprint2` kernel
+    * ([[graft.functions.FingerprintKernel]]: one md5 per space-split
+    * token, 48-bit digest slices summed mod a ~2^61 and a ~2^60 prime).
+    * A null text gives null lanes.
     */
   def fingerprintLanes(docs: DataFrame): DataFrame = {
-    def lane(from: Int, p: String) =
-      s"""aggregate(
-         |  transform(split(text, ' '),
-         |    t -> cast(conv(substring(md5(to_binary(t, 'utf-8')), $from, 12), 16, 10) as bigint)),
-         |  cast(0 as bigint), (a, x) -> pmod(a + x, ${p}L))""".stripMargin
+    graft.functions.SqlFunctions.register(docs.sparkSession)
     docs
-      .withColumn("fp1", expr(lane(1, "2305843009213693951")))
-      .withColumn("fp2", expr(lane(13, "1152921504606846883")))
+      .withColumn("_fp", expr("graft_fingerprint2(text)"))
+      .select(docs.columns.toIndexedSeq.map(col) ++
+        Seq(col("_fp.fp1").as("fp1"), col("_fp.fp2").as("fp2")): _*)
   }
 
   /** 8-hash MinHash signature columns h0..h7 appended to `docs` (which
@@ -301,11 +298,12 @@ object Dedup {
   /** [[connectedComponents]] plus the number of propagation rounds the
     * fixpoint took, returned per call (the convergence-shape assertions
     * in DedupSpec read it). The small-graph exit runs no rounds and
-    * returns 0: the symmetrized edge set is counted, and when it holds at
-    * most [[DriverBudget.bytes]] / 16 edges it is collected and labelled
-    * by [[driverComponents]]; over the budget (or with the budget ≤ 0)
-    * the distributed loop runs on the same cached edge set, so the
-    * caller's edge derivation is evaluated once on either path.
+    * returns 0: one job ([[driverEdges]]) counts the symmetrized edge set
+    * and collects it, and when it holds at most [[DriverBudget.bytes]] / 16
+    * edges it is labelled by [[driverComponents]]; over the budget (or
+    * with the budget ≤ 0) the distributed loop runs on the same cached
+    * edge set, so the caller's edge derivation is evaluated once on either
+    * path.
     *
     * @param edgesDistinct caller guarantees `edges` holds DISTINCT
     *                       directed pairs with `src < dst` (the band-join
@@ -332,12 +330,15 @@ object Dedup {
         struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
     val sym = (if (edgesDistinct) sym0 else sym0.distinct()).persist()
-    // small-graph exit: the count materializes the cached sym, which
-    // either branch then reads — the edge derivation runs once
+    // small-graph exit: one job materializes the cached sym, counts it and
+    // ships its half while it fits; over the budget the loop reads the
+    // cache — the edge derivation runs once on either path
     val budget = DriverBudget.bytes(vertices.sparkSession) / EdgeBytes
     val (labels, rounds) =
-      if (budget > 0 && sym.count() <= budget) (driverComponents(sym), 0)
-      else labelPropagation(vertices, sym, maxRounds)
+      (if (budget > 0) driverEdges(sym, budget) else None) match {
+        case Some(ends) => (driverComponents(sym.sparkSession, ends), 0)
+        case None => labelPropagation(vertices, sym, maxRounds)
+      }
     // isolated vertices = singleton components, attached without ever
     // entering the propagation loop. Anti-join against the final labels
     // (a checkpoint or the driver leaf, whose id set == the edge
@@ -356,30 +357,54 @@ object Dedup {
     */
   private val EdgeBytes = 16L
 
-  /** The small-graph exit: union-find on the driver over a cached,
-    * symmetrized edge set that fits the [[DriverBudget]]. Each partition
-    * ships its `src < dst` half (the mirrored half adds no union; a self
-    * loop adds none either) as one primitive long array. The endpoints
-    * are sorted and deduplicated, so a vertex is its index, and the
-    * union-find runs over `Int` arrays; the smaller root always wins, so
-    * every root is its component's minimum index, i.e. its minimum id.
-    * Returns (id, comp) for the endpoints as a fresh leaf: an RDD-backed
-    * relation with no lineage into the edge derivation or `sym`.
+  /** The one job of the small-graph exit: over the cached, symmetrized
+    * edge set, each partition returns its row count and its `src < dst`
+    * half (the mirrored half adds no union; a self loop adds none either)
+    * as one primitive long array, src0, dst0, src1, dst1, …. The driver
+    * sums the counts as partitions finish and drops every array once the
+    * total passes `budget` edges (a partition over it ships none), so at
+    * most about the budget is ever held. Returns the concatenated halves
+    * when the whole set fits, else None, with `sym` cached either way.
     */
-  private def driverComponents(sym: DataFrame): DataFrame = {
-    val spark = sym.sparkSession
-    // a fresh plan over sym, so it is planned against the cache
-    val halves = sym.select(col("src"), col("dst")).queryExecution.toRdd
-      .mapPartitions { rows =>
-        val b = new scala.collection.mutable.ArrayBuilder.ofLong
-        rows.foreach { r =>
-          val (s, d) = (r.getLong(0), r.getLong(1))
-          if (s < d) { b += s; b += d }
-        }
-        Iterator.single(b.result())
-      }.collect()
-    val ends = Array.concat(halves.toIndexedSeq: _*) // src0, dst0, src1, dst1, …
-    val ids = ends.clone()
+  private def driverEdges(sym: DataFrame, budget: Long): Option[Array[Long]] = {
+    val half = (rows: Iterator[InternalRow]) => {
+      val b = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0L
+      rows.foreach { r =>
+        n += 1
+        val (s, d) = (r.getLong(0), r.getLong(1))
+        if (n <= budget && s < d) { b += s; b += d }
+      }
+      (n, if (n <= budget) b.result() else null)
+    }
+    // a fresh plan over sym, so it is planned against the cache; run as
+    // a SQL execution, as a Dataset action is, so the cached plan compiles
+    // under the session's class loader and a repeat reuses its classes
+    val qe = sym.select(col("src"), col("dst")).queryExecution
+    var total = 0L
+    val halves = SQLExecution.withNewExecutionId(qe, Some("connected components: driver edges")) {
+      val rdd = qe.toRdd
+      val got = new Array[Array[Long]](rdd.getNumPartitions)
+      sym.sparkSession.sparkContext.runJob(rdd, half, (i: Int, part: (Long, Array[Long])) => {
+        total += part._1
+        if (total <= budget) got(i) = part._2
+        else java.util.Arrays.fill(got.asInstanceOf[Array[AnyRef]], null)
+      })
+      got
+    }
+    if (total <= budget) Some(Array.concat(halves.toIndexedSeq: _*)) else None
+  }
+
+  /** The small-graph exit: union-find on the driver over the edge halves
+    * of [[driverEdges]]. The endpoints are sorted and deduplicated, so a
+    * vertex is its index, and the union-find runs over `Int` arrays; the
+    * smaller root always wins, so every root is its component's minimum
+    * index, i.e. its minimum id. Returns (id, comp) for the endpoints as a
+    * fresh leaf: an RDD-backed relation with no lineage into the edge
+    * derivation or `sym`.
+    */
+  private def driverComponents(spark: SparkSession, ends: Array[Long]): DataFrame = {
+    val ids = ends.clone() // src0, dst0, src1, dst1, …
     java.util.Arrays.sort(ids)
     var n = 0
     ids.indices.foreach { i =>

@@ -9,7 +9,8 @@ import org.apache.spark.sql.SparkSession
   * hold whole on one node" setting, so there is no separate knob: a
   * session that disables broadcasts (a value ≤ 0) disables every
   * driver-side exit too. Consumers: the small-graph exit of
-  * [[Dedup.connectedComponentsWithRounds]].
+  * [[Dedup.connectedComponentsWithRounds]] and the broadcast path of
+  * [[Skew.saltedJoin]].
   */
 object DriverBudget {
 

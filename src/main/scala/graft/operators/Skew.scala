@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   *    (count/sum/min/max, and avg as sum+count) composes this way.
   *  - [[saltedJoin]]: replicate the small side once per salt value and
   *    join on (key, salt) — the hot key's probe rows spread over `salts`
-  *    tasks instead of one.
+  *    tasks instead of one. Salting applies only to a shuffled join: a
+  *    dim that fits the [[DriverBudget]] is broadcast unsalted, since a
+  *    broadcast join has no hot reducer.
   *
   * AQE's skew-join splitting handles moderate skew automatically; explicit
   * salting is for the pathological keys AQE cannot split (single-key
@@ -44,7 +46,13 @@ object Skew {
 
   /** Salted equi-join: fact rows get a deterministic salt; the (small)
     * build side is replicated across all salt values via explode, then the
-    * join key becomes (key, salt).
+    * join key becomes (key, salt). Salting pays only when the join
+    * shuffles: a dim whose optimized-plan size fits the
+    * [[DriverBudget]] is broadcast unreplicated on the single key
+    * instead, since a broadcast join has no hot reducer to spread and the
+    * replica would only multiply the build side (and turn a one-long key,
+    * which Spark packs into a long-keyed hash map, into a two-column one).
+    * Either way the result is the fact columns, then the dim columns.
     */
   def saltedJoin(
       fact: DataFrame,
@@ -54,12 +62,18 @@ object Skew {
       saltSource: Column,
       salts: Int
   ): DataFrame = {
-    val saltedFact = fact.withColumn("__salt", saltOf(saltSource, salts))
-    val replicatedDim = dim
-      .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
-      .withColumn("__salt", col("__salt").cast("int"))
-    saltedFact.join(replicatedDim,
-      saltedFact(factKey) === replicatedDim(dimKey) &&
-        saltedFact("__salt") === replicatedDim("__salt"))
+    val budget = DriverBudget.bytes(fact.sparkSession)
+    if (budget > 0 && dim.queryExecution.optimizedPlan.stats.sizeInBytes <= budget)
+      fact.join(broadcast(dim), fact(factKey) === dim(dimKey))
+    else {
+      val saltedFact = fact.withColumn("__salt", saltOf(saltSource, salts))
+      val replicatedDim = dim
+        .withColumn("__salt", explode(sequence(lit(0), lit(salts - 1))))
+        .withColumn("__salt", col("__salt").cast("int"))
+      saltedFact.join(replicatedDim,
+        saltedFact(factKey) === replicatedDim(dimKey) &&
+          saltedFact("__salt") === replicatedDim("__salt"))
+        .drop("__salt")
+    }
   }
 }

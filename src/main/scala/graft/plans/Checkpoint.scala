@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Per-partition checkpoint ledger — the engine's resume substrate.
@@ -63,6 +63,7 @@ object Checkpoint {
 
   private def ledgerDir(root: String, stage: String) = s"$root/$stage/_ledger"
   private def dataPath(root: String, stage: String) = s"$root/$stage/data"
+  private def schemaPath(root: String, stage: String) = s"$root/$stage/_schema.json"
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -260,7 +261,17 @@ object Checkpoint {
     val todo = all.filterNot(done)
     val out = dataPath(root, stage)
 
-    val output = if (todo.isEmpty) spark.read.parquet(out) else {
+    val schemaFile = schemaPath(root, stage)
+    val output = if (todo.isEmpty) {
+      // full resume: the transform never runs. The schema file the last
+      // write left makes a stage whose buckets all hold 0 rows (no data
+      // file to infer from) read back too; a root written before the
+      // file existed keeps the plain read
+      val f = fs(spark, schemaFile)
+      if (!f.exists(new Path(schemaFile))) spark.read.parquet(out)
+      else spark.read.schema(DataType.fromJson(readSmall(f, new Path(schemaFile)).trim)
+        .asInstanceOf[StructType]).parquet(out)
+    } else {
       val bucket = bucketOf(col(keyCol), nBuckets)
       // resume filter FIRST (prune completed buckets before any work),
       // then the stage transform, then per-bucket dynamic overwrite
@@ -299,6 +310,13 @@ object Checkpoint {
         .partitionBy("p_bucket")
         .parquet(out)
 
+      // read back with the write job's schema, laid out as a partitioned
+      // read lays it out (data columns, then p_bucket): no inference job,
+      // and all-empty pending buckets leave no data file to infer from
+      val (parts, data) = transformed.schema.partition(_.name == "p_bucket")
+      val schema = StructType(data ++ parts)
+      createSmall(spark, schemaFile, schema.json)
+
       val stats = perBucket()
       val now = System.currentTimeMillis()
       // ledger commit AFTER the data commit: a crash between the two
@@ -311,11 +329,7 @@ object Checkpoint {
         val (rows, wall) = stats.getOrElse(b, (0L, 0L))
         commitEntry(spark, root, stage, BucketEntry(stage, b, rows, wall, now))
       }
-      // read back with the write job's schema, laid out as a partitioned
-      // read lays it out (data columns, then p_bucket): no inference job,
-      // and all-empty pending buckets leave no data file to infer from
-      val (parts, data) = transformed.schema.partition(_.name == "p_bucket")
-      spark.read.schema(StructType(data ++ parts)).parquet(out)
+      spark.read.schema(schema).parquet(out)
     }
 
     StageResult(

@@ -167,6 +167,22 @@ class CheckpointSpec extends AnyFunSuite {
     rmTree(Paths.get(root))
   }
 
+  test("a stage committed with zero rows in every bucket resumes without its transform") {
+    val root = tmpRoot()
+    val empty = input().filter(col("v") < -1)
+    var calls = 0
+    def run() = Checkpoint.runStage(spark, "s", root, empty, "url", 4) { df => calls += 1; df }
+    val first = run()
+    assert(first.output.count() == 0L && calls == 1)
+    // no data file exists to infer a schema from; the full resume reads
+    // the pinned one and never calls the transform
+    val again = run()
+    assert(again.processedBuckets.isEmpty && again.skippedBuckets.size == 4)
+    assert(again.output.count() == 0L && calls == 1, s"transform ran $calls times")
+    assert(again.output.schema == first.output.schema)
+    rmTree(Paths.get(root))
+  }
+
   test("attempt reduction keeps only the last successful attempt of each partition") {
     import Checkpoint.TaskCount
     // partition 0 succeeded twice (a retry, or a speculative copy that

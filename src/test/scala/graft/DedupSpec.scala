@@ -284,6 +284,19 @@ class DedupSpec extends AnyFunSuite {
     assert(labelsOf(overBudget) == want)
   }
 
+  test("connected components: the small-graph exit runs one job over the edge set") {
+    import spark.implicits._
+    val (n, pairs) = chainGraph
+    val verts = (0L until n.toLong).toDF("id")
+    val edges = pairs.map { case (a, b) => (math.min(a, b), math.max(a, b)) }.toDF("src", "dst")
+    // the count, the budget test and the collect are one job: each
+    // partition returns its count and its src < dst half
+    val ((labels, rounds), jobs) = SparkTestSession.jobsDuring(
+      Dedup.connectedComponentsWithRounds(verts, edges, edgesDistinct = true))
+    assert(rounds == 0 && jobs == 1, s"driver path ran $jobs jobs, $rounds rounds")
+    assert(labelsOf(labels) == expectedComponents(n, pairs))
+  }
+
   test("connected components: an empty edge set labels every vertex alone") {
     import spark.implicits._
     val verts = (0L until 5L).toDF("id")

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Edist
-import graft.functions.{BoundedLevenshtein, CharShingles, Lev, Metrics, RepetitionStats}
+import graft.functions.{BoundedLevenshtein, CharShingles, Fingerprint2, Lev, Metrics, RepetitionStats, WindowHashes}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Literal
@@ -312,6 +312,79 @@ class FunctionsSpec extends AnyFunSuite {
     assert(rows.exists(r => r.getStruct(2) != null && r.getStruct(2).getBoolean(5)))
   }
 
+  test("graft_fingerprint2 equals the two HOF md5 lanes it replaced") {
+    graft.functions.SqlFunctions.register(spark)
+    // the lane spelling the kernel replaced, kept here verbatim
+    def lane(from: Int, p: String) = expr(
+      s"""aggregate(
+         |  transform(split(text, ' '),
+         |    t -> cast(conv(substring(md5(to_binary(t, 'utf-8')), $from, 12), 16, 10) as bigint)),
+         |  cast(0 as bigint), (a, x) -> pmod(a + x, ${p}L))""".stripMargin)
+    val texts = kernelFuzz(31, 400) ++ Seq("a a a a a a a a", "  ", "x" * 23)
+    val rows = textFrame(texts).select(col("text"),
+      struct(lane(1, "2305843009213693951"), lane(13, "1152921504606846883")).as("hof"),
+      expr("graft_fingerprint2(text)").as("k")).collect()
+    rows.foreach { r =>
+      val text = r.getString(0)
+      val want = if (text == null) None else Some(r.getStruct(1).toSeq)
+      assert(Option(r.getStruct(2)).map(_.toSeq) == want, s"text='$text'")
+      val interpreted = Option(Fingerprint2(Literal(text)).eval(null).asInstanceOf[InternalRow])
+        .map(i => Seq(i.getLong(0), i.getLong(1)))
+      assert(interpreted == want, s"interpreted text='$text'")
+    }
+    assert(rows.count(_.getString(0) == null) == 1)
+  }
+
+  test("graft_window_hashes lists the distinct shingles with their hash and position") {
+    graft.functions.SqlFunctions.register(spark)
+    val texts = kernelFuzz(37, 300) ++
+      Seq("ab" * 40, "abc " * 30, "\uD83D\uDE00" * 30, "é" * 25, "short", "x" * 24)
+    val df = textFrame(texts)
+    for ((len, stride) <- Seq((24, 1), (3, 1), (5, 7))) {
+      val rows = df.select(col("text"),
+        expr(s"array_distinct(graft_shingles(text, $len, $stride))").as("want"),
+        expr(s"graft_window_hashes(text, $len, $stride)").as("k"),
+        expr(s"transform(graft_window_hashes(text, $len, $stride), " +
+          s"w -> named_struct('sh', substring(text, w.pos, $len), " +
+          s"'h', xxhash64(substring(text, w.pos, $len))))").as("at"),
+        expr(s"size(graft_shingles(text, $len, $stride))").as("n")).collect()
+      rows.foreach { r =>
+        val text = r.getString(0)
+        if (text == null) assert(r.isNullAt(2) && r.isNullAt(3), "a null text gives null")
+        else {
+          val want = r.getSeq[String](1)
+          val k = r.getSeq[Row](2)
+          // each pos points at its window, and h is that window's xxhash64
+          val at = r.getSeq[Row](3)
+          assert(at.map(_.getString(0)) == want, s"L=$len S=$stride text='$text'")
+          assert(k.map(_.getLong(0)) == at.map(_.getLong(1)), s"hash L=$len text='$text'")
+          assert(k.map(_.getInt(1)).forall(p => (p - 1) % stride == 0))
+          val interpreted = WindowHashes(Literal(text), len, stride).eval(null).asInstanceOf[ArrayData]
+          assert((0 until interpreted.numElements()).map { i =>
+            val w = interpreted.getStruct(i, 2)
+            (w.getLong(0), w.getInt(1))
+          } == k.map(w => (w.getLong(0), w.getInt(1))), s"interpreted L=$len text='$text'")
+        }
+      }
+      // the fuzz must reach texts whose shingles repeat
+      assert(rows.exists(r => !r.isNullAt(2) && r.getSeq[Row](2).size < r.getInt(4)))
+    }
+  }
+
+  test("the decontamination probe keeps only true matches when two windows share a hash") {
+    import spark.implicits._
+    val w = "abcdefghijklmnopqrstuvwx" // 24 chars: a whole window at pos 1
+    val other = "ABCDEFGHIJKLMNOPQRSTUVWX"
+    // hand-built windows: train doc 1 holds w, train doc 2 holds `other`
+    // under w's hash (a collision), train doc 3 holds w under its own hash
+    val train = Seq((1L, w, 7L, 1), (2L, other, 7L, 1), (3L, "xx" + w, 9L, 3))
+      .toDF("doc_id", "text", "h", "pos")
+    val test = Seq((10L, w, 7L, 1), (11L, "-" + w, 9L, 2))
+      .toDF("doc_id", "text", "h", "pos")
+    val hits = SparkEntry.windowProbe(train, test).as[(String, Long)].collect().toSet
+    assert(hits == Set((w, 1L), (w, 3L)), s"$hits")
+  }
+
   test("CER aggregator matches the reference formula") {
     import spark.implicits._
     val ds = Seq(("abc", "abd"), ("hello", "hello"), ("xy", "xyz")).toDS()
@@ -378,8 +451,9 @@ class ExtensionsSpec extends AnyFunSuite {
       }
     }
     new graft.plans.GraftExtensions()(ext) // must register without throwing
-    assert(injected.sorted == Seq("graft_cosine", "graft_hashtf", "graft_lev_bounded",
-      "graft_minhash8", "graft_repetition_stats", "graft_shingles", "graft_sqdist"))
+    assert(injected.sorted == Seq("graft_cosine", "graft_fingerprint2", "graft_hashtf",
+      "graft_lev_bounded", "graft_minhash8", "graft_repetition_stats", "graft_shingles",
+      "graft_sqdist", "graft_window_hashes"))
     // the banded kernel agrees with full levenshtein below the bound and
     // caps at bound+1 above it
     assert(graft.functions.Lev.bounded("kitten", "sitting", 3) == 3)

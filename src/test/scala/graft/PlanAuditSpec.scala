@@ -284,10 +284,15 @@ class PlanAuditSpec extends AnyFunSuite {
   test("repetition and shingle stages are kernels; q62's pushed quality gate is one kernel call") {
     // graft_repetition_stats and graft_shingles replaced the HOF folds and
     // the transform(sequence, substring) shingles: no lambda may remain
-    for (name <- Seq("q55_repetition_filter", "q62_curation_pipeline", "q73_gate_funnel")) {
+    for (name <- Seq("q55_repetition_filter", "q62_curation_pipeline", "q73_gate_funnel",
+        "q15_dedup_exact", "q51_corpus_prep")) {
       val opt = SparkEntry.queries(name)(spark, sf).queryExecution.optimizedPlan.toString
       assert(!opt.toLowerCase.contains("lambdafunction"), s"[$name] HOF left:\n$opt")
     }
+    // q51's entry returns collected rows; its fingerprint runs in the lazy chain
+    val prep = SparkEntry.corpusPrepPipeline(spark, sf, persistEx = false)._2
+      .queryExecution.optimizedPlan.toString
+    assert(!prep.toLowerCase.contains("lambdafunction"), s"[q51 chain] HOF left:\n$prep")
     // the keep filter is pushed below tp()'s round-robin repartition onto
     // the scan; FilterExec eliminates no common subexpression, so the
     // pushed condition must be the ONE kernel call reading its keep field

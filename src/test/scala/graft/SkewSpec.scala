@@ -1,7 +1,10 @@
 package graft
 
 import graft.operators.Skew
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,13 +40,54 @@ class SkewSpec extends AnyFunSuite {
     val fact = skewed().withColumnRenamed("key", "fk")
     val dim = Seq(("hot", 100), ("k0", 0), ("k1", 1), ("k2", 2), ("k3", 3),
       ("k4", 4), ("k5", 5), ("k6", 6)).toDF("dk", "dv")
-    val salted = Skew.saltedJoin(fact, dim, "fk", "dk", col("v"), 8)
-      .groupBy(col("dk")).agg(count(lit(1)).as("cnt"), sum(col("dv")).as("s"))
-      .orderBy(col("dk")).collect().map(_.toString)
     val plain = fact.join(dim, fact("fk") === dim("dk"))
       .groupBy(col("dk")).agg(count(lit(1)).as("cnt"), sum(col("dv")).as("s"))
       .orderBy(col("dk")).collect().map(_.toString)
-    assert(salted.toSeq == plain.toSeq)
+    // the default budget broadcasts the dim; -1 takes the salted path
+    for (budget <- Seq(spark.conf.get(Threshold), "-1")) withThreshold(budget) {
+      val salted = Skew.saltedJoin(fact, dim, "fk", "dk", col("v"), 8)
+        .groupBy(col("dk")).agg(count(lit(1)).as("cnt"), sum(col("dv")).as("s"))
+        .orderBy(col("dk")).collect().map(_.toString)
+      assert(salted.toSeq == plain.toSeq, s"budget $budget")
+    }
+  }
+
+  test("saltedJoin broadcasts a dim that fits the budget and salts one that does not") {
+    import spark.implicits._
+    val fact = skewed().withColumnRenamed("key", "fk")
+    val dim = Seq(("hot", 100), ("k0", 0)).toDF("dk", "dv")
+    // the default budget: one broadcast join on the single key, dim unreplicated
+    val small = Skew.saltedJoin(fact, dim, "fk", "dk", col("v"), 8)
+    val executed = finalPlan(small)
+    assert(executed.collect { case g: GenerateExec => g }.isEmpty, s"dim replicated:\n$executed")
+    val bhj = executed.collect { case j: BroadcastHashJoinExec => j }
+    assert(bhj.size == 1 && bhj.head.leftKeys.size == 1, s"not one single-key BHJ:\n$executed")
+    // a session that disables broadcasts replicates the dim per salt
+    val salted = withThreshold("-1") {
+      val df = Skew.saltedJoin(fact, dim, "fk", "dk", col("v"), 8)
+      assert(finalPlan(df).collect { case g: GenerateExec => g }.nonEmpty, "salted path not taken")
+      df
+    }
+    assert(small.columns.toSeq == Seq("fk", "v", "dk", "dv"))
+    assert(salted.columns.toSeq == small.columns.toSeq)
+  }
+
+  private val Threshold = "spark.sql.autoBroadcastJoinThreshold"
+
+  private def withThreshold[T](v: String)(body: => T): T = {
+    val old = spark.conf.get(Threshold)
+    spark.conf.set(Threshold, v)
+    try body finally spark.conf.set(Threshold, old)
+  }
+
+  /** The executed plan after a run, AQE stages unwrapped. */
+  private def finalPlan(df: DataFrame): SparkPlan = {
+    df.collect()
+    def unwrap(p: SparkPlan): SparkPlan = p.transform {
+      case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
+      case q: QueryStageExec => unwrap(q.plan)
+    }
+    unwrap(df.queryExecution.executedPlan)
   }
 
   test("salt spreads the hot key across buckets") {

@@ -3,6 +3,8 @@ package graft
 import graft.core._
 import graft.fixtures.PagesGen
 import graft.pipeline.Pipeline
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -12,6 +14,34 @@ import org.scalatest.BeforeAndAfterAll
   */
 object SparkTestSession {
   lazy val spark: SparkSession = SparkBoot.session("4")
+
+  /** Spark jobs started while `f` runs on this thread. A fence job in the
+    * same job group follows `f`; the listener bus delivers in order, so
+    * once the fence arrives every job `f` started has arrived too.
+    */
+  def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime}"
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => started.put(p.getProperty("spark.job.description", "")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body")
+      val out = f
+      sc.setJobGroup(group, "fence")
+      spark.range(1).count()
+      val body = Iterator.continually(started.poll(30, TimeUnit.SECONDS))
+        .takeWhile(d => d != null && d != "fence").size
+      (out, body)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** End-to-end pipeline tests — the Spark restatement of the reference's

@@ -2,9 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.nio.file.attribute.FileTime
-import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,34 +24,6 @@ class TableStatsSpec extends AnyFunSuite {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     Files.setLastModifiedTime(Paths.get(s"$dir/documents.parquet"),
       FileTime.fromMillis(mtimeMs))
-  }
-
-  /** Spark jobs started while `f` runs on this thread. A fence job in the
-    * same job group follows `f`; the listener bus delivers in order, so
-    * once the fence arrives every job `f` started has arrived too.
-    */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"tablestats-${System.nanoTime}"
-    val started = new LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
-          .foreach(p => started.put(p.getProperty("spark.job.description", "")))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "body")
-      val out = f
-      sc.setJobGroup(group, "fence")
-      spark.range(1).count()
-      val body = Iterator.continually(started.poll(30, TimeUnit.SECONDS))
-        .takeWhile(d => d != null && d != "fence").size
-      (out, body)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   private def repartitioned(dir: String, name: String): Boolean =
@@ -98,10 +68,10 @@ class TableStatsSpec extends AnyFunSuite {
   test("a memo hit builds the scan with no Spark job") {
     val dir = Files.createTempDirectory("graft-tablestats-schema").toString
     writeDocs(dir, 10, 1000000L)
-    val (_, inferJobs) = jobsDuring(SparkEntry.t(spark, dir, "documents"))
+    val (_, inferJobs) = SparkTestSession.jobsDuring(SparkEntry.t(spark, dir, "documents"))
     assert(inferJobs >= 1, "the first read infers the schema with a job")
     assert(SparkEntry.tableStats((dir, "documents")).schema.isDefined)
-    val (df, hitJobs) = jobsDuring(SparkEntry.t(spark, dir, "documents"))
+    val (df, hitJobs) = SparkTestSession.jobsDuring(SparkEntry.t(spark, dir, "documents"))
     assert(hitJobs == 0, s"a memoized read started $hitJobs jobs")
     assert(df.columns.toSeq == Seq("doc_id", "text") && df.count() == 10)
   }
